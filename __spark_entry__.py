@@ -327,8 +327,12 @@ def _jvm_spread(spark, df):
     one task; a 16-way round-robin costs one small shuffle and lets the
     codegen stages use the executor cores (measured on sf0.1: simhash_md5
     10.0 s -> 1.6 s at 16 parts; 32/64 parts were no better/worse).
-    Values are unchanged — the driver hash is order-insensitive."""
-    return df.repartition(min(16, spark.sparkContext.defaultParallelism))
+    Values are unchanged — the driver hash is order-insensitive.  An input
+    that already has enough partitions is left as it is (never shrunk)."""
+    n = min(16, spark.sparkContext.defaultParallelism)
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n)
 
 
 def _q_minhash_md5(spark, sf_dir):

@@ -1,0 +1,159 @@
+"""Worker bootstrap: PySpark's per-task importlib.invalidate_caches() must
+not re-read an unchanged pyspark.zip directory, and a rewritten zip must
+still be re-read."""
+
+from __future__ import annotations
+
+import importlib
+import json
+import os
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+from zebra_spark import worker_boot
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in modules:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def test_zip_index_cache_skips_unchanged_and_rereads_rewritten(tmp_path, monkeypatch):
+    # outside a Spark task the package leaves the stock method in place
+    assert not worker_boot.in_pyspark_worker()
+    assert zipimport.zipimporter.invalidate_caches is worker_boot._stock_invalidate
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", worker_boot._stock_invalidate
+    )
+    monkeypatch.setattr(worker_boot, "_stamps", {})
+    archive = str(tmp_path / "mods.zip")
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(path):
+        if path == archive:
+            reads.append(path)
+        return real(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    worker_boot.install_zip_index_cache()
+
+    _write_zip(archive, ["zs_boot_m1"])
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zs_boot_m1").NAME == "zs_boot_m1"
+        reads.clear()
+        for _ in range(10):
+            importlib.invalidate_caches()
+        assert len(reads) <= 1
+
+        # installing again changes nothing and reads nothing
+        worker_boot.install_zip_index_cache()
+        assert zipimport.zipimporter.invalidate_caches is worker_boot._invalidate_caches
+        importlib.invalidate_caches()
+        assert len(reads) <= 1
+
+        # same path, new contents: the directory is re-read
+        _write_zip(archive, ["zs_boot_m1", "zs_boot_m2"])
+        importlib.invalidate_caches()
+        assert importlib.import_module("zs_boot_m2").NAME == "zs_boot_m2"
+    finally:
+        for name in ("zs_boot_m1", "zs_boot_m2"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+_ONE_CORE_SCRIPT = r"""
+import json, os, zipimport
+import pyarrow as pa
+from zebra_spark import worker_boot
+from zebra_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+spark.sparkContext.setLogLevel("ERROR")
+
+def task(batches):
+    import zipimport
+    if not hasattr(zipimport, "_zs_reads"):
+        real = zipimport._read_directory
+        zipimport._zs_reads = [0]
+        def counting(path):
+            zipimport._zs_reads[0] += 1
+            return real(path)
+        zipimport._read_directory = counting
+    from zebra_spark.codec.codecs import decode_ints, encode_ints
+    for rb in batches:
+        vals = rb.column("id").to_numpy()
+        codec, payload, _ = encode_ints(vals)
+        assert (decode_ints(codec, payload, len(vals))[0] == vals).all()
+    yield pa.RecordBatch.from_pydict(
+        {"pid": [os.getpid()], "reads": [zipimport._zs_reads[0]]}
+    )
+
+rows = [
+    spark.range(64, numPartitions=1)
+    .mapInArrow(task, "pid long, reads long")
+    .collect()[0]
+    for _ in range(8)
+]
+print(json.dumps({
+    "pids": sorted({r.pid for r in rows}),
+    "reads": [r.reads for r in rows],
+    "driver_stock": zipimport.zipimporter.invalidate_caches
+    is worker_boot._stock_invalidate,
+}))
+spark.stop()
+"""
+
+
+def test_one_core_worker_stops_rereading_after_first_task():
+    """8 sequential engine tasks on a 1-core session run in one reused
+    worker; its zip directory re-read count must not grow after task 1
+    (stock PySpark re-reads ~16 directories every task)."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    ))
+    out = subprocess.run(
+        [sys.executable, "-c", _ONE_CORE_SCRIPT],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(res["pids"]) == 1, res
+    assert res["reads"] == [res["reads"][0]] * 8, res
+    assert res["driver_stock"], res
+
+
+def test_decode_df_single_schema_runs_one_metadata_query(spark, tmp_path):
+    """resolve_schemas=True on a single-schema table takes the schema from
+    the schema map: decode_df starts exactly the jobs of schema_map_of
+    (adaptive execution runs its shuffle map stage as a job of its own),
+    and no second head() job for the schema."""
+    from zebra_spark.operators.decode import decode_df, schema_map_of
+    from zebra_spark.operators.encode import encode_df
+    from zebra_spark.sources.synth import f1_table
+
+    path = str(tmp_path / "blocks.parquet")
+    df = f1_table(spark, 1000, partitions=2, rows_per_batch=512)
+    encode_df(df, rows_per_block=256).write.parquet(path)
+    blocks = spark.read.parquet(path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("zs-schema-map", "schema map alone")
+        assert len(schema_map_of(blocks)) == 1
+        sc.setJobGroup("zs-decode-meta", "decode_df metadata")
+        dec = decode_df(blocks, resolve_schemas=True)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    map_jobs = tracker.getJobIdsForGroup("zs-schema-map")
+    decode_jobs = tracker.getJobIdsForGroup("zs-decode-meta")
+    assert map_jobs and len(decode_jobs) == len(map_jobs)
+    assert dec.schema == df.schema
+    assert dec.count() == df.count()

@@ -1,0 +1,6 @@
+from .worker_boot import in_pyspark_worker, install_zip_index_cache
+
+# Every engine UDF imports this package when its task's function is
+# unpickled, so the first engine task of a worker process installs it.
+if in_pyspark_worker():
+    install_zip_index_cache()

@@ -1,14 +1,19 @@
-"""One-time per-process codec warmup.
+"""One-time per-process codec warmup (numpy SIMD loops only).
 
-This sandbox (and some JIT/binary-translation environments) compiles each
-numpy SIMD inner loop on its first *large-array* execution — a one-off
-multi-second cost per process that would otherwise land inside the first
-encoded block of every Spark python worker.  Warming explicitly makes the
-cost deterministic and keeps steady-state throughput measurements clean
+Some JIT/binary-translation environments compile each numpy SIMD inner
+loop on its first *large-array* execution — a one-off multi-second cost
+per process that would otherwise land inside the first encoded block of
+every Spark python worker.  Warming explicitly makes the cost
+deterministic and keeps steady-state throughput measurements clean
 (BASELINE.md protocol excludes one warm-up run).
 
 Tiny arrays do NOT warm the SIMD paths (numpy falls back to scalar loops
 below a size threshold), so the warmup uses ~200k-element arrays.
+
+The fixed per-task cost of a Python worker is a separate matter, handled
+once per worker process when the package is imported
+(``zebra_spark/worker_boot.py``), on every engine UDF path including the
+``functions/`` ones that never call ``warm_codec``.
 """
 
 from __future__ import annotations

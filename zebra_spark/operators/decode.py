@@ -183,8 +183,9 @@ def decode_df(
 ) -> DataFrame:
     """Decode a blocks DataFrame back to the original rows.
 
-    ``schema``: pyspark StructType or pyarrow Schema; fetched from the
-    first block when omitted (one tiny driver-side lookup).
+    ``schema``: pyspark StructType or pyarrow Schema.  When omitted it is
+    the schema map's only schema if ``resolve_schemas`` finds exactly one,
+    else fetched from the first block (one tiny driver-side lookup).
 
     ``resolve_schemas``: schema BYTES ship once per (encode task, schema)
     and every block row carries ``schema_id``.  In a narrow encode->decode
@@ -220,8 +221,13 @@ def decode_df(
     """
     if key_range is not None or key_equals is not None:
         resolve_schemas = True
+    smap = schema_map_of(blocks) if resolve_schemas else None
     if schema is None:
-        schema = arrow_schema_of(blocks)
+        if smap is not None and len(smap) == 1:
+            # the schema map already holds the only schema: no second job
+            schema = pa.ipc.read_schema(pa.py_buffer(next(iter(smap.values()))))
+        else:
+            schema = arrow_schema_of(blocks)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     if columns is not None:
@@ -233,7 +239,6 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
-    smap = schema_map_of(blocks) if resolve_schemas else None
     if key_range is not None:
         # filter AFTER the schema map is built from the unfiltered blocks
         blocks = zone_map_filter(blocks, key_range)

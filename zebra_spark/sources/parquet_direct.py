@@ -57,10 +57,11 @@ def encode_parquet_direct(
     # of pure scheduling against 1.8 s of compute.  The default 4x
     # parallelism keeps elastic balance against variable split sizes; on a
     # large cluster splits >> 4*cores and every core still gets a steady
-    # queue.  For short benchmark legs over UNIFORM splits, pass 1: local
-    # mode pays a measured ~60 ms of SERIALIZED per-task python-worker
-    # handshake (16 null tasks = 0.93 s, 4 = 0.27 s), which otherwise
-    # dominates a ~2 s leg.
+    # queue.  For short benchmark legs over UNIFORM splits, pass 1: every
+    # python task has a fixed worker cost, measured at 0.03 CPU-s for a
+    # one-row no-op mapInArrow on local[1] (0.22 CPU-s before the worker
+    # bootstrap in zebra_spark/worker_boot.py), which on a ~2 s leg is
+    # still worth not multiplying.
     n_tasks = max(
         1,
         min(len(splits), tasks_per_core * spark.sparkContext.defaultParallelism),

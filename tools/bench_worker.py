@@ -44,9 +44,11 @@ def main() -> None:
         t0 = time.perf_counter()
         # encode_metrics_direct folds block metrics python-side (the
         # production-sink shape — payloads never cross the Arrow socket),
-        # with tasks_per_core=1: the fixed per-task python worker cost
-        # (0.03 CPU-s) and ~1 s of JVM payload ingest would otherwise eat
-        # into a ~2.3 s hi leg (see the function's docstring)
+        # with tasks_per_core=1: each task gets an equal contiguous run of
+        # the uniform splits (session.map_items), and the fixed per-task
+        # python worker cost (0.03 CPU-s) and ~1 s of JVM payload ingest
+        # would otherwise eat into a ~2.3 s hi leg (see the function's
+        # docstring)
         row = (
             encode_metrics_direct(spark, path)
             .groupBy()

@@ -48,6 +48,7 @@ from ..codec.bytecodec import (
     unpack_sized_byte_array,
 )
 from ..codec.intcodec import pack_int_array, unpack_int_array
+from ..session import map_items
 from .zschema import ENUM_META, enum_layout, struct_to_zschema, zschema_to_struct
 
 MAGIC_V3 = b"||ZEBRA||00003||"
@@ -698,15 +699,11 @@ def read_zebra_files(
         _validate_key_range(
             first_schema, _table_kind_of(first_schema), key_range
         )
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
-    )
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            for p in rb.column("path").to_pylist():
-                with open(p, "rb") as f:
-                    _, blocks, _ = open_zebra_stream(f, chunk_bytes, key_range)
-                    yield from blocks
+    def run(task_paths: Iterator[str]) -> Iterator[pa.RecordBatch]:
+        for p in task_paths:
+            with open(p, "rb") as f:
+                _, blocks, _ = open_zebra_stream(f, chunk_bytes, key_range)
+                yield from blocks
 
-    return pdf.mapInArrow(run, schema=first_schema)
+    return map_items(spark, paths, run, first_schema)

@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 
 from ..codec.bytecodec import unpack_sized_byte_array, unpack_strings
 from ..codec.intcodec import unpack_int_array
+from ..session import map_items
 
 MAGIC_V2 = b"||ZEBRA||00002||"
 
@@ -528,10 +529,10 @@ def read_zebra_v2_files(
     factset_id) so `zs upgrade` can re-encode to V3 losslessly.
 
     ``with_ordinal=True`` appends a ``__file`` column carrying each row's
-    path index (position in ``paths``): partition layout after the
-    round-robin repartition does NOT follow path order, so consumers that
-    need stable first-seen tie order across files (merge_map_form) sort on
-    this explicit ordinal instead of trusting partition ids."""
+    path index (position in ``paths``): partition ids are a scheduling
+    detail, not a contract, so consumers that need stable first-seen tie
+    order across files (merge_map_form) sort on this explicit ordinal
+    instead of trusting partition ids."""
     names, nodes = read_v2_header(paths[0])
     spark_schema = spark_schema_v2(names, nodes)
     if with_ordinal:
@@ -539,33 +540,28 @@ def read_zebra_v2_files(
             spark_schema.fields + [T.StructField("__file", T.LongType(), False)]
         )
     expected = _arrow_schema(names, nodes)
-    pdf = spark.createDataFrame(
-        list(enumerate(paths)), "idx long, path string"
-    ).repartition(max(1, len(paths)))
 
-    def run(batches):
-        for rb in batches:
-            idxs = rb.column("idx").to_pylist()
-            for i, p in zip(idxs, rb.column("path").to_pylist()):
-                with open(p, "rb") as f:
-                    got, blocks, _ = open_zebra_v2_stream(f, chunk_bytes)
-                    # batches bind to the declared schema POSITIONALLY, so
-                    # a file with reordered/different attributes must fail
-                    # loudly, not land values in the wrong columns
-                    if not got.equals(expected):
-                        raise ValueError(
-                            f"V2 header mismatch in {p}: attributes "
-                            f"{got.names} vs expected {expected.names} "
-                            "(all files of one read must share the header)"
+    def run(task_paths):
+        for i, p in task_paths:
+            with open(p, "rb") as f:
+                got, blocks, _ = open_zebra_v2_stream(f, chunk_bytes)
+                # batches bind to the declared schema POSITIONALLY, so a
+                # file with reordered/different attributes must fail
+                # loudly, not land values in the wrong columns
+                if not got.equals(expected):
+                    raise ValueError(
+                        f"V2 header mismatch in {p}: attributes "
+                        f"{got.names} vs expected {expected.names} "
+                        "(all files of one read must share the header)"
+                    )
+                for b in blocks:
+                    if with_ordinal:
+                        b = b.append_column(
+                            "__file", pa.array([i] * b.num_rows, pa.int64())
                         )
-                    for b in blocks:
-                        if with_ordinal:
-                            b = b.append_column(
-                                "__file", pa.array([i] * b.num_rows, pa.int64())
-                            )
-                        yield b
+                    yield b
 
-    return pdf.mapInArrow(run, schema=spark_schema)
+    return map_items(spark, list(enumerate(paths)), run, spark_schema)
 
 
 def v2_facts(df):
@@ -682,13 +678,13 @@ def merge_map_form(dfs: list, schema: T.StructType):
     attrs = [f.name for f in schema.fields if f.name not in ("entity_hash", "entity_id")]
     # Tie order within one input = (__file, __seq): __file is the explicit
     # path ordinal from read_zebra_v2_files(with_ordinal=True) — partition
-    # ids after the round-robin repartition do NOT follow path order, so
-    # monotonically_increasing_id alone (partition-id high bits) would
-    # flatten identical-key facts in arbitrary FILE order.  __seq then
-    # breaks ties within a file (each file streams serially inside one
-    # partition, so per-file row order is block order), matching the C
-    # kernel's stable first-seen merge.  Inputs without the ordinal
-    # (single-file or pre-r5 callers) fall back to __seq alone.
+    # ids are not a contract of the reader, so monotonically_increasing_id
+    # alone (partition-id high bits) must not decide the FILE order of
+    # identical-key facts.  __seq then breaks ties within a file (each file
+    # streams serially inside one partition, so per-file row order is
+    # block order), matching the C kernel's stable first-seen merge.
+    # Inputs without the ordinal (single-file or pre-r5 callers) fall back
+    # to __seq alone.
     u = dfs[0].withColumn("__rank", F.lit(0))
     for i, d in enumerate(dfs[1:], start=1):
         u = u.unionByName(d.withColumn("__rank", F.lit(i)))

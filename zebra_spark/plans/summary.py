@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import map_items
+
 
 def blocks_summary(blocks: DataFrame) -> DataFrame:
     return blocks.groupBy().agg(
@@ -150,58 +152,55 @@ def v3_summary(spark, paths: list[str]) -> dict:
     from ..operators.zfile import _table_kind_of, open_zebra_stream
     from ..operators.zschema import struct_to_zschema
 
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
-    )
+    def run(task_paths):
+        for p in task_paths:
+            with open(p, "rb") as f:
+                schema, blocks, _ = open_zebra_stream(f)
+                kind = _table_kind_of(schema)
+                render = None
+                if kind == "map":
+                    node = struct_to_zschema(schema)
+                    _, val = _zt._variant(node, "table")
+                    render = _zt._render_col(val["key"])
+                nb = nr = mx = 0
+                fk = lk = None
+                for b in blocks:
+                    if kind == "binary":
+                        n = int(
+                            pa.compute.sum(
+                                pa.compute.binary_length(b.column("value"))
+                            ).as_py()
+                            or 0
+                        )
+                    else:
+                        n = b.num_rows
+                    nb += 1
+                    nr += n
+                    mx = max(mx, n)
+                    if kind == "map" and b.num_rows:
+                        if fk is None:
+                            fk = render(b.column("key")[0].as_py())
+                        lk = render(b.column("key")[b.num_rows - 1].as_py())
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "path": [p],
+                    "n_blocks": [nb],
+                    "n_rows": [nr],
+                    "max_rows": [mx],
+                    "first_key": [None if fk is None else _json.dumps(
+                        fk, separators=(",", ":"), sort_keys=True,
+                        ensure_ascii=False)],
+                    "last_key": [None if lk is None else _json.dumps(
+                        lk, separators=(",", ":"), sort_keys=True,
+                        ensure_ascii=False)],
+                }
+            )
 
-    def run(batches):
-        for rb in batches:
-            for p in rb.column("path").to_pylist():
-                with open(p, "rb") as f:
-                    schema, blocks, _ = open_zebra_stream(f)
-                    kind = _table_kind_of(schema)
-                    render = None
-                    if kind == "map":
-                        node = struct_to_zschema(schema)
-                        _, val = _zt._variant(node, "table")
-                        render = _zt._render_col(val["key"])
-                    nb = nr = mx = 0
-                    fk = lk = None
-                    for b in blocks:
-                        if kind == "binary":
-                            n = int(
-                                pa.compute.sum(
-                                    pa.compute.binary_length(b.column("value"))
-                                ).as_py()
-                                or 0
-                            )
-                        else:
-                            n = b.num_rows
-                        nb += 1
-                        nr += n
-                        mx = max(mx, n)
-                        if kind == "map" and b.num_rows:
-                            if fk is None:
-                                fk = render(b.column("key")[0].as_py())
-                            lk = render(b.column("key")[b.num_rows - 1].as_py())
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "path": [p],
-                        "n_blocks": [nb],
-                        "n_rows": [nr],
-                        "max_rows": [mx],
-                        "first_key": [None if fk is None else _json.dumps(
-                            fk, separators=(",", ":"), sort_keys=True,
-                            ensure_ascii=False)],
-                        "last_key": [None if lk is None else _json.dumps(
-                            lk, separators=(",", ":"), sort_keys=True,
-                            ensure_ascii=False)],
-                    }
-                )
-
-    rows = pdf.mapInArrow(
+    rows = map_items(
+        spark,
+        paths,
         run,
-        schema="path string, n_blocks long, n_rows long, max_rows long, "
+        "path string, n_blocks long, n_rows long, max_rows long, "
         "first_key string, last_key string",
     ).collect()
     out = {

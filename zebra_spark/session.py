@@ -7,8 +7,9 @@ arrow batches sized to the block size) but runnable on local[N].
 from __future__ import annotations
 
 import os
+from typing import Callable, Iterator, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_ROWS_PER_BATCH = 1 << 16  # arrow batch == encode block candidate size
 
@@ -41,3 +42,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def map_items(
+    spark: SparkSession,
+    items: Sequence,
+    fn: Callable[[Iterator], Iterator],
+    schema,
+    n_tasks: int | None = None,
+) -> DataFrame:
+    """Run ``fn(iterator over one task's items) -> Iterator[pa.RecordBatch]``
+    once per task over a driver-side list.
+
+    Task i of n gets the contiguous run ``items[i*k//n:(i+1)*k//n]`` of a
+    ``spark.range`` (n defaults to k) and looks its items up in the list
+    the closure carries (PySpark broadcasts one above 1 MB): no Python RDD,
+    whose second worker pool skips worker_boot, and no shuffle."""
+    k = len(items)
+    n = max(1, min(k, n_tasks or k))
+
+    def run(batches):
+        return fn(items[i] for rb in batches for i in rb.column(0).to_pylist())
+
+    return spark.range(0, k, 1, n).mapInArrow(run, schema=schema)

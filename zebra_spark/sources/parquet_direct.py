@@ -26,6 +26,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.encode import BLOCKS_DDL, encode_chunk_rows
+from ..session import map_items
 
 
 def list_row_groups(path: str) -> list[tuple[str, int]]:
@@ -51,47 +52,37 @@ def encode_parquet_direct(
     """
     splits = list_row_groups(path)
     # group splits into ~tasks_per_core tasks per core instead of one task
-    # per row group: each task streams several splits (the generator below
-    # already iterates its batch), so per-task scheduling overhead
-    # amortizes — measured 26 row groups on local[1]: 26 tasks cost ~2.8 s
-    # of pure scheduling against 1.8 s of compute.  The default 4x
-    # parallelism keeps elastic balance against variable split sizes; on a
-    # large cluster splits >> 4*cores and every core still gets a steady
-    # queue.  For short benchmark legs over UNIFORM splits, pass 1: every
-    # python task has a fixed worker cost, measured at 0.03 CPU-s for a
-    # one-row no-op mapInArrow on local[1] (0.22 CPU-s before the worker
-    # bootstrap in zebra_spark/worker_boot.py), which on a ~2 s leg is
-    # still worth not multiplying.
-    n_tasks = max(
-        1,
-        min(len(splits), tasks_per_core * spark.sparkContext.defaultParallelism),
-    )
-    sdf = spark.createDataFrame(splits, "path string, row_group int").repartition(
-        n_tasks
-    )
+    # per row group: each task streams its contiguous run of the sorted
+    # split list, so per-task scheduling overhead amortizes — measured 26
+    # row groups on local[1]: 26 tasks cost ~2.8 s of pure scheduling
+    # against 1.8 s of compute.  The default 4x parallelism keeps elastic
+    # balance against variable split sizes; on a large cluster splits >>
+    # 4*cores and every core still gets a steady queue.  For short
+    # benchmark legs over UNIFORM splits, pass 1: every task then gets an
+    # equal run, and every python task has a fixed worker cost, measured
+    # at 0.03 CPU-s for a one-row no-op mapInArrow on local[1], which on a
+    # ~2 s leg is still worth not multiplying.
+    n_tasks = tasks_per_core * spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
         from ..codec.warmup import warm_codec
 
         warm_codec()
-        for rb in batches:
-            paths = rb.column("path").to_pylist()
-            rgs = rb.column("row_group").to_pylist()
-            for p, rg in zip(paths, rgs):
-                # memory_map: page-cache reads without userspace copies —
-                # measured ~7% off the tokens-column decode (guide §6)
-                pf = pq.ParquetFile(p, memory_map=True)
-                table = pf.read_row_group(rg, columns=columns)
-                # one state per row group: block_id seq stays unique across
-                # chunks and the schema bytes ship once per row group
-                state = {"seq": 0}
-                for chunk in table.to_batches(max_chunksize=rows_per_block):
-                    yield from encode_chunk_rows(
-                        chunk, task_tag=f"{os.path.basename(p)}:{rg}",
-                        max_block_values=max_block_values, _state=state,
-                    )
+        for p, rg in task_splits:
+            # memory_map: page-cache reads without userspace copies —
+            # measured ~7% off the tokens-column decode (guide §6)
+            pf = pq.ParquetFile(p, memory_map=True)
+            table = pf.read_row_group(rg, columns=columns)
+            # one state per row group: block_id seq stays unique across
+            # chunks and the schema bytes ship once per row group
+            state = {"seq": 0}
+            for chunk in table.to_batches(max_chunksize=rows_per_block):
+                yield from encode_chunk_rows(
+                    chunk, task_tag=f"{os.path.basename(p)}:{rg}",
+                    max_block_values=max_block_values, _state=state,
+                )
 
-    return sdf.mapInArrow(gen, schema=BLOCKS_DDL)
+    return map_items(spark, splits, gen, BLOCKS_DDL, n_tasks)
 
 
 def encode_metrics_direct(
@@ -115,38 +106,29 @@ def encode_metrics_direct(
     sink cost that a per-executor sink would overlap.
     """
     splits = list_row_groups(path)
-    n_tasks = max(
-        1,
-        min(len(splits), tasks_per_core * spark.sparkContext.defaultParallelism),
-    )
-    sdf = spark.createDataFrame(splits, "path string, row_group int").repartition(
-        n_tasks
-    )
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
         from ..codec.warmup import warm_codec
 
         warm_codec()
+        # called once per task, so the fold spans the task's whole run
         tot = {"rows": 0, "raw": 0, "enc": 0, "zebra": 0, "tok": 0}
-        for rb in batches:
-            paths = rb.column("path").to_pylist()
-            rgs = rb.column("row_group").to_pylist()
-            for p, rg in zip(paths, rgs):
-                pf = pq.ParquetFile(p, memory_map=True)
-                table = pf.read_row_group(rg)
-                if "n_tok" in table.column_names:
-                    tot["tok"] += int(table.column("n_tok").to_numpy().sum())
-                state = {"seq": 0}
-                for chunk in table.to_batches(max_chunksize=rows_per_block):
-                    for blk in encode_chunk_rows(
-                        chunk,
-                        task_tag=f"{os.path.basename(p)}:{rg}",
-                        _state=state,
-                    ):
-                        tot["rows"] += blk.column("n_rows")[0].as_py()
-                        tot["raw"] += blk.column("raw_bytes")[0].as_py()
-                        tot["enc"] += blk.column("enc_bytes")[0].as_py()
-                        tot["zebra"] += blk.column("zebra_bytes")[0].as_py()
+        for p, rg in task_splits:
+            pf = pq.ParquetFile(p, memory_map=True)
+            table = pf.read_row_group(rg)
+            if "n_tok" in table.column_names:
+                tot["tok"] += int(table.column("n_tok").to_numpy().sum())
+            state = {"seq": 0}
+            for chunk in table.to_batches(max_chunksize=rows_per_block):
+                for blk in encode_chunk_rows(
+                    chunk,
+                    task_tag=f"{os.path.basename(p)}:{rg}",
+                    _state=state,
+                ):
+                    tot["rows"] += blk.column("n_rows")[0].as_py()
+                    tot["raw"] += blk.column("raw_bytes")[0].as_py()
+                    tot["enc"] += blk.column("enc_bytes")[0].as_py()
+                    tot["zebra"] += blk.column("zebra_bytes")[0].as_py()
         yield pa.RecordBatch.from_pydict(
             {
                 "n_rows": [tot["rows"]],
@@ -157,10 +139,11 @@ def encode_metrics_direct(
             }
         )
 
-    return sdf.mapInArrow(
+    return map_items(
+        spark,
+        splits,
         gen,
-        schema=(
-            "n_rows long, n_tokens long, raw_bytes long, enc_bytes long, "
-            "zebra_bytes long"
-        ),
+        "n_rows long, n_tokens long, raw_bytes long, enc_bytes long, "
+        "zebra_bytes long",
+        tasks_per_core * spark.sparkContext.defaultParallelism,
     )

@@ -1390,9 +1390,7 @@ def _q_streaming_encode_roundtrip(spark, sf_dir):
         q = encode_stream(stream, out, ckpt, rows_per_block=1 << 14)
         q.awaitTermination(300)
         blocks = spark.read.parquet(out)
-        return decode_df(
-            blocks, schema=ev.schema, resolve_schemas=True
-        ).localCheckpoint()
+        return decode_df(blocks, schema=ev.schema).localCheckpoint()
     finally:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -33,7 +33,7 @@ def test_cli_roundtrip_and_commands(spark, tmp_path, capsys):
     capsys.readouterr()
     from zebra_spark.operators.decode import decode_df
 
-    df2 = decode_df(spark.read.parquet(blocks2), resolve_schemas=True)
+    df2 = decode_df(spark.read.parquet(blocks2))
     assert df2.exceptAll(docs).count() == 0 and docs.exceptAll(df2).count() == 0
 
     # cat prints JSON rows
@@ -120,7 +120,7 @@ def test_cli_roundtrip_and_commands(spark, tmp_path, capsys):
     zs.main(["adapt", "--input", blocks_dir, "--schema", zpath, "--output", adapted])
     a = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert a["adapted_rows"] == docs.count()
-    adf = decode_df(spark.read.parquet(adapted), resolve_schemas=True)
+    adf = decode_df(spark.read.parquet(adapted))
     assert "extra" in adf.columns
 
     # verify: distributed audit over the stored blocks

@@ -353,7 +353,7 @@ def test_checkpointed_encode_carries_zone_maps_and_blooms(spark, tmp_path):
     target = df.select("doc_id").head()[0]  # string key (F1 doc ids)
     kept = bloom_filter_blocks(blocks, target)
     assert 0 < kept.count() < blocks.count()
-    got = decode_df(
-        blocks, schema=df.schema, key_equals=target, resolve_schemas=True
-    ).filter(F.col("doc_id") == target)
+    got = decode_df(blocks, schema=df.schema, key_equals=target).filter(
+        F.col("doc_id") == target
+    )
     assert got.count() == df.filter(F.col("doc_id") == target).count()

@@ -219,30 +219,28 @@ def test_encoded_blocks_carry_encoding_metadata(spark):
     assert got.field("k").metadata[b"zebra.encoding"] == b"int"
 
 
-# --- schema dedup in the blocks table ----------------------------------------
+# --- self-describing block rows ----------------------------------------------
 
 
-def test_schema_bytes_ship_once_per_task(spark, tmp_path):
-    """Every block row carries schema_id; the schema BYTES appear once per
-    (task, schema) — not duplicated into every row (GBs at 100 TB)."""
-    from zebra_spark.operators.decode import decode_df, schema_map_of
+def test_every_block_row_carries_schema_bytes(spark, tmp_path):
+    """Every block row carries schema_id and the same non-NULL schema
+    bytes, so a stored, shuffled blocks table decodes with no flag."""
+    from zebra_spark.operators.decode import decode_df
     from zebra_spark.operators.encode import encode_df
 
     df = spark.range(0, 2000, 1, 2).selectExpr("id AS k", "id * 2 AS v")
     blocks = encode_df(df, rows_per_block=100).cache()
     n_blocks = blocks.count()
-    n_with_bytes = blocks.filter(F.col("schema").isNotNull()).count()
-    assert n_blocks >= 20 and n_with_bytes <= 2  # one per task
-    assert blocks.filter(F.col("schema_id").isNull()).count() == 0
-    # narrow-chain decode needs no resolution pass
+    assert n_blocks >= 20
+    assert blocks.filter(
+        F.col("schema_id").isNull() | F.col("schema").isNull()
+    ).count() == 0
+    assert blocks.select("schema_id", "schema").distinct().count() == 1
     rt = decode_df(blocks, schema=df.schema)
     assert rt.exceptAll(df).count() == 0 and df.exceptAll(rt).count() == 0
-    # storage roundtrip + shuffle: resolve_schemas builds the id->bytes map
     p = str(tmp_path / "blocks_pq")
     blocks.write.parquet(p)
     stored = spark.read.parquet(p).repartition(8)  # deliberately reorder
-    smap = schema_map_of(stored)
-    assert len(smap) == 1
-    rt2 = decode_df(stored, schema=df.schema, resolve_schemas=True)
-    assert rt2.exceptAll(df).count() == 0 and df.exceptAll(rt2).count() == 0
+    for rt2 in (decode_df(stored), decode_df(stored, schema=df.schema)):
+        assert rt2.exceptAll(df).count() == 0 and df.exceptAll(rt2).count() == 0
     blocks.unpersist()

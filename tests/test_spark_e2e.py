@@ -55,7 +55,7 @@ def test_parquet_direct_roundtrip(spark, tmp_path):
     src = str(tmp_path / "f1src.parquet")
     df.write.parquet(src)
     blocks = encode_parquet_direct(spark, src).cache()
-    dec = decode_df(blocks, resolve_schemas=True)
+    dec = decode_df(blocks)
     assert_df_equal(df, dec.select(df.columns))
     blocks.unpersist()
 

@@ -129,31 +129,36 @@ def test_one_core_worker_stops_rereading_after_first_task():
     assert res["driver_stock"], res
 
 
-def test_decode_df_single_schema_runs_one_metadata_query(spark, tmp_path):
-    """resolve_schemas=True on a single-schema table takes the schema from
-    the schema map: decode_df starts exactly the jobs of schema_map_of
-    (adaptive execution runs its shuffle map stage as a job of its own),
-    and no second head() job for the schema."""
-    from zebra_spark.operators.decode import decode_df, schema_map_of
+def test_decode_df_runs_one_job_for_its_schema(spark, tmp_path):
+    """decode_df on a stored table starts exactly one job, the head() that
+    fetches the schema, whatever the read: plain, with the ignored
+    resolve_schemas flag, or keyed.  With schema= given it starts none."""
+    from zebra_spark.operators.decode import decode_df
     from zebra_spark.operators.encode import encode_df
     from zebra_spark.sources.synth import f1_table
 
     path = str(tmp_path / "blocks.parquet")
     df = f1_table(spark, 1000, partitions=2, rows_per_batch=512)
-    encode_df(df, rows_per_block=256).write.parquet(path)
-    blocks = spark.read.parquet(path)
+    encode_df(df, rows_per_block=256, key_col="doc_id").write.parquet(path)
+    stored = spark.read.parquet(path)
+    reads = {
+        "plain": lambda: decode_df(stored),
+        "resolve": lambda: decode_df(stored, resolve_schemas=True),
+        "keyed": lambda: decode_df(stored, key_range=("a", "z")),
+        "given": lambda: decode_df(stored, schema=df.schema),
+    }
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    decoded = {}
     try:
-        sc.setJobGroup("zs-schema-map", "schema map alone")
-        assert len(schema_map_of(blocks)) == 1
-        sc.setJobGroup("zs-decode-meta", "decode_df metadata")
-        dec = decode_df(blocks, resolve_schemas=True)
+        for name, read in reads.items():
+            sc.setJobGroup(f"zs-decode-{name}", f"decode_df {name}")
+            decoded[name] = read()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
-    map_jobs = tracker.getJobIdsForGroup("zs-schema-map")
-    decode_jobs = tracker.getJobIdsForGroup("zs-decode-meta")
-    assert map_jobs and len(decode_jobs) == len(map_jobs)
-    assert dec.schema == df.schema
-    assert dec.count() == df.count()
+    jobs = {n: len(tracker.getJobIdsForGroup(f"zs-decode-{n}")) for n in reads}
+    assert jobs == {"plain": 1, "resolve": 1, "keyed": 1, "given": 0}
+    for dec in decoded.values():
+        assert dec.schema == df.schema
+    assert decoded["resolve"].count() == df.count()

@@ -96,10 +96,8 @@ def _read_blocks(spark, path, columns=None, key_range=None, key_equals=None):
             df = df.select(*columns)
         return None, df
     blocks = spark.read.parquet(path)
-    # stored blocks may have been shuffled: resolve schema ids up front
     return blocks, decode_df(
         blocks,
-        resolve_schemas=True,
         columns=columns,
         key_range=key_range,
         key_equals=key_equals,
@@ -403,7 +401,7 @@ def _zebra_summary_fields(spark, blocks, row):
     from zebra_spark.operators.ztxt import _render_col, _variant, table_kind
     from zebra_spark.plans.summary import binary_block_byte_counts
 
-    df = decode_df(blocks, resolve_schemas=True)
+    df = decode_df(blocks)
     node = struct_to_zschema(df.schema)
     kind = table_kind(node)
     out = {

@@ -227,12 +227,6 @@ def _batch_features(payloads: pa.Array):
     return lengths, hist, feats
 
 
-def _features_of(payload: bytes) -> np.ndarray:
-    """Single-payload fingerprint (tests / driver-side use)."""
-    _, _, feats = _batch_features(pa.array([payload], type=pa.large_binary()))
-    return feats[0]
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """media table -> byte-histogram feature vectors, batched via mapInArrow.
 

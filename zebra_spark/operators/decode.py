@@ -32,41 +32,49 @@ from ..codec.blocks import decode_batch
 from ..codec.warmup import warm_codec
 
 
-def schema_map_of(blocks: DataFrame) -> dict[str, bytes]:
-    """Resolve schema_id -> arrow schema bytes for a blocks DataFrame.
+class SchemaBytesMissing(ValueError):
+    """A block row has NULL schema bytes and its task has not parsed that
+    ``schema_id`` yet: a blocks table written before every row carried
+    its schema, then filtered, shuffled or split."""
 
-    The encoder ships the schema bytes once per (task, schema) and tags
-    every block row with schema_id, so this is one tiny metadata scan
-    (two slim columns, parquet-pruned) instead of GBs of per-row schema
-    duplication at 100 TB.
-    """
-    rows = (
-        blocks.filter(F.col("schema").isNotNull())
-        .select("schema_id", "schema")
-        .distinct()
-        .collect()
-    )
-    if not rows:
-        raise ValueError(
-            "blocks DataFrame carries no schema bytes (was it filtered to "
-            "exclude all schema-bearing rows?)"
-        )
-    return {r["schema_id"]: bytes(r["schema"]) for r in rows}
+
+def _block_schema(
+    parsed: dict[str, pa.Schema], rb: pa.RecordBatch, i: int
+) -> pa.Schema:
+    """Arrow schema of block row ``i``; each ``schema_id`` is parsed once
+    per ``parsed`` dict (one per task)."""
+    sid = rb.column("schema_id")[i].as_py()
+    schema = parsed.get(sid)
+    if schema is None:
+        raw = rb.column("schema")[i].as_py()
+        if raw is None:
+            raise SchemaBytesMissing(
+                f"block {rb.column('block_id')[i].as_py()} has no schema bytes "
+                f"for schema {sid} (a blocks table written before every row "
+                "carried its schema); decode with schema=None, or rewrite it "
+                "with rechunk_blocks"
+            )
+        schema = parsed[sid] = pa.ipc.read_schema(pa.py_buffer(raw))
+    return schema
 
 
 def _decode_fn(
     verify_crc: bool,
     columns=None,
     validate_maps: bool = False,
-    schema_map: dict[str, bytes] | None = None,
+    seed: tuple[str, bytes] | None = None,
 ):
+    """``seed``: one ``(schema_id, schema bytes)`` pair parsed before the
+    first row, so rows of older tables that carry only the id still
+    decode."""
+
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         warm_codec()
         parsed: dict[str, pa.Schema] = {}
+        if seed is not None:
+            parsed[seed[0]] = pa.ipc.read_schema(pa.py_buffer(seed[1]))
         for rb in batches:
             payloads = rb.column("payload")
-            sids = rb.column("schema_id")
-            schemas = rb.column("schema")
             crcs = rb.column("crc32")
             ids = rb.column("block_id")
             for i in range(rb.num_rows):
@@ -77,34 +85,28 @@ def _decode_fn(
                         raise ValueError(
                             f"crc mismatch in block {ids[i].as_py()}"
                         )
-                sid = sids[i].as_py()
-                schema = parsed.get(sid)
-                if schema is None:
-                    raw = schemas[i].as_py()
-                    if raw is None and schema_map is not None:
-                        raw = schema_map.get(sid)
-                    if raw is None:
-                        raise ValueError(
-                            f"block {ids[i].as_py()} references schema {sid} "
-                            "whose bytes precede it in another split (blocks "
-                            "were filtered/shuffled/split since encode); "
-                            "decode with resolve_schemas=True"
-                        )
-                    schema = pa.ipc.read_schema(pa.py_buffer(raw))
-                    parsed[sid] = schema
                 yield decode_batch(
-                    payload, schema, columns=columns, validate_maps=validate_maps
+                    payload,
+                    _block_schema(parsed, rb, i),
+                    columns=columns,
+                    validate_maps=validate_maps,
                 )
 
     return decode
 
 
-def arrow_schema_of(blocks: DataFrame) -> pa.Schema:
-    """Fetch the (single) arrow schema stored in a blocks DataFrame."""
-    row = blocks.filter(F.col("schema").isNotNull()).select("schema").head()
+def arrow_schema_of(blocks: DataFrame) -> tuple[pa.Schema, tuple[str, bytes]]:
+    """The arrow schema of the first schema-bearing block row, and its
+    ``(schema_id, bytes)`` pair to seed ``_decode_fn``: one ``head()`` job."""
+    row = (
+        blocks.filter(F.col("schema").isNotNull())
+        .select("schema_id", "schema")
+        .head()
+    )
     if row is None:
         raise ValueError("blocks DataFrame is empty; pass an explicit schema")
-    return pa.ipc.read_schema(pa.py_buffer(row[0]))
+    seed = (row[0], bytes(row[1]))
+    return pa.ipc.read_schema(pa.py_buffer(seed[1])), seed
 
 
 def zone_map_filter(blocks: DataFrame, key_range) -> DataFrame:
@@ -184,16 +186,11 @@ def decode_df(
     """Decode a blocks DataFrame back to the original rows.
 
     ``schema``: pyspark StructType or pyarrow Schema.  When omitted it is
-    the schema map's only schema if ``resolve_schemas`` finds exactly one,
-    else fetched from the first block (one tiny driver-side lookup).
+    fetched from the first block row (one ``head()`` job).  Every block
+    row carries its schema bytes, so stored, filtered, shuffled and lazily
+    encoded blocks all decode the same way.
 
-    ``resolve_schemas``: schema BYTES ship once per (encode task, schema)
-    and every block row carries ``schema_id``.  In a narrow encode->decode
-    chain each decode task sees the schema-bearing row before its blocks,
-    so nothing extra is needed (the default).  For blocks read back from
-    storage and then filtered/shuffled/split, pass True: one cheap
-    two-column metadata scan builds the id->bytes map up front (do NOT use
-    on a lazily chained encode, where the scan would re-run the encode).
+    ``resolve_schemas``: ignored; accepted so older callers keep running.
 
     ``columns``: project to these top-level columns INSIDE the block
     decoder — unrequested sections are skipped without decompression
@@ -209,25 +206,19 @@ def decode_df(
     dropped BEFORE the decode UDF — whole payloads skipped without
     decompression.  Zone maps are block-granular: surviving blocks may
     still contain out-of-range rows, so apply the exact row predicate
-    after decode.  Forces ``resolve_schemas`` (the filter may drop the
-    schema-bearing row of a task), so the blocks should be materialized,
-    not a lazily chained encode.
+    after decode.
 
     ``key_equals``: one value or a list — point-lookup block skipping on
     the per-block key Bloom filters (``encode_df(key_bloom=True)``);
     NULL-filter blocks never skip, false positives only decode an extra
-    block, false negatives cannot happen.  Same residual-predicate and
-    resolve_schemas contract as ``key_range``; both may be combined.
+    block, false negatives cannot happen.  Same residual-predicate
+    contract as ``key_range``; both may be combined.
     """
-    if key_range is not None or key_equals is not None:
-        resolve_schemas = True
-    smap = schema_map_of(blocks) if resolve_schemas else None
+    seed = None
     if schema is None:
-        if smap is not None and len(smap) == 1:
-            # the schema map already holds the only schema: no second job
-            schema = pa.ipc.read_schema(pa.py_buffer(next(iter(smap.values()))))
-        else:
-            schema = arrow_schema_of(blocks)
+        # from the unfiltered blocks: its seed also decodes the id-only
+        # rows of tables written before every row carried its schema
+        schema, seed = arrow_schema_of(blocks)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     if columns is not None:
@@ -240,10 +231,9 @@ def decode_df(
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
     if key_range is not None:
-        # filter AFTER the schema map is built from the unfiltered blocks
         blocks = zone_map_filter(blocks, key_range)
     if key_equals is not None:
         blocks = bloom_filter_blocks(blocks, key_equals)
     return blocks.mapInArrow(
-        _decode_fn(verify_crc, columns, validate_maps, smap), schema=schema
+        _decode_fn(verify_crc, columns, validate_maps, seed), schema=schema
     )

@@ -12,8 +12,8 @@ Scale design (100 TB / 1000 executors):
 * one block row per Arrow batch chunk — tasks stream, nothing accumulates;
 * optional salting repartition spreads source-key and length skew before
   encoding (north rule: explicit skew handling);
-* block rows carry everything needed to decode (schema + payload + crc),
-  so downstream decode/merge/verify are embarrassingly parallel;
+* every block row carries everything needed to decode (schema + payload +
+  crc), so downstream decode/merge/verify are embarrassingly parallel;
 * per-block codec metrics emit with the data: the lineage/metrics table is
   a projection of the blocks table, no second pass.
 """
@@ -153,12 +153,10 @@ def encode_chunk_rows(
         md[b"zebra.spark_schema"] = field_meta.encode()
         arrow_schema = arrow_schema.with_metadata(md)
     schema_bytes = arrow_schema.serialize().to_pybytes()
+    # every block row carries its schema bytes, so any subset of the rows
+    # decodes on its own; ~1 KB against MBs of payload, and parquet
+    # dictionary-encodes the repeated value
     schema_id = hashlib.sha1(schema_bytes).hexdigest()[:16]
-    # every block row carries schema_id; the BYTES ship once per (task,
-    # schema) — at 100 TB repeating the full arrow schema per block row is
-    # GBs of duplication (decode resolves schema_id via one tiny metadata
-    # scan, see decode.schema_map_of)
-    emitted = state.setdefault("schemas", set())
     cells_per_row = max(1, _batch_cells(rb) // max(1, rb.num_rows))
     step = max(64, min(rows_per_block, max_block_values // cells_per_row))
     for off in range(0, rb.num_rows, step):
@@ -186,8 +184,6 @@ def encode_chunk_rows(
                 bloom = _key_bloom_words(chunk.column(key_col))
         seq = state["seq"]
         state["seq"] += 1
-        ship_schema = schema_id not in emitted
-        emitted.add(schema_id)
         yield pa.RecordBatch.from_pydict(
             {
                 "block_id": [f"{task_id}-{seq:08d}"],
@@ -197,7 +193,7 @@ def encode_chunk_rows(
                 "n_rows": [chunk.num_rows],
                 "payload": [payload],
                 "schema_id": [schema_id],
-                "schema": [schema_bytes if ship_schema else None],
+                "schema": [schema_bytes],
                 "meta": [json.dumps(meta)],
                 "raw_bytes": [meta["raw_bytes"]],
                 "enc_bytes": [meta["enc_bytes"]],
@@ -241,8 +237,8 @@ def _encode_grouped_fn(rows_per_block: int, key_col: str | None, group_col: str,
         warm_codec()
         task_id = uuid.uuid4().hex[:12]
         # one state per unit: the downstream partitionBy(unit) write splits
-        # this task's blocks into per-unit files, so each unit must be
-        # self-contained (own schema-bytes row, own block_id sequence)
+        # this task's blocks into per-unit files, so each unit keeps its
+        # own block_id sequence
         states: dict[int, dict] = {}
         for rb in batches:
             if rb.num_rows == 0:

@@ -51,14 +51,15 @@ def rechunk_blocks(
     """
     from ..codec.warmup import warm_codec
 
+    seed = None
     if schema is None:
-        schema = arrow_schema_of(blocks)
+        schema, seed = arrow_schema_of(blocks)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     field_meta = schema.json() if _has_metadata(schema) else None
     if coalesce_partitions is not None:
         blocks = blocks.coalesce(coalesce_partitions)
-    decode = _decode_fn(verify_crc=True)
+    decode = _decode_fn(verify_crc=True, seed=seed)
 
     def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         warm_codec()

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from ..codec import codecs as _codecs
 from ..codec.blocks import decode_batch, encode_batch
 from ..codec.warmup import warm_codec
+from .decode import _block_schema
 
 
 def _ipc_bytes(rb: pa.RecordBatch) -> bytes:
@@ -82,21 +83,9 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
                 decode_ok = False
                 reenc = None
                 err = None
-                # record schema bytes regardless of this block's health —
-                # later blocks of the task reference them by schema_id
-                sid = rb.column("schema_id")[i].as_py()
-                if sid not in parsed:
-                    raw = rb.column("schema")[i].as_py()
-                    if raw is not None:
-                        try:
-                            parsed[sid] = pa.ipc.read_schema(pa.py_buffer(raw))
-                        except Exception:
-                            pass
                 if crc_ok:
                     try:
-                        schema = parsed.get(sid)
-                        if schema is None:
-                            raise ValueError(f"schema bytes for {sid} unavailable")
+                        schema = _block_schema(parsed, rb, i)
                         decoded = decode_batch(payload, schema)
                         decode_ok = decoded.num_rows == n_rows
                         if check_reencode:

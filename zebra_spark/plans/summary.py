@@ -110,19 +110,13 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     from ..codec.blocks import decode_batch
-    from ..operators.decode import schema_map_of
-
-    smap = schema_map_of(blocks)
+    from ..operators.decode import _block_schema
 
     def run(batches):
         parsed: dict[str, pa.Schema] = {}
         for rb in batches:
             for i in range(rb.num_rows):
-                sid = rb.column("schema_id")[i].as_py()
-                schema = parsed.get(sid)
-                if schema is None:
-                    schema = pa.ipc.read_schema(pa.py_buffer(smap[sid]))
-                    parsed[sid] = schema
+                schema = _block_schema(parsed, rb, i)
                 batch = decode_batch(rb.column("payload")[i].as_py(), schema)
                 col = batch.column("value")
                 n = pa.compute.sum(pa.compute.binary_length(col)).as_py() or 0
@@ -133,9 +127,9 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
                     }
                 )
 
-    return blocks.select("block_id", "schema_id", "payload").mapInArrow(
-        run, schema="block_id string, n_bytes long"
-    )
+    return blocks.select(
+        "block_id", "schema_id", "schema", "payload"
+    ).mapInArrow(run, schema="block_id string, n_bytes long")
 
 
 def v3_summary(spark, paths: list[str]) -> dict:

@@ -1,4 +1,4 @@
-"""Iceberg table IO with a parquet-directory fallback.
+"""Iceberg table input with a parquet-directory fallback.
 
 The production input (BASELINE.json input_hint) is an Iceberg table of
 pre-tokenized sequences; resumability is "from the last committed Iceberg
@@ -8,19 +8,15 @@ capability-gated, honestly:
 * when the session has an Iceberg catalog configured (see
   :func:`iceberg_submit_conf` for the exact ``spark-submit`` flags), reads
   go through ``spark.read.table`` with optional ``snapshot-id`` /
-  ``as-of-timestamp`` time travel, and commits rely on Iceberg's atomic
-  snapshot semantics (one ``append`` per micro-commit == one snapshot);
+  ``as-of-timestamp`` time travel;
 * otherwise :func:`read_input` falls back to a plain parquet path — the
   path every test in this repo actually exercises — and resume uses the
   per-unit `_SUCCESS` manifest of ``operators/checkpoint.py``, which is
   the same idea (atomic unit commits + anti-join on the committed set)
   minus the catalog.
 
-Why snapshots map cleanly onto our checkpoint design: checkpointed_encode
-commits work UNITS atomically and re-derives the todo-set from what is
-committed.  With Iceberg as the sink, "committed" is simply "visible in
-the current snapshot", so resume-from-last-snapshot is the identical
-anti-join with the manifest replaced by the snapshot's unit column.
+Blocks are written as parquet (``operators/checkpoint.py``); there is no
+Iceberg sink.
 """
 
 from __future__ import annotations
@@ -38,7 +34,7 @@ def iceberg_submit_conf(catalog: str = "zs", warehouse: str = "s3://bucket/wh"):
         spark-submit --packages {ICEBERG_PACKAGE} \\
             $(python -c "...iceberg_submit_conf()...") \\
             --py-files zebra_spark.zip tools/run_encode_job.py \\
-            --table zs.db.tokens --output zs.db.token_blocks
+            --input zs.db.tokens --output s3://bucket/blocks/
     """
     return {
         "spark.sql.extensions": (
@@ -96,18 +92,3 @@ def read_input(
         reader = reader.option("as-of-timestamp", str(as_of_timestamp))
     return reader.format("iceberg").table(path_or_table)
 
-
-def write_blocks(blocks: DataFrame, path_or_table: str, mode: str = "append"):
-    """Write a blocks frame to an Iceberg table (atomic snapshot per call)
-    or a parquet directory (atomic via the parquet committer)."""
-    is_path = "/" in path_or_table or path_or_table.endswith(".parquet")
-    if is_path:
-        blocks.write.mode(mode).parquet(path_or_table)
-    else:
-        if not has_iceberg(blocks.sparkSession):
-            raise NotImplementedError(
-                "no Iceberg runtime in this environment; see iceberg_submit_conf()"
-            )
-        blocks.writeTo(path_or_table).append() if mode == "append" else (
-            blocks.writeTo(path_or_table).createOrReplace()
-        )

@@ -74,7 +74,7 @@ def encode_parquet_direct(
             pf = pq.ParquetFile(p, memory_map=True)
             table = pf.read_row_group(rg, columns=columns)
             # one state per row group: block_id seq stays unique across
-            # chunks and the schema bytes ship once per row group
+            # chunks
             state = {"seq": 0}
             for chunk in table.to_batches(max_chunksize=rows_per_block):
                 yield from encode_chunk_rows(

@@ -107,16 +107,6 @@ def test_string_dict_wins_on_low_cardinality():
     assert meta["bytes"] < meta["zebra_bytes"]
 
 
-def test_string_fsst_forced_roundtrip():
-    rng = np.random.default_rng(2)
-    words = [b"the", b"quick", b"brown", b"fox", b"jumps", b"compression"]
-    strings = [
-        b" ".join(words[i] for i in rng.integers(0, len(words), size=8))
-        for _ in range(300)
-    ]
-    roundtrip_strings(strings, allow={StrCodec.FSST, StrCodec.ZEBRA})
-
-
 def test_fsst_section_roundtrip():
     rng = np.random.default_rng(3)
     base = b"hello world, this is a compressible string! " * 200
@@ -151,16 +141,14 @@ def test_fsst_symbol_length_capped_at_u8():
         out, pos = fsst.decompress(sec)
         assert out == data and pos == len(sec)
     # and through the string selector under the size policy (the path
-    # that crashed: the FSST probe on a 64 KB sample of this text)
+    # that crashed: FSST on a 64 KB sample of this text)
     from zebra_spark.codec import codecs
 
     lengths = np.array([len(s) for s in reps], dtype=np.int64)
     with codecs.codec_policy("size"):
-        c, pl, _ = encode_strings(lengths, data, probe_key="t.fsst.cap")
+        c, pl, _ = encode_strings(lengths, data)
     ol, ob, _ = decode_strings(c, pl, len(reps))
     assert ob == data
-    codecs._FSST_PROBE_CACHE.pop("t.fsst.cap", None)
-    codecs._GP_PROBE_CACHE.pop("t.fsst.cap", None)
 
 
 def test_fsst_incompressible_returns_none_or_roundtrips():
@@ -301,42 +289,6 @@ def test_sampled_gates_keep_winners_at_scale():
     assert (out2 == lowcard).all()
 
 
-def test_fsst_probe_cache_positive_fires_every_block(monkeypatch):
-    """r3 ADVICE regression: a cached-POSITIVE probe decision must make
-    every subsequent block of that column attempt FSST (the r3 code
-    recomputed the heuristic after the cache hit and overwrote it, so
-    FSST ran on only 1 of every 64 blocks of a winning column)."""
-    from zebra_spark.codec import codecs
-
-    calls = {"n": 0}
-    real = codecs._fsst.compress
-
-    def counting(data, *a, **k):
-        calls["n"] += 1
-        return real(data, *a, **k)
-
-    monkeypatch.setattr(codecs._fsst, "compress", counting)
-    key = "test://fsst-cache-positive"
-    codecs._FSST_PROBE_CACHE[key] = (True, 63)
-    try:
-        strings = [
-            b"the quick brown fox jumps over the lazy dog %06d" % i
-            for i in range(200)
-        ]
-        lengths, concat = _mk_strings(strings)
-        # heuristic alone would NOT fire here (snappy compresses this well)
-        codec, payload, meta = encode_strings(lengths, concat, probe_key=key)
-        # probe is disallowed on a cache hit, so any compress call is the
-        # full-column FSST attempt gated by the cached decision
-        assert calls["n"] >= 1
-        out_len, out_bytes, _ = decode_strings(codec, payload, len(strings))
-        assert out_bytes == concat and (out_len == lengths).all()
-        # and the use counter ticked down
-        assert codecs._FSST_PROBE_CACHE[key] == (True, 62)
-    finally:
-        codecs._FSST_PROBE_CACHE.pop(key, None)
-
-
 def test_delta_selected_through_handicap_on_large_size_win(monkeypatch):
     """Under the balanced policy DELTA pays a 5% decode handicap; a column
     where DELTA is >15% smaller than every other candidate clears that bar
@@ -450,44 +402,6 @@ def test_alp_rd_wire_layout():
     assert p == len(payload)
 
 
-def test_zlib_string_codec_roundtrip_and_gate():
-    """r5 ext: DEFLATE string candidate (stdlib stand-in for zstd), probe-
-    gated like FSST with its own per-column cache + decode budget.  Forced
-    and auto paths both roundtrip; the wire is skippable."""
-    from zebra_spark.codec import codecs
-    from zebra_spark.codec.codecs import skip_strings
-
-    rng = np.random.default_rng(4)
-    words = [b"the", b"model", b"training", b"pipeline", b"compression"]
-    strings = [
-        b" ".join(words[i] for i in rng.integers(0, len(words), size=40))
-        for _ in range(2000)
-    ]
-    lengths = np.array([len(s) for s in strings], dtype=np.int64)
-    concat = b"".join(strings)
-    # forced
-    c, pl, m = encode_strings(
-        lengths, concat, allow={StrCodec.ZEBRA, StrCodec.ZLIB}
-    )
-    assert c == StrCodec.ZLIB
-    ol, ob, p = decode_strings(c, pl, len(strings))
-    assert ob == concat and (ol == lengths).all() and p == len(pl)
-    assert skip_strings(c, pl, len(strings)) == len(pl)
-    assert m["bytes"] < 0.6 * m["zebra_bytes"]  # entropy coding wins on text
-    # auto probe under balanced + cache hit on the next block (the active
-    # general-purpose candidate is zstd here, DEFLATE where pyarrow lacks it)
-    key = "test.zlib.col"
-    try:
-        c2, pl2, _ = encode_strings(lengths, concat, probe_key=key)
-        assert key in codecs._GP_PROBE_CACHE
-        c3, _, _ = encode_strings(lengths, concat, probe_key=key)
-        assert c3 == c2
-        ol, ob, _ = decode_strings(c2, pl2, len(strings))
-        assert ob == concat
-    finally:
-        codecs._GP_PROBE_CACHE.pop(key, None)
-
-
 def test_zstd_string_codec_roundtrip_and_selection():
     """r5 ext: zstd replaces DEFLATE as the general-purpose candidate when
     the pyarrow codec is available (strictly dominates DEFLATE-6 on text:
@@ -496,10 +410,6 @@ def test_zstd_string_codec_roundtrip_and_selection():
     from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import skip_strings
 
-    if not codecs._zstd_available():
-        import pytest
-
-        pytest.skip("pyarrow zstd codec unavailable")
     rng = np.random.default_rng(7)
     words = [b"the", b"model", b"training", b"pipeline", b"compression"]
     strings = [
@@ -517,16 +427,12 @@ def test_zstd_string_codec_roundtrip_and_selection():
     assert ob == concat and (ol == lengths).all() and p == len(pl)
     assert skip_strings(c, pl, len(strings)) == len(pl)
     assert m["bytes"] < 0.6 * m["zebra_bytes"]
-    # auto probe under balanced selects zstd on this text
-    key = "test.zstd.col"
-    try:
-        c2, pl2, _ = encode_strings(lengths, concat, probe_key=key)
-        assert c2 == StrCodec.ZSTD
-        ol, ob, _ = decode_strings(c2, pl2, len(strings))
-        assert ob == concat
-    finally:
-        codecs._GP_PROBE_CACHE.pop(key, None)
-        codecs._GP_LOSS_STREAK.pop(key, None)
+    # balanced selects zstd on this text
+    with codecs.codec_policy("balanced"):
+        c2, pl2, _ = encode_strings(lengths, concat)
+    assert c2 == StrCodec.ZSTD
+    ol, ob, _ = decode_strings(c2, pl2, len(strings))
+    assert ob == concat and (ol == lengths).all()
     # size policy compresses at least as well as balanced
     with codecs.codec_policy("size"):
         c4, pl4, _ = encode_strings(
@@ -537,42 +443,6 @@ def test_zstd_string_codec_roundtrip_and_selection():
     assert ob == concat and (ol == lengths).all()
 
 
-def test_probe_loss_streak_flips_cached_positive():
-    """r5 review fix: a cached-positive FSST/ZLIB probe attempts the full
-    candidate on every block; after _PROBE_LOSS_LIMIT consecutive
-    selection losses the cache flips negative so later blocks stop paying
-    for a candidate that keeps being discarded (64-block revalidation
-    re-probes)."""
-    from zebra_spark.codec import codecs
-
-    rng = np.random.default_rng(11)
-    # 8 distinct random-32B strings repeated 10000x: the DICT candidate
-    # collapses them to 256 unique bytes + ~4-bit indices, while any
-    # sequence compressor (zstd or DEFLATE) still pays a match token per
-    # repeat — the gp candidate computes every block (cached-positive)
-    # and loses every block
-    uniq = [rng.bytes(32) for _ in range(8)]
-    strings = [uniq[i] for i in rng.integers(0, 8, size=10000)]
-    lengths = np.array([len(s) for s in strings], dtype=np.int64)
-    concat = b"".join(strings)
-    gp_ids = {StrCodec.ZLIB, StrCodec.ZSTD}
-    key = "test.zlib.losses"
-    try:
-        codecs._GP_PROBE_CACHE[key] = (True, 63)
-        for i in range(codecs._PROBE_LOSS_LIMIT):
-            assert codecs._GP_PROBE_CACHE[key][0] is True
-            c, _, _ = encode_strings(lengths, concat, probe_key=key)
-            assert c not in gp_ids  # computed, lost
-        assert codecs._GP_PROBE_CACHE[key][0] is False
-        # and the next block no longer computes the candidate at all
-        # (cache negative, probe suppressed for 63 blocks)
-        c, _, _ = encode_strings(lengths, concat, probe_key=key)
-        assert c not in gp_ids
-    finally:
-        codecs._GP_PROBE_CACHE.pop(key, None)
-        codecs._GP_LOSS_STREAK.pop(key, None)
-
-
 def test_f1_token_column_compression_pin():
     """Drift guard for the round-5 headline: the F1 token column must
     keep selecting ZSTD_BT and land well under zebra (measured 9.38 vs
@@ -581,8 +451,6 @@ def test_f1_token_column_compression_pin():
     from zebra_spark.codec import codecs
     from zebra_spark.sources.synth import f1_batch
 
-    if not codecs._zstd_available():
-        pytest.skip("pyarrow zstd codec unavailable")
     b = f1_batch(3000, seed=42)
     flat = np.ascontiguousarray(
         b.column("tokens").flatten().to_numpy(), dtype=np.int64
@@ -596,18 +464,12 @@ def test_f1_token_column_compression_pin():
 
 def test_fsst_z_roundtrip_and_size_policy_selection():
     """r5 ext (str codec 5): the FSST section re-entropy-coded by zstd.
-    FSST's dense byte codes still carry ~20-25% Huffman slack; the stack
-    rides the SAME decode-budget probe family as FSST, so balanced
-    selection changes only where FSST itself clears the budget — THERE
-    FSST_Z may also be selected (the added inflate on the ~0.18x section
-    is cheap and covered by FSST's budget); where the gate fails (this
-    sandbox), balanced is untouched and the size policy gains the full
-    win (document text: fsst 0.503 -> fsst-zstd 0.389 of zebra)."""
+    FSST's dense byte codes still carry ~20-25% Huffman slack.  FSST's
+    numpy decode is ~15x slower than snappy, so only the size policy
+    offers the stack; there it beats zstd-19 on word text."""
     from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import skip_strings
 
-    if not codecs._zstd_available():
-        pytest.skip("pyarrow zstd codec unavailable")
     rng = np.random.default_rng(8)
     words = [b"the", b"model", b"training", b"pipeline", b"compression",
              b"tokens", b"columnar"]
@@ -624,24 +486,18 @@ def test_fsst_z_roundtrip_and_size_policy_selection():
     ol, ob, p = decode_strings(c, pl, len(strings))
     assert ob == concat and (ol == lengths).all() and p == len(pl)
     assert skip_strings(c, pl, len(strings)) == len(pl)
-    # the stack must not lose to plain FSST on compressible text
-    c2, pl2, _ = encode_strings(
-        lengths, concat, allow={StrCodec.ZEBRA, StrCodec.FSST}
-    )
-    assert c2 == StrCodec.FSST and len(pl) < len(pl2)
-    # a win by FSST_Z must not advance the shared FSST loss streak
-    key = "test.fsstz.family"
-    try:
-        codecs._FSST_PROBE_CACHE[key] = (True, 63)
-        codecs._FSST_LOSS_STREAK[key] = codecs._PROBE_LOSS_LIMIT - 1
-        c3, _, _ = encode_strings(lengths, concat, probe_key=key)
-        if c3 == StrCodec.FSST_Z:
-            assert codecs._FSST_LOSS_STREAK[key] == 0
-            assert codecs._FSST_PROBE_CACHE[key][0] is True
-    finally:
-        codecs._FSST_PROBE_CACHE.pop(key, None)
-        codecs._FSST_LOSS_STREAK.pop(key, None)
-
+    # the stack must not lose to the plain FSST wire on compressible text
+    plain = codecs._lengths_section(lengths) + fsst.compress(concat)
+    assert len(pl) < len(plain)
+    # size policy: selected over zstd-19; balanced and speed never offer it
+    with codecs.codec_policy("size"):
+        c_size, pl_size, _ = encode_strings(lengths, concat)
+        _, pl_zstd, _ = encode_strings(lengths, concat, allow={StrCodec.ZSTD})
+    assert c_size == StrCodec.FSST_Z
+    assert len(pl_size) < len(pl_zstd)
+    for policy in ("balanced", "speed"):
+        with codecs.codec_policy(policy):
+            assert encode_strings(lengths, concat)[0] != StrCodec.FSST_Z
 
 def test_zstd_bt_roundtrip_and_selection():
     """r5 ext (int codec 9): FoR + byte-transposed planes + zstd-1.  The
@@ -652,8 +508,6 @@ def test_zstd_bt_roundtrip_and_selection():
     from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import skip_ints
 
-    if not codecs._zstd_available():
-        pytest.skip("pyarrow zstd codec unavailable")
     rng = np.random.default_rng(5)
     zipf = np.minimum(rng.zipf(1.2, size=200_000) - 1, 50_256).astype(np.int64)
     c, pl, m = encode_ints(zipf)
@@ -707,8 +561,6 @@ def test_zstd_bt_rejects_corrupted_wire():
     from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import _zstd_bt_build, plan_int_array
 
-    if not codecs._zstd_available():
-        pytest.skip("pyarrow zstd codec unavailable")
     rng = np.random.default_rng(13)
     v = rng.integers(0, 50000, 20000)
     _, thunk = _zstd_bt_build(v, plan_int_array(v), 10**12, hinted=True)
@@ -759,63 +611,6 @@ def test_pfor_sampled_feasibility_margin_keeps_boundary_cut():
     assert (out == vals).all() and p == len(payload)
 
 
-def test_fsst_balanced_gate_is_absolute_nspb(monkeypatch):
-    """r6: the FSST-family balanced decode gate is an ABSOLUTE ns/byte
-    bar (_FSST_NSPB_BUDGET), not a snappy wall-clock ratio — on a host
-    whose measured FSST decode clears the bar, balanced selection CAN
-    pick the FSST family; on this (throttled) sandbox it measures far
-    above the bar and balanced stays FSST-free.  Both directions pinned
-    by faking the single measurement point."""
-    from zebra_spark.codec import codecs
-
-    rng = np.random.default_rng(11)
-    words = [b"the", b"model", b"training", b"pipeline", b"compression",
-             b"tokens", b"columnar", b"dataset"]
-    strings = [
-        b" ".join(words[i] for i in rng.integers(0, len(words), size=40))
-        for _ in range(1200)
-    ]
-    lengths = np.array([len(s) for s in strings], dtype=np.int64)
-    concat = b"".join(strings)
-    assert len(concat) >= (64 << 10) and lengths.mean() >= 64
-
-    def run(fake_nspb, key):
-        monkeypatch.setattr(codecs, "_fsst_decode_nspb", lambda s, p: fake_nspb)
-        codecs._FSST_PROBE_CACHE.pop(key, None)
-        codecs._FSST_LOSS_STREAK.pop(key, None)
-        with codecs.codec_policy("balanced"):
-            c, _, m = encode_strings(lengths, concat, probe_key=key)
-        return c, m
-
-    # fast host: measured cost clears the bar -> FSST family selectable
-    c_fast, m_fast = run(codecs._FSST_NSPB_BUDGET * 0.5, "t.fast")
-    assert c_fast in (StrCodec.FSST, StrCodec.FSST_Z), m_fast
-    # slow host (this sandbox measures 32-48 ns/B): gate refuses
-    c_slow, _ = run(codecs._FSST_NSPB_BUDGET * 10, "t.slow")
-    assert c_slow not in (StrCodec.FSST, StrCodec.FSST_Z)
-
-
-def test_fsst_nspb_sandbox_measurement_regression():
-    """Pin the real measurement path: _fsst_decode_nspb returns a finite
-    positive ns/byte, and _probe_decode_ok agrees with the bar.  On this
-    sandbox the numpy symbol expansion measures >> _FSST_NSPB_BUDGET so
-    the probe must refuse; skip the refusal pin if a (future, faster)
-    host measures within 2x of the bar."""
-    from zebra_spark.codec import codecs, fsst as F
-    from zebra_spark.codec.warmup import warm_codec
-
-    warm_codec()
-    rng = np.random.default_rng(12)
-    words = [b"signal", b"entropy", b"symbol", b"expansion", b"table"]
-    sample = b" ".join(words[i] for i in rng.integers(0, len(words), size=12000))[: 64 << 10]
-    probe = F.compress(sample)
-    assert probe is not None
-    nspb = codecs._fsst_decode_nspb(sample, probe)
-    assert 0 < nspb < float("inf")
-    if nspb > 2 * codecs._FSST_NSPB_BUDGET:
-        assert not codecs._probe_decode_ok(sample, probe)
-
-
 def test_narrow_native_wire_equality():
     """r7 invariant: encoding a narrow-dtype array produces byte-identical
     wire to encoding the same values as int64, for every selected codec —
@@ -852,3 +647,76 @@ def test_narrow_native_wire_equality():
         if narrow.dtype == np.int32:
             out32, _ = decode_ints(c_n, p_n, len(narrow), prefer=np.int32)
             assert (out32.astype(np.int64) == wide).all(), name
+
+
+def _hex_ids(n=4000):
+    rng = np.random.default_rng(0)
+    return [rng.bytes(20).hex().encode() for _ in range(n)]
+
+
+def _history_columns():
+    rng = np.random.default_rng(3)
+    words = [b"the", b"model", b"training", b"pipeline", b"compression",
+             b"tokens", b"columnar", b"dataset"]
+    return {
+        "text": [
+            b" ".join(words[i] for i in rng.integers(0, len(words), size=6))
+            for _ in range(4000)
+        ],
+        "random": [rng.bytes(40) for _ in range(4000)],
+        "hex": _hex_ids(),
+    }
+
+
+@pytest.mark.parametrize("policy", ["balanced", "size"])
+@pytest.mark.parametrize("first,then", [("random", "text"), ("text", "hex")])
+def test_string_encode_is_history_independent(policy, first, then):
+    """Encoded bytes are a function of (values, policy): a column encoded
+    under a path that an unrelated column used before gets the same
+    bytes as the same column encoded under a path never seen."""
+    import pyarrow as pa
+
+    from zebra_spark.codec import codecs
+    from zebra_spark.codec.blocks import encode_batch
+
+    cols = _history_columns()
+
+    def encode(path, values):
+        batch = pa.record_batch([pa.array(values, pa.binary())], names=[path])
+        return encode_batch(batch)[0]
+
+    with codecs.codec_policy(policy):
+        fresh = encode(f"fresh.{first}.{then}.{policy}", cols[then])
+        shared = f"shared.{first}.{then}.{policy}"
+        encode(shared, cols[first])
+        assert encode(shared, cols[then]) == fresh
+
+
+def test_hex_ids_select_no_fsst_outside_size_policy():
+    """FSST's numpy decode runs at 32-48 ns/B, so no policy but ``size``
+    may select the FSST family, whatever snappy makes of the column.  On
+    hex ids balanced takes zstd (88,665 B; fsst-zstd would be 94,212 B)."""
+    from zebra_spark.codec import codecs
+
+    lengths, concat = _mk_strings(_hex_ids())
+    for policy in ("balanced", "speed"):
+        with codecs.codec_policy(policy):
+            c, pl, m = encode_strings(lengths, concat)
+        assert c not in (StrCodec.FSST, StrCodec.FSST_Z), (policy, m)
+        ol, ob, _ = decode_strings(c, pl, len(lengths))
+        assert ob == concat and (ol == lengths).all()
+        if policy == "balanced":
+            assert c == StrCodec.ZSTD and len(pl) <= 88_665
+
+
+def test_nested_delta_fails_closed():
+    """DELTA's inner codec is ZEBRA or PFOR; a crafted payload nesting
+    DELTA in DELTA must raise ValueError, not recurse until
+    RecursionError."""
+    from zebra_spark.codec.codecs import skip_ints
+
+    payload = (bytes(8) + bytes([IntCodec.DELTA])) * 4000
+    with pytest.raises(ValueError, match="inner codec"):
+        decode_ints(IntCodec.DELTA, payload, 5000)
+    with pytest.raises(ValueError, match="inner codec"):
+        skip_ints(IntCodec.DELTA, payload, 5000)

@@ -17,8 +17,10 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pytest
 
 from zebra_spark.codec.bytecodec import pack_strings, unpack_strings
+from zebra_spark.codec.codecs import StrCodec, decode_strings, skip_strings
 from zebra_spark.codec.intcodec import pack_int_array, unpack_int_array
 
 GOLDEN_INTS150_SHA = "9f4eba266a65264dabb3a37658a887fa2a18da9f0f2c9e91a41a9f93efb43931"
@@ -33,6 +35,45 @@ GOLDEN_STRINGS_HEX = (
     "000000000000000000000000380000002b0000003818646f632d303030090700"
     "3109070032090700330907003409073835646f632d303036646f632d303037"
 )
+
+
+# Wires whose encoder is gone (plain FSST, str id 2; DEFLATE, str id 3):
+# blocks written before stay readable.  Both payloads were produced by the
+# last encoder that offered them, forced through ``allow=``, from
+# _golden_word_rows(); the decoders must keep reading them.
+GOLDEN_FSST_HEX = (
+    "074600000017000000000000000506eaffffffffffffff000000002446599645"
+    "6906e93916c4990e400200000000000000000000000000000000000000000000"
+    "0000000000000000000000d60200007400000021026d70026e2002666f026865"
+    "0374686503666f7802627202636b02636f02657302696f0369636b026a75026f"
+    "77027175037265730373696f036d7073056d7072657304746865200462726f77"
+    "07636f6d70726573056a756d707305717569636b0a636f6d7072657373696f04"
+    "666f78200662726f776e2006717569636b200c636f6d7072657373696f6e2006"
+    "6a756d7073200874686520666f78200a666f782062726f776e20016e1e1e1305"
+    "1b1c1f13161a191c1b1a16191d1c131b14201d131a1c1b051c1d1d1d1905131c"
+    "1d1f171b1b1b1a1a14201a1c191b1d1420191e1e041d1a131c19171c131a1d1c"
+    "17131b1a191d18201b191c1a1d041a1b1b1b13041f1b131c161d1d1d1c1c1820"
+    "1c1a131d1b18201e1e13051b1c1f1316"
+)
+GOLDEN_ZLIB_HEX = (
+    "074600000017000000000000000506eaffffffffffffff000000002446599645"
+    "6906e93916c4990e400200000000000000000000000000000000000000000000"
+    "0000000000000000000000ac000000789c8d926b0e83300c83af92b38198c610"
+    "9451d038fe9a582a6e53247e347de48b1b59d9df83bcc2297bb97f8fb19fa40f"
+    "f3ba0d318e61b164b785df62c8e798d788ab2618442972862960870253154201"
+    "e8232abd6292e1471470d47fd2520d0f5eed9b1a24392249d1f7a11a80a16944"
+    "c33cdd8990baa3ac53fb41a679032ac3a4696bb6aaa867dd24433e14517f48ab"
+    "b2cab56f3ade7e466ecebea73c4be226ae61eae3c9fc03a8d91896"
+)
+
+
+def _golden_word_rows():
+    words = [b"the", b"quick", b"brown", b"fox", b"jumps", b"compression"]
+    return [
+        b" ".join(words[(i * 7 + j * j * 3 + i * i * j + (i * j) // 3) % 6]
+                  for j in range(6))
+        for i in range(20)
+    ]
 
 
 def test_golden_int_array_150():
@@ -100,3 +141,20 @@ def test_bp64_bit_order_is_sequential_lsb_first():
         assert [int(x) for x in got[0]] == want, f"k={k}"
         back = _bp64_unpack_group(got, k)
         np.testing.assert_array_equal(back, vals)
+
+
+@pytest.mark.parametrize(
+    "codec,hexstr",
+    [(StrCodec.FSST, GOLDEN_FSST_HEX), (StrCodec.ZLIB, GOLDEN_ZLIB_HEX)],
+    ids=["fsst", "zlib"],
+)
+def test_golden_decode_only_string_wires(codec, hexstr):
+    """decode_strings returns the pinned rows from the checked-in payload,
+    and skip_strings lands on the payload's end."""
+    rows = _golden_word_rows()
+    payload = bytes.fromhex(hexstr)
+    lengths, data, end = decode_strings(codec, payload, len(rows))
+    assert lengths.tolist() == [len(r) for r in rows]
+    assert data == b"".join(rows)
+    assert end == len(payload)
+    assert skip_strings(codec, payload, len(rows)) == len(payload)

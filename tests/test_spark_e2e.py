@@ -284,7 +284,7 @@ def test_encode_metrics_direct_matches_full_encode(spark, tmp_path):
     assert fold["raw"] == full["raw"]
     assert fold["zebra"] == full["zebra"]
     # enc_bytes is NOT bit-reproducible across jobs in one session: the
-    # selector's probe/hint caches live in the REUSED python workers, so
+    # int selector's hint cache lives in the REUSED python workers, so
     # selection can differ slightly with worker history (r5 convention —
     # verify_blocks pins determinism under the speed policy instead).
     # Bound it: within 1% of the full encode and never above zebra.

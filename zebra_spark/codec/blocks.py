@@ -270,7 +270,7 @@ def _encode_column(
     ) or pa.types.is_large_binary(t):
         lengths, concat = _binary_parts(arr)
         null_free = pc.fill_null(arr, b"" if not pa.types.is_string(t) else "") if arr.null_count else arr
-        c, p, m = encode_strings(lengths, concat, arrow_array=null_free, probe_key=key)
+        c, p, m = encode_strings(lengths, concat, arrow_array=null_free)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path, m)
@@ -332,10 +332,10 @@ def _map_as_list_type(t: pa.DataType) -> pa.DataType:
 def encode_batch(batch: pa.RecordBatch, use_hints: bool = True):
     """Encode a RecordBatch into one striped block. Returns (payload, meta).
 
-    ``use_hints=False`` disables the per-column probe/hint caches so the
-    encode is a pure function of the batch values (the audit path in
-    operators/verify.py needs a deterministic re-encode; the caches make
-    production selection depend on which blocks preceded this one)."""
+    ``use_hints=False`` disables the int selector's per-column hint cache
+    so the encode is a pure function of the batch values (the audit path
+    in operators/verify.py needs a deterministic re-encode; the cache
+    makes production selection depend on which blocks preceded this one)."""
     out: list[bytes] = [
         BLOCK_MAGIC,
         np.uint32(batch.num_rows).astype("<u4").tobytes(),

@@ -81,8 +81,8 @@ class IntCodec:
 class StrCodec:
     ZEBRA = 0  # lengths int_array + snappy concat (Array.hs:44-68)
     DICT = 1  # unique strings + index int column
-    FSST = 2  # BPE-style symbol-table compression + lengths
-    ZLIB = 3  # DEFLATE concat (stdlib; r5 ext) — probe-gated like FSST
+    FSST = 2  # BPE-style symbol-table compression + lengths (decode-only)
+    ZLIB = 3  # DEFLATE concat (stdlib; r5 ext) (decode-only)
     ZSTD = 4  # zstd concat (pyarrow codec; r5 ext) — same wire frame as ZLIB
     FSST_Z = 5  # FSST section wrapped in zstd (symbols, then entropy)
 
@@ -440,8 +440,6 @@ def _zstd_bt_build(
     transposed planes don't have.  Byte-aligned transforms only; the
     compressed size IS the costing, so a sampled probe skips the full
     compress when the projection can't clear the selection bar."""
-    if not _zstd_available():
-        return None
     import pyarrow as pa
 
     n = len(values)
@@ -882,6 +880,15 @@ def _dict_split(values: np.ndarray, zplan):
     return uniq, inverse.astype(_I64)
 
 
+def _delta_inner(mv, pos: int) -> int:
+    """DELTA's inner codec byte.  The encoder writes only ZEBRA or PFOR;
+    anything else (a nested DELTA would recurse without bound) is corrupt."""
+    inner = mv[pos + 8]
+    if inner not in (IntCodec.ZEBRA, IntCodec.PFOR):
+        raise ValueError(f"DELTA inner codec {inner} is not zebra or pfor")
+    return inner
+
+
 def skip_ints(codec: int, buf, n: int, pos: int = 0) -> int:
     """Advance past an int-codec payload without decoding it.
 
@@ -908,7 +915,7 @@ def skip_ints(codec: int, buf, n: int, pos: int = 0) -> int:
         return int_array_end(pos + 8)
     if codec == IntCodec.DELTA:
         # i64 first | u8 inner_codec | inner payload (n-1 deltas)
-        return skip_ints(mv[pos + 8], mv, n - 1, pos + 9)
+        return skip_ints(_delta_inner(mv, pos), mv, n - 1, pos + 9)
     if codec == IntCodec.PFOR:
         b = mv[pos]
         n_exc = int(np.frombuffer(mv[pos + 9 : pos + 13], dtype="<u4")[0])
@@ -1014,8 +1021,7 @@ def decode_ints(codec: int, buf, n: int, pos: int = 0, prefer=None):
         return out, p
     if codec == IntCodec.DELTA:
         first = int(np.frombuffer(mv[pos : pos + 8], dtype="<i8")[0])
-        inner = mv[pos + 8]
-        deltas, p = decode_ints(inner, mv, n - 1, pos + 9)
+        deltas, p = decode_ints(_delta_inner(mv, pos), mv, n - 1, pos + 9)
         out = np.empty(n, dtype=_I64)
         out[0] = first
         with np.errstate(over="ignore"):
@@ -1134,32 +1140,21 @@ def zebra_strings_size(lengths: np.ndarray, concat: bytes) -> int:
     return len(pack_strings(lengths, concat))
 
 
-# speed-vs-size policy for expensive string codecs (FSST auto-probe):
-#   balanced (default) — require both the size win AND a bounded decode cost
-#   size               — size-only gate (r1/r2 behavior)
-#   speed              — never auto-fire FSST (explicit allow= still works)
+# codec policy (ZS_CODEC_POLICY; codec_policy() overrides it).  Every
+# policy takes the exact smallest payload among the candidates it offers;
+# the policies differ only in the menu and the int decode handicaps:
+#   balanced (default) — strings: zebra-snappy, dict, zstd-12; int DELTA
+#                        and ZSTD_BT must beat their decode handicaps
+#   size               — strings: zebra-snappy, dict, zstd-19, fsst-zstd;
+#                        no int handicaps
+#   speed              — strings: zebra-snappy, dict; no int ZSTD_BT
 _CODEC_POLICY = os.environ.get("ZS_CODEC_POLICY", "balanced")
-# FSST-family balanced gate is ABSOLUTE ns/byte (r6): the old snappy-ratio
-# gate measured both sides on this sandbox's throttled clock, so the
-# decision tracked the host's instantaneous grant instead of the codec —
-# on a host where the numpy symbol expansion actually decodes fast, FSST/
-# FSST_Z could never prove it because snappy sped up by the same grant.
-# The budget is the SAME relative bar against a pinned nominal snappy
-# decompress cost (~0.6 ns/byte on an unthrottled core; snappy's own
-# published order of magnitude): 4.0 x 0.6 = 2.4 ns/byte.  Measured on
-# this sandbox: snappy 1.7-2.5 ns/B (throttled), FSST 32-48 ns/B — fails
-# the bar by >13x, so this host's balanced selection is unchanged; a host
-# whose measured FSST decode clears 2.4 ns/B selects it (pinned by
-# tests/test_codecs.py).
-_FSST_NSPB_BUDGET = float(os.environ.get("ZS_FSST_NSPB_BUDGET", "2.4"))
 
 
 @_contextlib.contextmanager
 def codec_policy(policy: str):
-    """Temporarily override the codec policy for the calling thread's
-    encodes.  operators/verify.py re-encodes under ``speed`` so the audit
-    pass is probe-free (no wall-clock-dependent FSST/ZLIB decode probes)
-    and therefore a deterministic function of the block values."""
+    """Temporarily override the codec policy for this process's encodes.
+    operators/verify.py re-encodes under ``speed``, the cheapest menu."""
     global _CODEC_POLICY
     prev = _CODEC_POLICY
     _CODEC_POLICY = policy
@@ -1178,63 +1173,27 @@ _DECODE_HANDICAP = {
     IntCodec.ZSTD_BT: _ZSTD_BT_HANDICAP,
 }
 
-# probe-gate decisions per column path: {key: (fsst_worth, uses_left)}.
-# Spark python workers are REUSED across jobs, so a key can outlive one
-# dataset; the 64-block revalidation bounds any staleness, and the cache
-# only gates the PROBE — per-block size comparison still decides.
-_FSST_PROBE_CACHE: dict[str, tuple[bool, int]] = {}
-
-
-# general-purpose-compressor auto-probe: same machinery as FSST — entropy
-# coding typically beats snappy 2-3x on text at a decode cost between
-# snappy's and FSST's, so it fills the gap the balanced policy leaves when
-# FSST fails its decode budget.  The candidate is zstd via the pyarrow
-# codec when available (measured on document text vs DEFLATE-6: level 12
-# is 3% smaller, 1.4x faster compress AND 4.4x faster decompress — a
-# strict dominance), falling back to stdlib DEFLATE otherwise.  Both wire
-# ids stay decodable forever; only the CANDIDATE choice depends on the
-# environment.
-_GP_DECODE_BUDGET = 4.0
-_ZLIB_LEVEL = 6
-_ZSTD_LEVEL = 12  # balanced: beats DEFLATE-6 on size, compress and decode
+# zstd string candidate (pyarrow codec).  Measured on document text vs
+# DEFLATE-6: level 12 is 3% smaller, 1.4x faster to compress and 4.4x
+# faster to decompress.
+_ZSTD_LEVEL = 12  # balanced, and the entropy stage of fsst-zstd
 _ZSTD_LEVEL_SIZE = 19  # size policy: ~19% smaller than DEFLATE-6 on text
+# zstd is offered from 16 KB: below it the bytes at stake are few, and
+# small low-cardinality columns keep dict's gather decode (a 9 KB column
+# of five repeating words would go to zstd by ~20 B)
+_ZSTD_MIN = 16 << 10
 _GP_MAX_FULL = 32 << 20  # bound the per-block full-compress latency
-_GP_PROBE_CACHE: dict[str, tuple[bool, int]] = {}
-
-# cached-positive probes attempt the expensive candidate on EVERY block of
-# the column; if it keeps losing the per-block size selection anyway, flip
-# the cache negative (the 64-block revalidation will re-probe) instead of
-# paying full FSST/zstd for a candidate that is then discarded
-_PROBE_LOSS_LIMIT = 4
-_FSST_LOSS_STREAK: dict[str, int] = {}
-_GP_LOSS_STREAK: dict[str, int] = {}
-
-_HAVE_ZSTD: bool | None = None
+# fsst-zstd: FSST trains at ~3 MB/s and its numpy decode runs at 32-48
+# ns/B (snappy: ~2 ns/B), so it is a size-policy candidate only, costed on
+# a 64 KB sample before the whole column pays for it
+_FSST_SAMPLE = 64 << 10
+_FSST_MAX = 4 << 20
 
 
-def _zstd_available() -> bool:
-    global _HAVE_ZSTD
-    if _HAVE_ZSTD is None:
-        try:
-            import pyarrow as pa
+def _zstd_compress(data, level: int) -> bytes:
+    import pyarrow as pa
 
-            pa.Codec("zstd", compression_level=_ZSTD_LEVEL)
-            _HAVE_ZSTD = True
-        except Exception:
-            _HAVE_ZSTD = False
-    return _HAVE_ZSTD
-
-
-def _gp_compress(data, gp_id: int, level: int) -> bytes:
-    if gp_id == StrCodec.ZSTD:
-        import pyarrow as pa
-
-        return pa.Codec("zstd", compression_level=level).compress(
-            data, asbytes=True
-        )
-    import zlib
-
-    return zlib.compress(data, level)
+    return pa.Codec("zstd", compression_level=level).compress(data, asbytes=True)
 
 
 def _gp_decompress(comp, gp_id: int, expected_len: int) -> bytes:
@@ -1249,49 +1208,17 @@ def _gp_decompress(comp, gp_id: int, expected_len: int) -> bytes:
     return zlib.decompress(bytes(comp))
 
 
-def _gp_probe_decode_ok(sample: bytes, gp_probe: bytes, gp_id: int) -> bool:
-    """Relative decode timing, candidate vs the snappy path ZEBRA uses."""
-    import time
-
-    import pyarrow as pa
-
-    try:
-        snappy = pa.Codec("snappy")
-        snap = snappy.compress(sample)
-        t0 = time.perf_counter()
-        snappy.decompress(snap, len(sample))
-        t_snappy = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _gp_decompress(gp_probe, gp_id, len(sample))
-        t_gp = time.perf_counter() - t0
-        return t_gp <= _GP_DECODE_BUDGET * max(t_snappy, 1e-6)
-    except Exception:
-        return False
+def _fsst_zstd(data: bytes):
+    """``(FSST section, its zstd frame)``, or None when FSST declines."""
+    fs = _fsst.compress(data)
+    return None if fs is None else (fs, _zstd_compress(fs, _ZSTD_LEVEL))
 
 
-def _fsst_decode_nspb(sample: bytes, fsst_probe: bytes) -> float:
-    """Measured FSST decode cost of the 64 KB sample in ns per OUTPUT
-    byte (best of 2 back-to-back runs to damp scheduler blips)."""
-    import time
-
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _fsst.decompress(memoryview(fsst_probe), 0)
-        dt = time.perf_counter() - t0
-        best = min(best, dt)
-    return best * 1e9 / max(len(sample), 1)
-
-
-def _probe_decode_ok(sample: bytes, fsst_probe: bytes) -> bool:
-    """Gate the FSST family's balanced-policy decode budget on ABSOLUTE
-    ns/byte against a pinned nominal-snappy bar (_FSST_NSPB_BUDGET) —
-    see the constant's comment for why the old snappy-RATIO gate tracked
-    the sandbox's grant instead of the codec."""
-    try:
-        return _fsst_decode_nspb(sample, fsst_probe) <= _FSST_NSPB_BUDGET
-    except Exception:
-        return False  # cannot prove the decode budget -> do not auto-fire
+def _lengths_section(lengths: np.ndarray) -> bytes:
+    """``u8 codec | u32 size | payload`` of the lengths column: the head of
+    the fsst, zlib, zstd and fsst-zstd wires."""
+    lcodec, lpayload, _ = encode_ints(lengths)
+    return bytes([lcodec]) + np.uint32(len(lpayload)).astype("<u4").tobytes() + lpayload
 
 
 def encode_strings(
@@ -1299,32 +1226,37 @@ def encode_strings(
     concat: bytes,
     allow: set[int] | None = None,
     arrow_array=None,
-    probe_key: str | None = None,
 ):
     """Select + encode a string column. Returns ``(codec_id, payload, meta)``.
+
+    The result is a function of the values and the codec policy alone:
+    every candidate on the menu is built (or shown unable to win) and the
+    exact smallest payload is taken.  zebra-snappy is always on the menu,
+    so the payload is never larger than zebra's.  The rest of the menu:
+
+    - dict, for n >= 16 strings that repeat enough (every policy);
+    - zstd over the concatenated bytes, for 16 KB up to ``_GP_MAX_FULL``
+      (``balanced`` at level 12, ``size`` at level 19);
+    - fsst-zstd, for 256 B up to 4 MB (``size`` only), when FSST+zstd of
+      the first 64 KB beats the best ratio so far.
+
+    ``allow``: when given, the menu is exactly these ids plus zebra-snappy,
+    whatever the policy.  Plain fsst (id 2) and zlib (id 3) are decode-only.
 
     ``arrow_array``: optional null-free arrow binary array of the same
     strings; when present the DICT candidate uses Arrow's vectorized
     ``dictionary_encode`` instead of a Python split loop.
-
-    ``probe_key``: stable column identity (e.g. the block column path).
-    The FSST auto-probe costs ~0.25 s per 64 KB sample, so its GATE
-    decision is cached per column and re-validated every 64 blocks — at
-    100 TB the probe would otherwise re-run for every block of the same
-    column.  Only the gate is cached; the <= zebra bound still compares
-    actual candidate sizes per block.
     """
     lengths = np.ascontiguousarray(lengths, dtype=_I64)
     n = len(lengths)
 
-    def allowed(c):
-        return allow is None or c in allow
+    def offered(c, policies=("balanced", "size", "speed")):
+        return c in allow if allow is not None else _CODEC_POLICY in policies
 
     zebra_payload = pack_strings(lengths, concat)
     best = (StrCodec.ZEBRA, zebra_payload)
-    candidates = {StrCodec.ZEBRA: len(zebra_payload)}
 
-    if allowed(StrCodec.DICT) and n >= 16:
+    if offered(StrCodec.DICT) and n >= 16:
         dict_parts = _string_dict_split(lengths, concat, n, arrow_array)
         if dict_parts is not None:
             u_len, u_concat, idx = dict_parts
@@ -1335,182 +1267,47 @@ def encode_strings(
                 + bytes([icodec])
                 + ipayload
             )
-            candidates[StrCodec.DICT] = len(payload)
             if len(payload) < len(best[1]):
                 best = (StrCodec.DICT, payload)
 
-    # FSST training costs ~hundreds of vectorized passes (~3 MB/s vs
-    # snappy's ~300 MB/s), so by default only attempt it when snappy
-    # compressed poorly.  ZS_FSST=aggressive widens to any large-text
-    # column (measured on real docs: fsst 0.17 vs snappy 0.36 ratio — a
-    # 2.1x size win when encode CPU is cheaper than storage).
-    fsst_forced = allow is not None and StrCodec.FSST in allow
-    aggressive = os.environ.get("ZS_FSST", "") == "aggressive"
-    avg_len = len(concat) / n if n else 0
-    cached = _FSST_PROBE_CACHE.get(probe_key) if probe_key else None
-    if cached is not None and cached[1] > 0:
-        _FSST_PROBE_CACHE[probe_key] = (cached[0], cached[1] - 1)
-        cache_says_yes = bool(cached[0])
-        probe_allowed = False
-    else:
-        cache_says_yes = False
-        probe_allowed = True
-    fsst_worth = (
-        len(concat) >= 256
-        and len(concat) <= (4 << 20)
-        and (
-            len(zebra_payload) > 0.6 * (len(concat) + 8 * n)
-            or (aggressive and avg_len >= 64)
-        )
-    )
-    # a cached-positive probe means FSST won on a sibling block of this
-    # column: attempt it on every subsequent block, not 1-in-64 (r3 bug:
-    # the heuristic recompute overwrote the cache-hit flag)
-    if cache_says_yes and len(concat) <= (4 << 20):
-        fsst_worth = True
-    if (
-        probe_allowed
-        and allowed(StrCodec.FSST)
-        and not (fsst_forced or fsst_worth or aggressive)
-        and len(concat) >= (64 << 10)
-        and avg_len >= 64
-        and _CODEC_POLICY != "speed"
-    ):
-        # sampled probe: FSST costs ~100x snappy to run, so prove the win
-        # on the first 64 KB before paying for the full column.  Full FSST
-        # runs only when the sample beats the best candidate by >= 20%
-        # on SIZE — and, under the default "balanced" policy, only when
-        # the sample's measured DECODE cost clears the absolute
-        # _FSST_NSPB_BUDGET ns/byte bar (r2 lesson: a size-only gate let
-        # FSST auto-fire on document text and the decode leg regressed
-        # 3.2x; r6 lesson: a snappy-RATIO gate tracked the host grant, not
-        # the codec).  ZS_CODEC_POLICY=size restores the size-only gate;
-        # ZS_CODEC_POLICY=speed disables the auto-probe entirely.
-        sample = concat[: 64 << 10]
-        probe = _fsst.compress(sample)
-        decision = False
-        if probe is not None:
-            best_ratio = len(best[1]) / (len(concat) + 8 * n)
-            if len(probe) / len(sample) < 0.8 * best_ratio:
-                if _CODEC_POLICY == "size" or _probe_decode_ok(sample, probe):
-                    decision = True
-                    fsst_worth = len(concat) <= (4 << 20)
-        if probe_key:
-            _FSST_PROBE_CACHE[probe_key] = (decision, 63)
+    # zstd and fsst-zstd share the lengths head; it is encoded only once a
+    # compressed body alone beats the best payload so far
+    head = b""
 
-    fsstz_forced = allow is not None and StrCodec.FSST_Z in allow
+    def consider(codec, body):
+        nonlocal best, head
+        if len(body) < len(best[1]):
+            head = head or _lengths_section(lengths)
+            if len(head) + len(body) < len(best[1]):
+                best = (codec, head + body)
+
     if (
-        len(concat) >= 256
-        and (
-            (allowed(StrCodec.FSST) and (fsst_forced or fsst_worth))
-            or fsstz_forced
-        )
+        offered(StrCodec.ZSTD, ("balanced", "size"))
+        and _ZSTD_MIN <= len(concat) <= _GP_MAX_FULL
     ):
-        fs = _fsst.compress(concat)
-        if fs is not None:
-            lcodec, lpayload, _ = encode_ints(lengths)
-            head = (
-                bytes([lcodec])
-                + np.uint32(len(lpayload)).astype("<u4").tobytes()
-                + lpayload
-            )
-            if allowed(StrCodec.FSST):
-                payload = head + fs
-                candidates[StrCodec.FSST] = len(payload)
-                if len(payload) < len(best[1]):
-                    best = (StrCodec.FSST, payload)
-            # FSST_Z: the FSST section re-entropy-coded by zstd (FSST's
-            # codes are dense byte symbols that a Huffman/FSE stage still
-            # shrinks ~20-25%; the symbol pass already paid the slow
-            # training, the zstd pass on the ~0.18x output is near-free).
-            # Measured on document text: fsst 0.177 -> fsst+zstd 0.136-0.140
-            # of raw.  Decode adds one fast inflate before the (already
-            # budget-gated) symbol expansion, so the candidate rides the
-            # SAME probe/streak family as FSST.
-            if allowed(StrCodec.FSST_Z) and _zstd_available():
-                lvl = 12 if _CODEC_POLICY == "size" else 1
-                comp = _gp_compress(fs, StrCodec.ZSTD, lvl)
-                payload = (
-                    head
-                    + np.uint32(len(fs)).astype("<u4").tobytes()
+        level = _ZSTD_LEVEL_SIZE if _CODEC_POLICY == "size" else _ZSTD_LEVEL
+        comp = _zstd_compress(concat, level)
+        consider(StrCodec.ZSTD, np.uint32(len(comp)).astype("<u4").tobytes() + comp)
+
+    if offered(StrCodec.FSST_Z, ("size",)) and 256 <= len(concat) <= _FSST_MAX:
+        # FSST's codes are dense byte symbols that zstd's entropy stage
+        # still shrinks ~20-25% (document text: fsst 0.177 -> fsst-zstd
+        # 0.136-0.140 of raw)
+        sample = concat[:_FSST_SAMPLE]
+        fz = _fsst_zstd(sample)
+        if fz is not None and len(fz[1]) * len(concat) < len(best[1]) * len(sample):
+            if len(sample) < len(concat):
+                fz = _fsst_zstd(concat)
+            if fz is not None:
+                fs, comp = fz
+                consider(
+                    StrCodec.FSST_Z,
+                    np.uint32(len(fs)).astype("<u4").tobytes()
                     + np.uint32(len(comp)).astype("<u4").tobytes()
-                    + comp
+                    + comp,
                 )
-                candidates[StrCodec.FSST_Z] = len(payload)
-                if len(payload) < len(best[1]):
-                    best = (StrCodec.FSST_Z, payload)
-
-    # general-purpose-compressor candidate: zstd when pyarrow has it, else
-    # DEFLATE; probe-gated exactly like FSST (its own cache + decode
-    # budget).  The probe itself is cheap (~1 ms/64 KB) so it fires on any
-    # sizeable text column; the FULL compress only runs on a probe win.
-    if _zstd_available() and allowed(StrCodec.ZSTD):
-        gp_id = StrCodec.ZSTD
-        gp_level = _ZSTD_LEVEL_SIZE if _CODEC_POLICY == "size" else _ZSTD_LEVEL
-    else:
-        gp_id, gp_level = StrCodec.ZLIB, _ZLIB_LEVEL
-    gp_forced = allow is not None and gp_id in allow
-    zcached = _GP_PROBE_CACHE.get(probe_key) if probe_key else None
-    if zcached is not None and zcached[1] > 0:
-        _GP_PROBE_CACHE[probe_key] = (zcached[0], zcached[1] - 1)
-        gp_worth = bool(zcached[0])
-        zprobe_allowed = False
-    else:
-        gp_worth = False
-        zprobe_allowed = True
-    if (
-        zprobe_allowed
-        and allowed(gp_id)
-        and not gp_forced
-        and len(concat) >= (16 << 10)
-        and _CODEC_POLICY != "speed"
-    ):
-        sample = concat[: 64 << 10]
-        zprobe = _gp_compress(sample, gp_id, gp_level)
-        decision = False
-        best_ratio = len(best[1]) / (len(concat) + 8 * n)
-        if len(zprobe) / len(sample) < 0.9 * best_ratio:
-            if _CODEC_POLICY == "size" or _gp_probe_decode_ok(
-                sample, zprobe, gp_id
-            ):
-                decision = True
-        gp_worth = decision and len(concat) <= _GP_MAX_FULL
-        if probe_key:
-            _GP_PROBE_CACHE[probe_key] = (decision, 63)
-    if gp_worth and len(concat) > _GP_MAX_FULL:
-        gp_worth = False  # cached-positive on an oversized block
-    if allowed(gp_id) and len(concat) >= 256 and (gp_forced or gp_worth):
-        comp = _gp_compress(concat, gp_id, gp_level)
-        lcodec, lpayload, _ = encode_ints(lengths)
-        payload = (
-            bytes([lcodec])
-            + np.uint32(len(lpayload)).astype("<u4").tobytes()
-            + lpayload
-            + np.uint32(len(comp)).astype("<u4").tobytes()
-            + comp
-        )
-        candidates[gp_id] = len(payload)
-        if len(payload) < len(best[1]):
-            best = (gp_id, payload)
 
     codec, payload = best
-    if probe_key:
-        # FSST and FSST_Z are one probe family: a win by either resets
-        # the streak (FSST_Z winning must not flip the shared cache off)
-        for cids, cache, streak in (
-            ((StrCodec.FSST, StrCodec.FSST_Z), _FSST_PROBE_CACHE, _FSST_LOSS_STREAK),
-            ((gp_id,), _GP_PROBE_CACHE, _GP_LOSS_STREAK),
-        ):
-            if not any(c in candidates for c in cids):
-                continue
-            if codec in cids:
-                streak[probe_key] = 0
-            else:
-                s = streak.get(probe_key, 0) + 1
-                streak[probe_key] = s
-                if s >= _PROBE_LOSS_LIMIT and cache.get(probe_key, (False, 0))[0]:
-                    cache[probe_key] = (False, 63)
-                    streak[probe_key] = 0
     meta = {
         "codec": StrCodec.NAMES[codec],
         "n": n,

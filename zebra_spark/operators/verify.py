@@ -3,13 +3,13 @@
 The operational complement of the round-trip law: at 100 TB you cannot
 diff decoded output against the source every day, but you CAN stream an
 audit pass that, per block, (a) checks the stored crc32, (b) decodes the
-payload, (c) re-encodes the decoded batch HINT-FREE and PROBE-FREE (the
-production selector's per-column hint cache and timed FSST/ZLIB probes
-make live encodes depend on preceding blocks and wall-clock; the audit
-re-encode runs under the ``speed`` policy so it is a deterministic
-function of the block values) and confirms the re-encode decodes
-BIT-identically — compared via IPC bytes, so NaN payload bits and signed
-zeros are held to the same bit-exact standard as the round-trip tests.
+payload, (c) re-encodes the decoded batch HINT-FREE (the int selector's
+per-column hint cache makes live encodes depend on preceding blocks; the
+audit re-encode runs with ``use_hints=False`` under the ``speed`` policy,
+the cheapest menu, so it is a function of the block values alone) and
+confirms the re-encode decodes BIT-identically — compared via IPC bytes,
+so NaN payload bits and signed zeros are held to the same bit-exact
+standard as the round-trip tests.
 Byte equality of the payloads is kept as the cheap fast path.
 
 Scope (what the law can and cannot catch): crc_ok catches storage

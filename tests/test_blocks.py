@@ -306,24 +306,22 @@ def test_map_type_roundtrip():
 def test_verify_ipc_comparison_is_nan_safe_and_bit_strict():
     """r5 review fix: RecordBatch.equals treats NaN != NaN, so the audit's
     content-equality law false-alarmed on any NaN-bearing float block
-    whose hint-free re-encode differed bytewise.  The IPC-byte comparison
+    whose speed-policy re-encode differed bytewise.  The IPC-byte comparison
     is NaN-safe yet still bit-strict (different NaN payload bits differ)."""
-    from zebra_spark.codec import codecs
     from zebra_spark.operators.verify import _ipc_bytes
 
     vals = np.array([1.5, np.nan, -0.0, np.inf, 2.75], dtype=np.float64)
     rb = pa.RecordBatch.from_pydict({"x": pa.array(vals)})
-    payload, _ = encode_batch(rb, use_hints=False)
+    payload, _ = encode_batch(rb)
     d1 = decode_batch(payload, rb.schema)
     d2 = decode_batch(payload, rb.schema)
     assert not d1.equals(d2)  # the arrow pitfall this guards against
     assert _ipc_bytes(d1) == _ipc_bytes(d2)
-    with codecs.codec_policy("speed"):
-        re_payload, _ = encode_batch(d1, use_hints=False)
+    re_payload, _ = encode_batch(d1, "speed")
     assert _ipc_bytes(decode_batch(re_payload, rb.schema)) == _ipc_bytes(d1)
     # a different NaN bit pattern is a different value to the audit
     v2 = vals.copy()
     v2[1] = np.uint64(0x7FF8000000000001).view(np.float64)
     rb2 = pa.RecordBatch.from_pydict({"x": pa.array(v2)})
-    p2, _ = encode_batch(rb2, use_hints=False)
+    p2, _ = encode_batch(rb2)
     assert _ipc_bytes(decode_batch(p2, rb2.schema)) != _ipc_bytes(d1)

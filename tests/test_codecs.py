@@ -142,11 +142,8 @@ def test_fsst_symbol_length_capped_at_u8():
         assert out == data and pos == len(sec)
     # and through the string selector under the size policy (the path
     # that crashed: FSST on a 64 KB sample of this text)
-    from zebra_spark.codec import codecs
-
     lengths = np.array([len(s) for s in reps], dtype=np.int64)
-    with codecs.codec_policy("size"):
-        c, pl, _ = encode_strings(lengths, data)
+    c, pl, _ = encode_strings(lengths, data, policy="size")
     ol, ob, _ = decode_strings(c, pl, len(reps))
     assert ob == data
 
@@ -289,21 +286,18 @@ def test_sampled_gates_keep_winners_at_scale():
     assert (out2 == lowcard).all()
 
 
-def test_delta_selected_through_handicap_on_large_size_win(monkeypatch):
+def test_delta_selected_through_handicap_on_large_size_win():
     """Under the balanced policy DELTA pays a 5% decode handicap; a column
     where DELTA is >15% smaller than every other candidate clears that bar
     arithmetically (1.05 * 0.85 < 1) and must still be selected.  (r4
     shipped an explicit "waiver" branch for this case; r4 ADVICE proved it
     dead code — the handicap alone produces the same selection — so r5
     removed it and this test pins the selection behavior.)"""
-    from zebra_spark.codec import codecs
-
-    monkeypatch.setattr(codecs, "_CODEC_POLICY", "balanced")
     rng = np.random.default_rng(5)
     # monotonic with ~1000-sized steps: zebra/pfor need ~23 bits for the
     # absolute range, delta needs ~11 for the steps -> >15% smaller
     vals = np.cumsum(rng.integers(950, 1050, size=8192)).astype(np.int64)
-    c, payload, meta = encode_ints(vals)
+    c, payload, meta = encode_ints(vals, policy="balanced")
     assert c == IntCodec.DELTA, IntCodec.NAMES[c]
     out, _ = decode_ints(c, payload, len(vals))
     np.testing.assert_array_equal(out, vals)
@@ -407,7 +401,6 @@ def test_zstd_string_codec_roundtrip_and_selection():
     the pyarrow codec is available (strictly dominates DEFLATE-6 on text:
     smaller, faster compress, 4x faster decompress).  Forced and auto
     paths roundtrip; the wire is skippable; DEFLATE stays decodable."""
-    from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import skip_strings
 
     rng = np.random.default_rng(7)
@@ -428,16 +421,14 @@ def test_zstd_string_codec_roundtrip_and_selection():
     assert skip_strings(c, pl, len(strings)) == len(pl)
     assert m["bytes"] < 0.6 * m["zebra_bytes"]
     # balanced selects zstd on this text
-    with codecs.codec_policy("balanced"):
-        c2, pl2, _ = encode_strings(lengths, concat)
+    c2, pl2, _ = encode_strings(lengths, concat, policy="balanced")
     assert c2 == StrCodec.ZSTD
     ol, ob, _ = decode_strings(c2, pl2, len(strings))
     assert ob == concat and (ol == lengths).all()
     # size policy compresses at least as well as balanced
-    with codecs.codec_policy("size"):
-        c4, pl4, _ = encode_strings(
-            lengths, concat, allow={StrCodec.ZEBRA, StrCodec.ZSTD}
-        )
+    c4, pl4, _ = encode_strings(
+        lengths, concat, allow={StrCodec.ZEBRA, StrCodec.ZSTD}, policy="size"
+    )
     assert c4 == StrCodec.ZSTD and len(pl4) <= len(pl)
     ol, ob, _ = decode_strings(c4, pl4, len(strings))
     assert ob == concat and (ol == lengths).all()
@@ -448,7 +439,6 @@ def test_f1_token_column_compression_pin():
     keep selecting ZSTD_BT and land well under zebra (measured 9.38 vs
     16.13 b/tok = 0.58; the pin leaves slack for data-generation and
     library drift but catches a selector regression immediately)."""
-    from zebra_spark.codec import codecs
     from zebra_spark.sources.synth import f1_batch
 
     b = f1_batch(3000, seed=42)
@@ -490,22 +480,21 @@ def test_fsst_z_roundtrip_and_size_policy_selection():
     plain = codecs._lengths_section(lengths) + fsst.compress(concat)
     assert len(pl) < len(plain)
     # size policy: selected over zstd-19; balanced and speed never offer it
-    with codecs.codec_policy("size"):
-        c_size, pl_size, _ = encode_strings(lengths, concat)
-        _, pl_zstd, _ = encode_strings(lengths, concat, allow={StrCodec.ZSTD})
+    c_size, pl_size, _ = encode_strings(lengths, concat, policy="size")
+    _, pl_zstd, _ = encode_strings(
+        lengths, concat, allow={StrCodec.ZSTD}, policy="size"
+    )
     assert c_size == StrCodec.FSST_Z
     assert len(pl_size) < len(pl_zstd)
     for policy in ("balanced", "speed"):
-        with codecs.codec_policy(policy):
-            assert encode_strings(lengths, concat)[0] != StrCodec.FSST_Z
+        assert encode_strings(lengths, concat, policy=policy)[0] != StrCodec.FSST_Z
 
 def test_zstd_bt_roundtrip_and_selection():
     """r5 ext (int codec 9): FoR + byte-transposed planes + zstd-1.  The
     FSE entropy stage wins where bit-packing pays the chunk width for
     zipf-distributed values (the F1 token column: 16.00 -> 9.38 b/tok).
     Under balanced it carries a 1.15 decode handicap; policy `speed`
-    never offers it (keeps the verify re-encode audit deterministic)."""
-    from zebra_spark.codec import codecs
+    never offers it (the cheapest menu, used by the verify re-encode)."""
     from zebra_spark.codec.codecs import skip_ints
 
     rng = np.random.default_rng(5)
@@ -533,37 +522,26 @@ def test_zstd_bt_roundtrip_and_selection():
         np.arange(2048, dtype=np.int64) * 3 - 99,
     ):
         v = np.asarray(v, dtype=np.int64)
-        sz, thunk = _zstd_bt_build(v, plan_int_array(v), 10**12, hinted=True)
+        sz, thunk = _zstd_bt_build(v, plan_int_array(v), 10**12)
         pl2 = thunk()
         assert sz == len(pl2)
         o, p2 = decode_ints(IntCodec.ZSTD_BT, pl2, len(v))
         assert (o == v).all() and p2 == len(pl2)
         assert skip_ints(IntCodec.ZSTD_BT, pl2, len(v)) == len(pl2)
-    # speed policy: never offered (deterministic probe-free re-encodes)
-    with codecs.codec_policy("speed"):
-        c3, _, _ = encode_ints(zipf)
+    # speed policy: never offered (the cheapest menu)
+    c3, _, _ = encode_ints(zipf, policy="speed")
     assert c3 != IntCodec.ZSTD_BT
-    # hint cache: sibling block plans straight to the winner
-    key = "test.zstdbt.hint"
-    try:
-        c4, _, _ = encode_ints(zipf[:100_000], probe_key=key)
-        assert codecs._INT_HINT_CACHE[key]["winner"] == IntCodec.ZSTD_BT
-        c5, _, _ = encode_ints(zipf[100_000:], probe_key=key)
-        assert c4 == c5 == IntCodec.ZSTD_BT
-    finally:
-        codecs._INT_HINT_CACHE.pop(key, None)
 
 
 def test_zstd_bt_rejects_corrupted_wire():
     """Corrupted id-9 payloads must raise, never crash or return junk:
     the zstd frame checks its own integrity and the declared decompressed
     size must equal n*width."""
-    from zebra_spark.codec import codecs
     from zebra_spark.codec.codecs import _zstd_bt_build, plan_int_array
 
     rng = np.random.default_rng(13)
     v = rng.integers(0, 50000, 20000)
-    _, thunk = _zstd_bt_build(v, plan_int_array(v), 10**12, hinted=True)
+    _, thunk = _zstd_bt_build(v, plan_int_array(v), 10**12)
     pl = bytearray(thunk())
     # flip bytes inside the zstd frame
     for off in (20, len(pl) // 2, len(pl) - 3):
@@ -636,9 +614,8 @@ def test_narrow_native_wire_equality():
     }
     for name, narrow in cases.items():
         wide = narrow.astype(np.int64)
-        # fresh probe keys so the hint cache cannot couple the two runs
-        c_n, p_n, _ = encode_ints(narrow, probe_key=f"eqn.{name}")
-        c_w, p_w, _ = encode_ints(wide, probe_key=f"eqw.{name}")
+        c_n, p_n, _ = encode_ints(narrow)
+        c_w, p_w, _ = encode_ints(wide)
         assert c_n == c_w, (name, c_n, c_w)
         assert p_n == p_w, f"{name}: narrow wire differs from int64 wire"
         out64, _ = decode_ints(c_n, p_n, len(narrow))
@@ -676,32 +653,27 @@ def test_string_encode_is_history_independent(policy, first, then):
     bytes as the same column encoded under a path never seen."""
     import pyarrow as pa
 
-    from zebra_spark.codec import codecs
     from zebra_spark.codec.blocks import encode_batch
 
     cols = _history_columns()
 
     def encode(path, values):
         batch = pa.record_batch([pa.array(values, pa.binary())], names=[path])
-        return encode_batch(batch)[0]
+        return encode_batch(batch, policy)[0]
 
-    with codecs.codec_policy(policy):
-        fresh = encode(f"fresh.{first}.{then}.{policy}", cols[then])
-        shared = f"shared.{first}.{then}.{policy}"
-        encode(shared, cols[first])
-        assert encode(shared, cols[then]) == fresh
+    fresh = encode(f"fresh.{first}.{then}.{policy}", cols[then])
+    shared = f"shared.{first}.{then}.{policy}"
+    encode(shared, cols[first])
+    assert encode(shared, cols[then]) == fresh
 
 
 def test_hex_ids_select_no_fsst_outside_size_policy():
     """FSST's numpy decode runs at 32-48 ns/B, so no policy but ``size``
     may select the FSST family, whatever snappy makes of the column.  On
     hex ids balanced takes zstd (88,665 B; fsst-zstd would be 94,212 B)."""
-    from zebra_spark.codec import codecs
-
     lengths, concat = _mk_strings(_hex_ids())
     for policy in ("balanced", "speed"):
-        with codecs.codec_policy(policy):
-            c, pl, m = encode_strings(lengths, concat)
+        c, pl, m = encode_strings(lengths, concat, policy=policy)
         assert c not in (StrCodec.FSST, StrCodec.FSST_Z), (policy, m)
         ol, ob, _ = decode_strings(c, pl, len(lengths))
         assert ob == concat and (ol == lengths).all()
@@ -720,3 +692,70 @@ def test_nested_delta_fails_closed():
         decode_ints(IntCodec.DELTA, payload, 5000)
     with pytest.raises(ValueError, match="inner codec"):
         skip_ints(IntCodec.DELTA, payload, 5000)
+
+
+def _int_batch(name, values):
+    import pyarrow as pa
+
+    return pa.record_batch([pa.array(values, pa.int64())], names=[name])
+
+
+def test_int_encode_is_history_independent():
+    """A zipf column encodes to the same bytes whether or not an unrelated
+    uniform column went through the same column path first (the zipf
+    column selects zstd-bt; history must not steer it to pfor or zebra)."""
+    from zebra_spark.codec.blocks import encode_batch
+
+    rng = np.random.default_rng(0)
+    zipf = np.minimum(rng.zipf(1.2, 300_000) - 1, 50_256)
+    uniform = rng.integers(0, 1 << 20, 300_000)
+    fresh, meta = encode_batch(_int_batch("hist.fresh", zipf))
+    assert meta["cols"]["hist.fresh"]["codec"] == "zstd-bt"
+    encode_batch(_int_batch("hist.shared", uniform))
+    assert encode_batch(_int_batch("hist.shared", zipf))[0] == fresh
+
+
+def test_chunked_encode_is_history_independent():
+    """Blocks cut by ``encode_chunk_rows`` from one batch sorted by source
+    (uniform ids, then zipf tokens) encode exactly as each block does
+    alone: a block's bytes do not depend on the blocks cut before it."""
+    from zebra_spark.codec.blocks import encode_batch
+    from zebra_spark.operators.encode import encode_chunk_rows
+
+    rng = np.random.default_rng(1)
+    step = 1 << 15
+    values = np.concatenate([
+        rng.integers(0, 1 << 20, 2 * step),
+        np.minimum(rng.zipf(1.2, 2 * step) - 1, 50_256),
+    ])
+    rb = _int_batch("chunk.tok", values)
+    rows = list(encode_chunk_rows(rb, task_tag="hist", rows_per_block=step))
+    assert len(rows) == 4
+    for i, row in enumerate(rows):
+        alone = _int_batch(f"chunk.alone.{i}", values[i * step : (i + 1) * step])
+        assert row.column("payload")[0].as_py() == encode_batch(alone)[0], i
+
+
+def test_unknown_policy_is_rejected(monkeypatch):
+    """A misspelt ZS_CODEC_POLICY raises instead of silently encoding with
+    a zebra-snappy-only string menu; an explicit policy overrides the env."""
+    import re
+
+    from zebra_spark.codec.blocks import encode_batch
+
+    lengths, concat = _mk_strings([b"pipeline", b"model", b"tokens"] * 2000)
+    monkeypatch.setenv("ZS_CODEC_POLICY", "Balanced")
+    expected = re.escape("balanced|size|speed")
+    with pytest.raises(ValueError, match=expected):
+        encode_strings(lengths, concat)
+    with pytest.raises(ValueError, match=expected):
+        encode_ints(np.arange(100))
+    with pytest.raises(ValueError, match=expected):
+        encode_batch(_int_batch("x", np.arange(100)))
+    with pytest.raises(ValueError, match=expected):
+        encode_ints(np.arange(100), policy="fast")
+    assert len(encode_strings(lengths, concat, policy="balanced")[1]) < 100
+    monkeypatch.setenv("ZS_CODEC_POLICY", "size")
+    assert encode_strings(lengths, concat)[1] == encode_strings(
+        lengths, concat, policy="size"
+    )[1]

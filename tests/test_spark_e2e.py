@@ -283,11 +283,9 @@ def test_encode_metrics_direct_matches_full_encode(spark, tmp_path):
     assert fold["rows"] == full["rows"] == 2000
     assert fold["raw"] == full["raw"]
     assert fold["zebra"] == full["zebra"]
-    # enc_bytes is NOT bit-reproducible across jobs in one session: the
-    # int selector's hint cache lives in the REUSED python workers, so
-    # selection can differ slightly with worker history (r5 convention —
-    # verify_blocks pins determinism under the speed policy instead).
-    # Bound it: within 1% of the full encode and never above zebra.
-    assert abs(fold["enc"] - full["enc"]) <= 0.01 * full["enc"]
+    # an encode is a pure function of (block rows, policy), so two jobs in
+    # one session produce the same bytes, whatever the reused python
+    # workers encoded before
+    assert fold["enc"] == full["enc"]
     assert fold["enc"] <= fold["zebra"]
     assert fold["tok"] == df.agg(F.sum("n_tok")).collect()[0][0]

@@ -15,8 +15,9 @@ codec, the total encoded bytes, zebra's bytes for the same sections and
 the encode CPU-seconds.  ``--against`` adds the change in encoded bytes
 against an earlier ``--json`` result.
 
-Each combination runs in its own fresh process, so no selector state a
-process keeps between encodes carries from one combination to the next.
+An encode is a pure function of (block rows, policy), so the numbers do
+not depend on how the combinations are spread over the ``--procs``
+worker processes.
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ def census_one(job: tuple) -> dict:
     path, layout, policy, rows_per_block = job
     import pyarrow.parquet as pq
 
-    from zebra_spark.codec import codecs
     from zebra_spark.codec.blocks import encode_batch
 
     table = pq.read_table(path)
@@ -50,16 +50,15 @@ def census_one(job: tuple) -> dict:
     counts: Counter = Counter()
     enc = zebra = blocks = 0
     c0 = time.process_time()
-    with codecs.codec_policy(policy):
-        for start in range(0, table.num_rows, rows_per_block):
-            batch = table.slice(start, rows_per_block).combine_chunks()
-            _, meta = encode_batch(batch.to_batches()[0])
-            blocks += 1
-            enc += meta["enc_bytes"]
-            zebra += meta["zebra_bytes"]
-            for col in meta["cols"].values():
-                kind = "int" if "n_runs" in col else "str"
-                counts[f"{kind}.{col['codec']}"] += 1
+    for start in range(0, table.num_rows, rows_per_block):
+        batch = table.slice(start, rows_per_block).combine_chunks()
+        _, meta = encode_batch(batch.to_batches()[0], policy)
+        blocks += 1
+        enc += meta["enc_bytes"]
+        zebra += meta["zebra_bytes"]
+        for col in meta["cols"].values():
+            kind = "int" if "n_runs" in col else "str"
+            counts[f"{kind}.{col['codec']}"] += 1
     return {
         "table": os.path.basename(path).removesuffix(".parquet"),
         "layout": layout,

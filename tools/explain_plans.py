@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -144,7 +146,7 @@ def main():
 
         _shutil.rmtree(d, ignore_errors=True)
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans of key operators (auto-generated)\n\n"
             "Generated by tools/explain_plans.py — audit notes inline.\n"

@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def encode_split(args):
@@ -58,7 +60,11 @@ def main():
     lo = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     hi = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     iters = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    path = sys.argv[4] if len(sys.argv) > 4 else "/root/repo/.bench/f1_250000.parquet"
+    path = (
+        sys.argv[4]
+        if len(sys.argv) > 4
+        else os.path.join(REPO, ".bench", "f1_250000.parquet")
+    )
 
     from zebra_spark.sources.parquet_direct import list_row_groups
 

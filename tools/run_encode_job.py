@@ -72,11 +72,9 @@ def main():
     )
     args = ap.parse_args()
     if args.policy:
-        # before the session: workers read the policy at codec import
+        # before the session: every encode reads the policy from the env
+        # at call time, and the python workers inherit the env
         os.environ["ZS_CODEC_POLICY"] = args.policy
-        from zebra_spark.codec import codecs as _codecs
-
-        _codecs._CODEC_POLICY = args.policy
 
     from pyspark.sql import SparkSession, functions as F
 

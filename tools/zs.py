@@ -713,12 +713,10 @@ def main(argv=None):
 
     args = ap.parse_args(argv)
     if args.policy:
-        # must land in the env BEFORE any Spark session / python worker
-        # spawns — the policy is read at codec-module import in workers
+        # every encode reads the policy from the env at call time; it
+        # must land there BEFORE the Spark session starts, so the python
+        # workers inherit it
         os.environ["ZS_CODEC_POLICY"] = args.policy
-        from zebra_spark.codec import codecs as _codecs
-
-        _codecs._CODEC_POLICY = args.policy  # driver-side encodes too
     args.fn(args)
 
 

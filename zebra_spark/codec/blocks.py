@@ -38,6 +38,7 @@ from .codecs import (
     decode_strings,
     encode_ints,
     encode_strings,
+    resolve_policy,
     skip_ints,
     skip_strings,
 )
@@ -231,11 +232,8 @@ class _Sizes:
         self.zebra += meta["zebra_bytes"] + extra_zebra
 
 
-def _encode_column(
-    arr: pa.Array, path: str, out: list, sizes: _Sizes, use_hints: bool = True
-):
+def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes, policy: str):
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    key = path if use_hints else None
     t = arr.type
     flags = 0
     has_nulls = arr.null_count > 0
@@ -246,7 +244,7 @@ def _encode_column(
         # bool -> int8 is a zero-copy reinterpretation; the codec plans
         # narrow dtypes natively (values 0/1, wire unchanged)
         valid = _validity_np(arr).view(np.int8)
-        c, p, m = encode_ints(valid, probe_key=key and key + "#valid")
+        c, p, m = encode_ints(valid, policy=policy)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#valid", m)
@@ -259,7 +257,7 @@ def _encode_column(
             vals,
             float_view=pa.types.is_float64(t),
             float32_view=pa.types.is_float32(t),
-            probe_key=key,
+            policy=policy,
         )
         out.append(bytes([c]))
         out.append(p)
@@ -270,7 +268,9 @@ def _encode_column(
     ) or pa.types.is_large_binary(t):
         lengths, concat = _binary_parts(arr)
         null_free = pc.fill_null(arr, b"" if not pa.types.is_string(t) else "") if arr.null_count else arr
-        c, p, m = encode_strings(lengths, concat, arrow_array=null_free)
+        c, p, m = encode_strings(
+            lengths, concat, arrow_array=null_free, policy=policy
+        )
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path, m)
@@ -282,16 +282,16 @@ def _encode_column(
         # int32 for list / int64 for large_list — the codec takes either
         lengths = lengths_arr.to_numpy(zero_copy_only=False)
         child = arr.flatten()  # concatenated values of valid rows only
-        c, p, m = encode_ints(lengths, probe_key=key and key + "#len")
+        c, p, m = encode_ints(lengths, policy=policy)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#len", m)
         out.append(np.uint64(len(child)).astype("<u8").tobytes())
-        _encode_column(child, path + ".item", out, sizes, use_hints=use_hints)
+        _encode_column(child, path + ".item", out, sizes, policy)
         return
     if pa.types.is_struct(t):
         for i, field in enumerate(t):
-            _encode_column(arr.field(i), path + "." + field.name, out, sizes, use_hints=use_hints)
+            _encode_column(arr.field(i), path + "." + field.name, out, sizes, policy)
         return
     if pa.types.is_map(t):
         # map<k,v> ~ zebra's Map table nested per row (Schema.hs:83): a
@@ -304,12 +304,12 @@ def _encode_column(
             lengths_arr = pc.fill_null(lengths_arr, 0)
         lengths = lengths_arr.to_numpy(zero_copy_only=False)
         child = as_list.flatten()
-        c, p, m = encode_ints(lengths, probe_key=key and key + "#len")
+        c, p, m = encode_ints(lengths, policy=policy)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#len", m)
         out.append(np.uint64(len(child)).astype("<u8").tobytes())
-        _encode_column(child, path + ".entries", out, sizes, use_hints=use_hints)
+        _encode_column(child, path + ".entries", out, sizes, policy)
         return
     raise NotImplementedError(f"unsupported arrow type for block encode: {t}")
 
@@ -329,13 +329,13 @@ def _map_as_list_type(t: pa.DataType) -> pa.DataType:
     )
 
 
-def encode_batch(batch: pa.RecordBatch, use_hints: bool = True):
+def encode_batch(batch: pa.RecordBatch, policy: str | None = None):
     """Encode a RecordBatch into one striped block. Returns (payload, meta).
 
-    ``use_hints=False`` disables the int selector's per-column hint cache
-    so the encode is a pure function of the batch values (the audit path
-    in operators/verify.py needs a deterministic re-encode; the cache
-    makes production selection depend on which blocks preceded this one)."""
+    The payload is a pure function of (batch values, policy); ``policy``
+    defaults to ``ZS_CODEC_POLICY``, read once per call (see
+    :func:`~zebra_spark.codec.codecs.resolve_policy`)."""
+    policy = resolve_policy(policy)
     out: list[bytes] = [
         BLOCK_MAGIC,
         np.uint32(batch.num_rows).astype("<u4").tobytes(),
@@ -343,7 +343,7 @@ def encode_batch(batch: pa.RecordBatch, use_hints: bool = True):
     ]
     sizes = _Sizes()
     for name, col in zip(batch.schema.names, batch.columns):
-        _encode_column(col, name, out, sizes, use_hints=use_hints)
+        _encode_column(col, name, out, sizes, policy)
     payload = b"".join(out)
     meta = {
         "n_rows": batch.num_rows,

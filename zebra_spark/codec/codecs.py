@@ -17,21 +17,23 @@ Wire framing (ours, block-internal): ``u8 codec_id | payload``.
 
 from __future__ import annotations
 
-import contextlib as _contextlib
 import os
 
 import numpy as np
 
 from .intcodec import (
+    INT_HEADER_BYTES,
     _NATIVE_LE,
     _bp64_pack_group,
     _bp64_unpack_group,
     bit_length64,
+    mid64,
     pack_from_plan,
     pack_int_array,
     packed_size,
     plan_int_array,
     unpack_int_array,
+    zigzag64,
 )
 from .bytecodec import pack_strings, unpack_strings
 from . import fsst as _fsst
@@ -102,6 +104,31 @@ def zebra_int_size(values: np.ndarray) -> int:
 
 
 # ---------------------------------------------------------------------------
+# codec policy.  Every policy takes the exact smallest payload among the
+# candidates it offers; the policies differ only in the menu and the int
+# decode handicaps:
+#   balanced (default) — strings: zebra-snappy, dict, zstd-12; int DELTA
+#                        and ZSTD_BT must beat their decode handicaps
+#   size               — strings: zebra-snappy, dict, zstd-19, fsst-zstd;
+#                        no int handicaps
+#   speed              — strings: zebra-snappy, dict; no int ZSTD_BT
+POLICIES = ("balanced", "size", "speed")
+
+
+def resolve_policy(policy: str | None = None) -> str:
+    """``policy``, or ``ZS_CODEC_POLICY`` (default ``balanced``) read now
+    when it is None.  Raises ValueError for anything but balanced, size
+    or speed."""
+    if policy is None:
+        policy = os.environ.get("ZS_CODEC_POLICY", "balanced")
+    if policy not in POLICIES:
+        raise ValueError(
+            f"unknown codec policy {policy!r}: expected balanced|size|speed"
+        )
+    return policy
+
+
+# ---------------------------------------------------------------------------
 # int codecs
 
 
@@ -122,12 +149,13 @@ def encode_ints(
     allow: set[int] | None = None,
     float_view: bool = False,
     float32_view: bool = False,
-    probe_key: str | None = None,
+    policy: str | None = None,
 ):
     """Select + encode. Returns ``(codec_id, payload_bytes, meta_dict)``.
 
-    ``meta_dict`` carries selector stats for the per-partition codec metrics
-    required by the north rule.
+    The result is a function of ``(values, policy)`` alone (``policy``:
+    see :func:`resolve_policy`).  ``meta_dict`` carries the selector stats
+    for the per-partition codec metrics required by the north rule.
 
     ``float_view=True`` marks ``values`` as the bit-cast of a float64
     column, enabling the ALP decimal candidate (pointless and skipped for
@@ -135,23 +163,19 @@ def encode_ints(
     float32 bit patterns — ALP decimal can't apply (the container is not
     an f64 image) but ALP-RD can (it is a pure bit transform).
 
-    ``probe_key``: stable column identity enabling the selector HINT cache
-    (r5): the first block of a column runs the full candidate menu and
-    remembers the winner (plus its tuning — PFoR cut, ALP-RD cut); the
-    next ``_INT_HINT_USES`` blocks of the same column plan only zebra +
-    that winner, skipping the losing candidates' full-array passes
-    (~45% of selector time on token streams).  The <=zebra bound is
-    UNTOUCHED — zebra is always planned exactly and selection among the
-    offered candidates stays exact-size — only which candidates are
-    offered narrows between revalidations.  Drift is bounded two ways:
-    the menu re-runs in full every 64 blocks, and a hinted winner that
-    loses its own block (data shifted under it) invalidates the entry
-    immediately.
-
-    Costing reuses a single :class:`PackPlan` per candidate (one pass each)
-    and the winner's plan assembles the payload without recomputation.
-    Expensive candidates are gated by cheap sampled stats.
+    Selection takes the candidate with the smallest ``size * handicap``
+    (``_DECODE_HANDICAP``; no handicaps under ``size``).  The zebra
+    candidate is always planned exactly, so the winner is never larger
+    than zebra.  The costly candidates are gated by statistics sampled
+    from this column: each is built only when its sampled estimate can
+    beat the best handicapped score so far.  ALP (decimal floats only)
+    and ZSTD_BT are costed first, so where they win (prices; zipf token
+    ids) they set a tight bar that spares PFoR, DICT and DELTA their
+    full-array passes.  Costing reuses a single :class:`PackPlan` per
+    candidate and the winner's plan assembles the payload without
+    recomputation.
     """
+    policy = resolve_policy(policy)
     # r7: narrow signed ints stay at their native width through planning
     # (see plan_int_array) — every candidate below either handles the
     # narrow dtype or widens explicitly with dtype=_I64, so the selected
@@ -162,43 +186,61 @@ def encode_ints(
     ):
         values = values.astype(_I64)
     n = len(values)
-
-    hint = None
-    if probe_key is not None:
-        h = _INT_HINT_CACHE.get(probe_key)
-        if h is not None and h["uses"] > 0:
-            h["uses"] -= 1
-            hint = h
-    menu = None if hint is None else {hint["winner"], IntCodec.CONSTANT}
+    handicap = {} if policy == "size" else _DECODE_HANDICAP
 
     def allowed(c):
-        if allow is not None and c not in allow:
-            return False
-        return menu is None or c in menu
+        return allow is None or c in allow
+
+    def bar(c):
+        """The size ``c`` must stay under to beat every candidate so far."""
+        best = min(s * handicap.get(k, 1.0) for k, (s, _) in candidates.items())
+        return best / handicap.get(c, 1.0)
 
     zplan = plan_int_array(values)
     zsize = zplan.size
+    stats, s_uniq, s_counts = _column_stats(values, zplan)
     # (size, thunk-producing-payload)
     candidates: dict[int, tuple[int, object]] = {
         IntCodec.ZEBRA: (zsize, lambda: pack_from_plan(zplan))
     }
 
     n_runs = None
-    if n > 0:
+    if n > 0 and zplan.vmin == zplan.vmax and allowed(IntCodec.CONSTANT):
+        # 8 bytes: smaller than any other candidate's header
+        candidates[IntCodec.CONSTANT] = (
+            8,
+            lambda: np.int64(values[0]).astype("<i8").tobytes(),
+        )
+    elif n > 0:
+        # ALP first: on decimal floats it wins by enough to prune every
+        # candidate below (ZSTD_BT included); elsewhere a 256-value probe
+        # rejects it
+        if float_view and allowed(IntCodec.ALP) and n >= 64:
+            alp = _alp_build(values)
+            if alp is not None:
+                candidates[IntCodec.ALP] = alp
+
+        # ZSTD_BT next: the compressed size IS its costing, and where it
+        # wins (entropy-bound columns) it wins by enough to prune the
+        # rest.  Not offered under "speed" unless explicitly allowed.
         if (
-            allowed(IntCodec.CONSTANT)
-            and zplan.vmin == zplan.vmax
+            allowed(IntCodec.ZSTD_BT)
+            and n >= 1024
+            and (policy != "speed" or allow is not None)
         ):
-            candidates[IntCodec.CONSTANT] = (
-                8,
-                lambda: np.int64(values[0]).astype("<i8").tobytes(),
-            )
+            zb = _zstd_bt_build(values, zplan, bar(IntCodec.ZSTD_BT))
+            if zb is not None:
+                candidates[IntCodec.ZSTD_BT] = zb
 
         if allowed(IntCodec.RLE) and n >= 64:
-            # sampled run-ratio gate before the full O(n) split
-            sample = values[: 4096]
-            samp_runs = int((sample[1:] != sample[:-1]).sum()) + 1
-            if samp_runs <= len(sample) // 2:
+            # run-ratio gate before the full O(n) split: exact on short
+            # columns, from the 16 stratified slices on long ones
+            rows = (
+                values[None] if n <= _GATE_FULL
+                else _gate_sample(values, _GATE_SLICE).reshape(_GATE_SLICES, -1)
+            )
+            samp_runs = np.count_nonzero(rows[:, 1:] != rows[:, :-1]) + len(rows)
+            if samp_runs <= rows.size // 2:
                 rv, rl = _rle_split(values)
                 n_runs = len(rv)
                 if n_runs <= n // 2:
@@ -212,29 +254,24 @@ def encode_ints(
                         ),
                     )
 
-        # PFoR first: cheap to cost exactly and often the tightest bound,
-        # so the DICT/DELTA sampled skip-gates below compare against the
-        # best candidate so far instead of only zebra — skipping more
-        # full-array planning passes (selector cost, not correctness: the
-        # <=zebra bound is carried by the always-present zebra candidate)
-        pfor_b = None
         if allowed(IntCodec.PFOR) and n >= 256:
-            pfor = _pfor_build(
-                values, zplan, hint_b=(hint or {}).get("pfor_b")
-            )
+            pfor = _pfor_build(values, zplan, bar(IntCodec.PFOR))
             if pfor is not None:
-                size, thunk, pfor_b = pfor
-                candidates[IntCodec.PFOR] = (size, thunk)
+                candidates[IntCodec.PFOR] = pfor
 
-        if allowed(IntCodec.DICT) and n >= 64:
-            dict_pair = _dict_split(values, zplan)
+        card = stats["cardinality_est"]
+        if (
+            allowed(IntCodec.DICT)
+            and n >= 64
+            and _dict_bytes(s_uniq, s_counts, card, n, zplan) < bar(IntCodec.DICT)
+        ):
+            dict_pair = _dict_split(values, zplan, card, len(s_uniq))
             if dict_pair is not None:
                 uniq, inverse = dict_pair
                 pu = plan_int_array(uniq)
                 # sampled skip-gate: planning the full inverse costs a full
                 # zigzag+max pass; extrapolate its size from slices first
-                best_so_far = min(sz for sz, _ in candidates.values())
-                if _sampled_plan_bytes(inverse) * n + pu.size + 4 < best_so_far:
+                if _sampled_plan_bytes(inverse) * n + pu.size + 4 < bar(IntCodec.DICT):
                     pi = plan_int_array(inverse)
                     candidates[IntCodec.DICT] = (
                         4 + pu.size + pi.size,
@@ -245,115 +282,63 @@ def encode_ints(
                         ),
                     )
 
-        if float_view and allowed(IntCodec.ALP) and n >= 64:
-            alp = _alp_build(values)
-            if alp is not None:
-                size, thunk = alp
-                candidates[IntCodec.ALP] = (size, thunk)
-
-        alprd_r = None
-        if (float_view or float32_view) and allowed(IntCodec.ALP_RD) and n >= 64:
-            rd = _alp_rd_build(
-                values,
-                min(s for s, _ in candidates.values()),
-                hint_r=(hint or {}).get("alprd_r"),
-            )
+        # ALP-RD is ALP's fallback for "real doubles" (Afroozeh & Boncz):
+        # offered only when ALP's decimal transform is not exact
+        if (
+            (float_view or float32_view)
+            and IntCodec.ALP not in candidates
+            and allowed(IntCodec.ALP_RD)
+            and n >= 64
+        ):
+            rd = _alp_rd_build(values, bar(IntCodec.ALP_RD))
             if rd is not None:
-                size, thunk, alprd_r = rd
-                candidates[IntCodec.ALP_RD] = (size, thunk)
+                candidates[IntCodec.ALP_RD] = rd
 
-        if allowed(IntCodec.DELTA) and n >= 2:
-            # first value kept out of the delta frame so a large base does
-            # not widen the frame-of-reference of the (small) diffs
+        # first value kept out of the delta frame so a large base does not
+        # widen the frame-of-reference of the (small) diffs.  Random-ish
+        # data has WIDER diffs than values, so slices of the diffs decide
+        # whether the whole array is subtracted at all; the bar carries
+        # DELTA's decode handicap, so a candidate that could only win
+        # inside the handicap zone is skipped too.  (Sampling error can
+        # skip a narrow win; the <=zebra bound never depends on DELTA.)
+        if (
+            allowed(IntCodec.DELTA)
+            and n >= 2
+            and _sampled_plan_bytes(values, diff=True) * (n - 1) + 9
+            < bar(IntCodec.DELTA)
+        ):
             with np.errstate(over="ignore"):
                 deltas = np.subtract(values[1:], values[:-1], dtype=_I64)
-            # sampled skip-gate (see DICT): random-ish data has WIDER diffs
-            # than values, so skip the full delta plan unless slices say
-            # it plausibly beats the current best candidate.  Under the
-            # balanced policy DELTA must additionally clear its 5% decode
-            # handicap to be SELECTED, so the gate bar tightens by the
-            # same factor — a borderline candidate inside the handicap
-            # zone would be rejected after full costing anyway, and the
-            # full 10M-value delta plan costs ~20% of encode time on the
-            # hot token column.  (Sampling error can skip a <5%-margin win;
-            # balanced trades that sliver of size for encode speed — the
-            # <=zebra bound never depends on DELTA.)
-            best_now = min(s for s, _ in candidates.values())
-            bar = best_now
-            if _CODEC_POLICY != "size" and IntCodec.DELTA in _DECODE_HANDICAP:
-                bar = best_now / _DECODE_HANDICAP[IntCodec.DELTA]
-            if _sampled_plan_bytes(deltas) * (n - 1) + 9 < bar:
-                dplan = plan_int_array(deltas)
-                # r4: the deltas themselves go through the cheaper of the
-                # zebra int_array or PFoR — PFoR's single-width unpack
-                # decodes ~2x faster than the per-chunk-width zebra walk
-                # AND is usually smaller on outlier-bearing diffs, which
-                # cut DELTA's measured decode cost from 3.2x PFOR to ~1.4x
-                # (wire: i64 first | u8 inner_codec | inner payload)
-                inner = IntCodec.ZEBRA
-                dsize = dplan.size
-                dthunk = lambda dplan=dplan: pack_from_plan(dplan)
-                dp = _pfor_build(deltas, dplan)
-                if dp is not None and dp[0] < dsize:
-                    inner, (dsize, dthunk) = IntCodec.PFOR, dp[:2]
-                candidates[IntCodec.DELTA] = (
-                    9 + dsize,
-                    lambda inner=inner, dthunk=dthunk: (
-                        np.int64(values[0]).astype("<i8").tobytes()
-                        + bytes([inner])
-                        + dthunk()
-                    ),
-                )
-
-        # ZSTD_BT last: the compressed size IS its costing, so its sampled
-        # gate should compare against the tightest best-so-far.  Policy-
-        # gated off under "speed" (keeps the verify_blocks re-encode audit
-        # deterministic and probe-free) unless explicitly allowed.
-        if (
-            allowed(IntCodec.ZSTD_BT)
-            and n >= 1024
-            and (_CODEC_POLICY != "speed" or (allow is not None and IntCodec.ZSTD_BT in allow))
-        ):
-            zb = _zstd_bt_build(
-                values,
-                zplan,
-                min(s for s, _ in candidates.values()),
-                hinted=hint is not None and hint["winner"] == IntCodec.ZSTD_BT,
+            dplan = plan_int_array(deltas)
+            # r4: the deltas themselves go through the cheaper of the
+            # zebra int_array or PFoR — PFoR's single-width unpack
+            # decodes ~2x faster than the per-chunk-width zebra walk
+            # AND is usually smaller on outlier-bearing diffs
+            # (wire: i64 first | u8 inner_codec | inner payload)
+            inner = IntCodec.ZEBRA
+            dsize = dplan.size
+            dthunk = lambda dplan=dplan: pack_from_plan(dplan)
+            # the inner PFoR matters only if it can make DELTA win
+            dp = _pfor_build(deltas, dplan, min(dsize, bar(IntCodec.DELTA) - 9))
+            if dp is not None:
+                inner, (dsize, dthunk) = IntCodec.PFOR, dp
+            candidates[IntCodec.DELTA] = (
+                9 + dsize,
+                lambda inner=inner, dthunk=dthunk: (
+                    np.int64(values[0]).astype("<i8").tobytes()
+                    + bytes([inner])
+                    + dthunk()
+                ),
             )
-            if zb is not None:
-                candidates[IntCodec.ZSTD_BT] = zb
 
-    # decode-cost-aware SELECTION (payload sizes stay actual): under the
-    # default balanced policy DELTA pays a 5% size handicap — its decode
-    # needs an extra full cumsum pass (measured ~1.4x zebra, ~2x pfor on
-    # token streams), so it must be >5% smaller to win.  The <=zebra bound
-    # is untouched: zebra's handicap is 1.0, so any winner satisfies
-    # size * handicap < zsize => size < zsize.
-    # NOTE: a size win large enough to matter clears the handicap by
-    # arithmetic alone (size <= 0.85*best already satisfies 1.05*size <
-    # best), so there is deliberately NO separate "waiver" branch — r4
-    # shipped one and it was provably dead code (any input it fired on was
-    # already selected through the handicap).  The 1.05 factor IS the
-    # policy: DELTA must be >5% smaller to buy its extra cumsum pass.
-    handicap = _DECODE_HANDICAP if _CODEC_POLICY != "size" else {}
+    # decode-cost-aware SELECTION (payload sizes stay actual): under
+    # balanced/speed DELTA must be >5% and ZSTD_BT >15% smaller to win.
+    # The <=zebra bound is untouched: zebra's handicap is 1.0, so any
+    # winner satisfies size * handicap < zsize => size < zsize.
     codec = min(
         candidates,
         key=lambda c: (candidates[c][0] * handicap.get(c, 1.0), c),
     )
-    if probe_key is not None:
-        if hint is None:
-            # full menu ran: remember the winner + its tuning for the next
-            # _INT_HINT_USES blocks of this column
-            entry = {"winner": codec, "uses": _INT_HINT_USES}
-            if codec == IntCodec.PFOR:
-                entry["pfor_b"] = pfor_b
-            elif codec == IntCodec.ALP_RD:
-                entry["alprd_r"] = alprd_r
-            _INT_HINT_CACHE[probe_key] = entry
-        elif codec != hint["winner"]:
-            # the hinted winner lost its own block — data shifted, re-probe
-            # the full menu next time
-            _INT_HINT_CACHE.pop(probe_key, None)
     size, thunk = candidates[codec]
     meta = {
         "codec": IntCodec.NAMES[codec],
@@ -362,17 +347,9 @@ def encode_ints(
         "zebra_bytes": zsize,
         "n_runs": n_runs,
     }
-    meta.update(_column_stats(values, zplan))
+    meta.update(stats)
     return codec, thunk(), meta
 
-
-# selector HINT cache per column path (r5): {key: {"winner": codec,
-# "uses": n, "pfor_b"/"alprd_r": tuning}}.  Same staleness argument as the
-# FSST probe cache below: python workers are reused across jobs, so a key
-# can outlive one dataset; the 64-block full-menu revalidation bounds any
-# staleness, the zebra bound never depends on it (zebra is always planned),
-# and a hinted winner that loses its own block invalidates immediately.
-_INT_HINT_CACHE: dict[str, dict] = {}
 
 # ZSTD_BT decode costs ~1.5x the PFoR path (zstd frame inflate ~280 M
 # tok/s + plane recombination), so under balanced it must be >15% smaller
@@ -427,9 +404,7 @@ def _zstd_bt_planes(narrow: np.ndarray, width: int) -> np.ndarray:
     return le.view(np.uint8).reshape(-1, width).T.copy().reshape(-1)
 
 
-def _zstd_bt_build(
-    values: np.ndarray, zplan, best_so_far: int, hinted: bool = False
-):
+def _zstd_bt_build(values: np.ndarray, zplan, bar: float):
     """FoR + byte-transpose + zstd level-1 candidate (wire id 9).
 
     The win comes from zstd's FSE entropy stage: zipf-distributed token
@@ -439,32 +414,34 @@ def _zstd_bt_build(
     the smallest here — higher levels spend time finding matches that the
     transposed planes don't have.  Byte-aligned transforms only; the
     compressed size IS the costing, so a sampled probe skips the full
-    compress when the projection can't clear the selection bar."""
+    compress when the projection can't get under ``bar``.  Returns
+    ``(size, thunk)``, or None when the candidate cannot beat ``bar``."""
     import pyarrow as pa
 
     n = len(values)
     width, narrow = _zstd_bt_narrow(values, int(zplan.vmin), int(zplan.vmax))
     codec = pa.Codec("zstd", compression_level=1)
-    bar = best_so_far
-    if _CODEC_POLICY != "size":
-        bar = best_so_far / _ZSTD_BT_HANDICAP
-    if not hinted and n > 2 * _ZSTD_BT_SAMPLE:
+    if n >= _GATE_MIN:
         # STRATIFIED sample (r6, ADVICE): the old prefix sample misjudged
         # sorted/clustered columns whose head is unrepresentative — take
-        # 16 evenly-spaced 4k slices across the column instead, the same
-        # shape _sampled_plan_bytes uses.  Selector efficiency only; the
-        # <=zebra bound is unaffected (zebra is always planned exactly).
-        step = max(1, (n - _GATE_SLICE) // (_GATE_SLICES - 1))
-        starts = (np.arange(_GATE_SLICES) * step) & ~63
-        sub = np.concatenate([narrow[s : s + _GATE_SLICE] for s in starts])
+        # 16 evenly-spaced slices across the column instead, the same
+        # shape _sampled_plan_bytes uses: 4k slices on long columns, a
+        # quarter of a shorter one.  A short sample holds fewer long-range
+        # repeats, so its projection runs high (up to 6x on sf0.1 columns,
+        # never more than 6% low); on short columns it only skips when 25%
+        # above the bar.  Selector efficiency only; the <=zebra bound is
+        # unaffected (zebra is always planned exactly).
+        long = n > 2 * _ZSTD_BT_SAMPLE
+        slice_len = _GATE_SLICE if long else (n // (4 * _GATE_SLICES)) & ~63
+        sub = _gate_sample(narrow, slice_len)
         m = len(sub)
         sample = _zstd_bt_planes(sub, width)
         projected = len(codec.compress(sample, asbytes=True)) / (m * width)
-        if projected * n * width + 13 >= bar:
+        if (1.0 if long else 0.8) * (projected * n * width + 13) >= bar:
             return None
     comp = codec.compress(_zstd_bt_planes(narrow, width), asbytes=True)
     size = 13 + len(comp)
-    if size >= bar and not hinted:
+    if size >= bar:
         return None
 
     vmin = int(zplan.vmin)
@@ -478,30 +455,47 @@ def _zstd_bt_build(
         )
 
     return size, thunk
-_INT_HINT_USES = 64
 
 
 _GATE_SLICES = 16
 _GATE_SLICE = 1 << 12  # 4k values per slice, 64-aligned
 _GATE_FULL = _GATE_SLICES * _GATE_SLICE * 2  # below this, just plan exactly
+_GATE_MIN = 1 << 13  # below this, DELTA plans and ZSTD_BT compresses unprobed
 
 
-def _sampled_plan_bytes(values: np.ndarray) -> float:
+def _gate_sample(values: np.ndarray, slice_len: int, diff: bool = False) -> np.ndarray:
+    """16 evenly-spaced 64-aligned slices of ``slice_len`` values (with
+    ``diff=True``, of the adjacent differences), concatenated."""
+    n = len(values) - diff
+    step = max(1, (n - slice_len) // (_GATE_SLICES - 1))
+    starts = (np.arange(_GATE_SLICES) * step) & ~63
+    rows = values[starts[:, None] + np.arange(slice_len + diff)]
+    if diff:
+        return np.subtract(rows[:, 1:], rows[:, :-1], dtype=_I64).ravel()
+    return rows.ravel()
+
+
+def _sampled_plan_bytes(values: np.ndarray, diff: bool = False) -> float:
     """Estimated packed bytes/value from 16 evenly-spaced 64-aligned
-    slices.  Optimistic on purpose (estimates can only SKIP a candidate
-    when clearly unpromising): mixed-source columns have long cheap
+    slices (of ``values``, or with ``diff=True`` of its n-1 adjacent
+    differences, taken per slice without the full subtract).  Optimistic
+    on purpose (estimates can only SKIP a candidate when clearly
+    unpromising): mixed-source columns have long cheap
     stretches that few slices would miss (measured: head/mid/tail slices
     over-estimated a sorted-heavy token column by 7%), so the slices are
     stratified across the column and a 0.93 slack absorbs the residual
     sampling error.  Skipping never breaks the <=zebra bound — the zebra
     candidate is always present.
     """
-    n = len(values)
-    if n <= _GATE_FULL:
+    n = len(values) - diff
+    if n > _GATE_FULL:
+        slice_len = _GATE_SLICE
+    elif diff and n >= _GATE_MIN:
+        # DELTA's diffs of a shorter column: slices covering a quarter
+        slice_len = (n // (4 * _GATE_SLICES)) & ~63
+    else:
         return 0.0  # small: always plan exactly
-    step = (n - _GATE_SLICE) // (_GATE_SLICES - 1)
-    starts = (np.arange(_GATE_SLICES) * step) & ~63
-    sl = np.concatenate([values[s : s + _GATE_SLICE] for s in starts])
+    sl = _gate_sample(values, slice_len, diff)
     return 0.93 * plan_int_array(sl).size / len(sl)
 
 
@@ -558,9 +552,7 @@ def _alp_build(values_i64: np.ndarray):
     return None
 
 
-def _alp_rd_build(
-    values_i64: np.ndarray, best_so_far: int, hint_r: int | None = None
-):
+def _alp_rd_build(values_i64: np.ndarray, best_so_far: float):
     """ALP-RD candidate for full-mantissa floats — the "real doubles"
     second half of ALP (Afroozeh & Boncz, VLDB 2023): cut each value's
     bits at position ``r`` — the LEFT part (sign + exponent + top mantissa
@@ -605,15 +597,6 @@ def _alp_rd_build(
         pc_ = plan_int_array(inverse.astype(_I64))
         return 6 + n_groups * 8 * r + pd_.size + pc_.size, r, pd_, pc_
 
-    if hint_r is not None and 0 <= hint_r < top:
-        # hinted cut from the per-column cache: one exact costing, no
-        # sample ranking
-        best = cost_exact(int(hint_r))
-        size, r, pd_, pc_ = best
-        if size >= best_so_far:
-            return None
-        return _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_)
-
     sample = np.sort(us[:: max(1, n // 4096)][:4096])
     diff = sample[1:] ^ sample[:-1]
     bl = bit_length64(diff)
@@ -649,11 +632,6 @@ def _alp_rd_build(
     size, r, pd_, pc_ = best
     if size >= best_so_far:
         return None
-    return _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_)
-
-
-def _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_):
-    """(size, thunk, r) for a fully-costed ALP-RD cut."""
 
     def thunk(r=r, pd_=pd_, pc_=pc_):
         if r:
@@ -678,12 +656,12 @@ def _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_):
             ]
         )
 
-    return size, thunk, r
+    return size, thunk
 
 
-def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
-    """Patched frame-of-reference candidate: ``(exact_size, thunk, b)`` or
-    None.
+def _pfor_build(values: np.ndarray, zplan, bar: float):
+    """Patched frame-of-reference candidate: ``(exact_size, thunk)``, or
+    None when it cannot beat ``bar``.
 
     zebra's codec adapts bit width PER 64-VALUE CHUNK, so a zipf-ish token
     stream where nearly every chunk contains one rare large token pays the
@@ -697,15 +675,45 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
     the whole rest of planning), then the best few are costed EXACTLY —
     one comparison pass each for the true exception set — so the reported
     size stays actual and the selector's <=-zebra bound is untouched.
-    ``hint_b`` (from the per-column hint cache) skips the ranking and
-    exact-costs that single cut.
+    When no ranked cut's estimate comes near ``bar``, the candidate is
+    dropped before the full ``values - vmin`` pass.
     """
     n = len(values)
-    with np.errstate(over="ignore"):
-        # explicit dtype: values may be a narrow native int (r7); the
-        # subtract must run (and wrap) in int64 exactly as before
-        u = np.subtract(values, zplan.vmin, dtype=_I64).view(np.uint64)
     n_groups = -(-n // 64)
+
+    def offsets(v):
+        # explicit dtype: values may be a narrow native int (r7); the
+        # subtract must run (and wrap) in int64
+        with np.errstate(over="ignore"):
+            return np.subtract(v, zplan.vmin, dtype=_I64).view(np.uint64)
+
+    step = max(1, n // 8192)
+    su = offsets(values[::step][:8192])
+    scale = n / len(su)
+    widths_s = bit_length64(su)
+    hist = np.bincount(widths_s, minlength=65).astype(np.float64) * scale
+    n_exc_at = n - np.cumsum(hist)  # ~count(width > b), estimated
+    bs = np.arange(65, dtype=np.int64)
+    # RANKING estimate: base bits exact; exceptions ~2 B/packed
+    # position + their own total width in bits (suffix sum of
+    # hist[w]*w) — packed values can't beat their own widths
+    t = hist * np.arange(65, dtype=np.float64)
+    incl = np.cumsum(t[::-1])[::-1]  # incl[b] = sum_{w >= b} hist[w]*w
+    exc_bits_at = np.concatenate([incl[1:], [0.0]])  # sum_{w > b}
+    est = n_groups * 8.0 * bs + n_exc_at * 2 + exc_bits_at / 8
+    # sampled feasibility needs slack for binomial noise: with k
+    # exception elements in the sample, std(k) <= sqrt(k), so keep
+    # cuts within 3 sigma of the n/8 bar in the ranking — cost_exact
+    # settles them with the true exception count
+    k = n_exc_at / scale
+    feasible = n_exc_at <= n / 8 + 3.0 * scale * np.sqrt(np.maximum(k, 1.0))
+    if not feasible.any():
+        return None
+    est[~feasible] = np.inf
+    # same 0.93 sampling slack as _sampled_plan_bytes
+    if 0.93 * est.min() >= bar:
+        return None
+    u = offsets(values)
 
     def cost_exact(b: int):
         """(size, b, n_exc, positions, ppos, pval) or None (infeasible)."""
@@ -727,57 +735,29 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
         return (size, b, n_exc, positions, ppos, pval)
 
     best = None
-    if hint_b is not None:
-        best = cost_exact(int(hint_b))
-    else:
-        step = max(1, n // 8192)
-        su = u[::step][:8192]
-        scale = n / len(su)
-        widths_s = bit_length64(su)
-        hist = np.bincount(widths_s, minlength=65).astype(np.float64) * scale
-        n_exc_at = n - np.cumsum(hist)  # ~count(width > b), estimated
-        bs = np.arange(65, dtype=np.int64)
-        # RANKING estimate: base bits exact; exceptions ~2 B/packed
-        # position + their own total width in bits (suffix sum of
-        # hist[w]*w) — packed values can't beat their own widths
-        t = hist * np.arange(65, dtype=np.float64)
-        incl = np.cumsum(t[::-1])[::-1]  # incl[b] = sum_{w >= b} hist[w]*w
-        exc_bits_at = np.concatenate([incl[1:], [0.0]])  # sum_{w > b}
-        est = n_groups * 8.0 * bs + n_exc_at * 2 + exc_bits_at / 8
-        # sampled feasibility needs slack for binomial noise: with k
-        # exception elements in the sample, std(k) <= sqrt(k), so keep
-        # cuts within 3 sigma of the n/8 bar in the ranking — cost_exact
-        # settles them with the true exception count
-        k = n_exc_at / scale
-        feasible = n_exc_at <= n / 8 + 3.0 * scale * np.sqrt(np.maximum(k, 1.0))
-        if not feasible.any():
-            return None
-        est[~feasible] = np.inf
-        costed = examined = 0
-        for b in (int(x) for x in np.argsort(est, kind="stable")):
-            # each examination pays a full compare pass — cap BOTH the
-            # number of fully-costed cuts and total examinations (a flat
-            # est curve around the optimum otherwise walks many near-tied
-            # cuts)
-            if (
-                costed == 3
-                or examined == 6
-                or est[b] == np.inf
-                or (best and est[b] >= best[0])
-            ):
-                break
-            examined += 1
-            res = cost_exact(b)
-            if res is None:
-                continue  # sample under-counted: truly infeasible cut
-            costed += 1
-            if best is None or res[0] < best[0]:
-                best = res
-    if best is None:
+    costed = examined = 0
+    for b in (int(x) for x in np.argsort(est, kind="stable")):
+        # each examination pays a full compare pass — cap BOTH the
+        # number of fully-costed cuts and total examinations (a flat
+        # est curve around the optimum otherwise walks many near-tied
+        # cuts)
+        if (
+            costed == 3
+            or examined == 6
+            or est[b] == np.inf
+            or (best and est[b] >= best[0])
+        ):
+            break
+        examined += 1
+        res = cost_exact(b)
+        if res is None:
+            continue  # sample under-counted: truly infeasible cut
+        costed += 1
+        if best is None or res[0] < best[0]:
+            best = res
+    if best is None or best[0] >= bar:
         return None
     size, b, n_exc, positions, ppos, pval = best
-    if size >= zplan.size:
-        return None
 
     def thunk():
         # the thunk runs at most once (only for the selected winner) and
@@ -807,22 +787,32 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
             out.append(pack_from_plan(pval))
         return b"".join(out)
 
-    return size, thunk, b
+    return size, thunk
 
 
-def _column_stats(values: np.ndarray, zplan) -> dict:
-    """Sampled entropy/cardinality stats for the codec-choice lineage
-    metrics (north rule: 'entropy/cardinality-driven' selection must emit
-    the driving statistics per partition)."""
+def _column_stats(values: np.ndarray, zplan):
+    """Entropy/cardinality stats from a 4,096-value stride sample:
+    ``(meta stats, the sample's distinct values, how often each occurs)``.
+    The stats are the lineage metrics (north rule: 'entropy/cardinality-
+    driven' selection must emit the driving statistics per partition);
+    all three feed the DICT gates.
+    ``cardinality_est`` is the Chao1 estimate ``d + f1^2 / 2 f2`` (f1, f2:
+    values seen once, twice; bias-corrected ``d + f1 (f1-1) / 2`` when f2
+    is 0), exact when the sample is the whole column."""
     n = len(values)
     if n == 0:
-        return {"entropy_bits": 0.0, "cardinality_est": 0}
+        return {"entropy_bits": 0.0, "cardinality_est": 0}, values, values
     sample = values[:: max(1, n // 4096)][:4096]
     uniq, counts = np.unique(sample, return_counts=True)
+    d = len(counts)
     p = counts / counts.sum()
     entropy = float(-(p * np.log2(p)).sum())
-    # Chao1-style scale-up when the sample looks saturated vs not
-    card_est = int(len(uniq) * (n / len(sample)) ** 0.5) if len(uniq) == len(sample) else int(len(uniq))
+    card_est = d
+    if len(sample) < n:
+        f1 = int(np.count_nonzero(counts == 1))
+        f2 = int(np.count_nonzero(counts == 2))
+        extra = f1 * f1 / (2 * f2) if f2 else f1 * (f1 - 1) / 2
+        card_est = min(n, d + int(extra))
     return {
         "entropy_bits": round(entropy, 3),
         "cardinality_est": card_est,
@@ -831,29 +821,46 @@ def _column_stats(values: np.ndarray, zplan) -> dict:
         "mean_chunk_bits": round(float(zplan.nbits.mean()), 2)
         if len(zplan.nbits)
         else None,
-    }
+    }, uniq, counts
 
 
-def _dict_split(values: np.ndarray, zplan):
+def _dict_bytes(uniq: np.ndarray, counts: np.ndarray, card: int, n: int, zplan) -> float:
+    """Estimated DICT payload bytes from the sample's ``d`` distinct values
+    and their counts (:func:`_column_stats`).  A chunk packs at the widest
+    zigzag width of its 64 values around zebra's frame of reference (the
+    middle value).  Index column: a sampled value's index is about its
+    rank among the ``d`` times ``card / d``, and a chunk's width is the
+    expected maximum of 64 draws from the sample's index widths.  The
+    ``card`` sorted dictionary entries: the distinct sampled values stand
+    in (at most 256 of them), at their mean width (sorted neighbours share
+    widths)."""
+    # width-estimate gate: dict indices bit-pack at >= ceil(log2(card)) in
+    # spread-out chunks, so when the direct encoding's mean chunk width is
+    # already at or below the index width (+1 slack for clustered chunks),
+    # a dictionary cannot pay for itself
+    if card > 8 and (card - 1).bit_length() + 1 >= float(zplan.nbits.mean()):
+        return np.inf
+    d = len(uniq)
+    off = np.arange(d, dtype=_I64) * card // d - ((card - 1) >> 1)
+    p = np.bincount(bit_length64(zigzag64(off)), weights=counts, minlength=65)
+    cdf = np.cumsum(p[:64]) / counts.sum()
+    index_bits = float((1.0 - cdf**64).sum())  # E[max] = sum P(max >= w)
+    ent = np.subtract(uniq[:: -(-d // 256)], mid64(zplan.vmin, zplan.vmax), dtype=_I64)
+    entry_bits = float(bit_length64(zigzag64(ent)).mean())
+    # + u32 n_dict and the two int_array headers
+    return 4 + 2 * INT_HEADER_BYTES + (n * index_bits + card * entry_bits) / 8
+
+
+def _dict_split(values: np.ndarray, zplan, card_est: int, sample_distinct: int):
     """(uniques, int64 indices) when dictionary coding is worth costing.
 
     Uses O(n) bincount when the value range is small; falls back to a
     sample-gated np.unique sort otherwise.  Returns None when a dictionary
-    cannot beat the direct encoding (cardinality too high).
+    cannot beat the direct encoding (cardinality too high).  ``card_est``
+    and ``sample_distinct`` come from :func:`_column_stats`.
     """
     n = len(values)
     value_range = zplan.vmax - zplan.vmin
-    # width-estimate gate: dict indices bit-pack at >= ceil(log2(card)) in
-    # spread-out chunks, so when the direct encoding's mean chunk width is
-    # already at or below the index width (+1 slack for clustered chunks),
-    # a dictionary cannot pay for itself — skip the O(n) split entirely.
-    if len(zplan.nbits):
-        sample = values[:: max(1, n // 4096)][:4096]
-        card_est = len(np.unique(sample))
-        if card_est > 8 and (card_est - 1).bit_length() + 1 >= float(
-            zplan.nbits.mean()
-        ):
-            return None
     if 0 <= value_range <= (1 << 21):
         shifted = np.subtract(values, zplan.vmin, dtype=np.int64)
         counts = np.bincount(shifted, minlength=value_range + 1)
@@ -871,8 +878,7 @@ def _dict_split(values: np.ndarray, zplan):
         lookup = np.empty(value_range + 1, dtype=_I64)
         lookup[nz] = np.arange(len(nz))
         return (nz + zplan.vmin).astype(_I64), lookup[shifted]
-    sample = values[:: max(1, n // 4096)][:4096]
-    if len(np.unique(sample)) > len(sample) // 2:
+    if sample_distinct > min(n, 4096) // 2:
         return None
     uniq, inverse = np.unique(values, return_inverse=True)
     if len(uniq) > n // 2:
@@ -1140,29 +1146,6 @@ def zebra_strings_size(lengths: np.ndarray, concat: bytes) -> int:
     return len(pack_strings(lengths, concat))
 
 
-# codec policy (ZS_CODEC_POLICY; codec_policy() overrides it).  Every
-# policy takes the exact smallest payload among the candidates it offers;
-# the policies differ only in the menu and the int decode handicaps:
-#   balanced (default) — strings: zebra-snappy, dict, zstd-12; int DELTA
-#                        and ZSTD_BT must beat their decode handicaps
-#   size               — strings: zebra-snappy, dict, zstd-19, fsst-zstd;
-#                        no int handicaps
-#   speed              — strings: zebra-snappy, dict; no int ZSTD_BT
-_CODEC_POLICY = os.environ.get("ZS_CODEC_POLICY", "balanced")
-
-
-@_contextlib.contextmanager
-def codec_policy(policy: str):
-    """Temporarily override the codec policy for this process's encodes.
-    operators/verify.py re-encodes under ``speed``, the cheapest menu."""
-    global _CODEC_POLICY
-    prev = _CODEC_POLICY
-    _CODEC_POLICY = policy
-    try:
-        yield
-    finally:
-        _CODEC_POLICY = prev
-
 # int-codec selection handicaps under the balanced policy: DELTA decode
 # needs an extra full cumsum pass over the output (measured ~1.4x zebra /
 # ~2x pfor on token streams), so it must win by >5% on size to be chosen;
@@ -1214,10 +1197,10 @@ def _fsst_zstd(data: bytes):
     return None if fs is None else (fs, _zstd_compress(fs, _ZSTD_LEVEL))
 
 
-def _lengths_section(lengths: np.ndarray) -> bytes:
+def _lengths_section(lengths: np.ndarray, policy: str | None = None) -> bytes:
     """``u8 codec | u32 size | payload`` of the lengths column: the head of
     the fsst, zlib, zstd and fsst-zstd wires."""
-    lcodec, lpayload, _ = encode_ints(lengths)
+    lcodec, lpayload, _ = encode_ints(lengths, policy=policy)
     return bytes([lcodec]) + np.uint32(len(lpayload)).astype("<u4").tobytes() + lpayload
 
 
@@ -1226,10 +1209,12 @@ def encode_strings(
     concat: bytes,
     allow: set[int] | None = None,
     arrow_array=None,
+    policy: str | None = None,
 ):
     """Select + encode a string column. Returns ``(codec_id, payload, meta)``.
 
-    The result is a function of the values and the codec policy alone:
+    The result is a function of the values and ``policy`` alone (see
+    :func:`resolve_policy`):
     every candidate on the menu is built (or shown unable to win) and the
     exact smallest payload is taken.  zebra-snappy is always on the menu,
     so the payload is never larger than zebra's.  The rest of the menu:
@@ -1247,11 +1232,12 @@ def encode_strings(
     strings; when present the DICT candidate uses Arrow's vectorized
     ``dictionary_encode`` instead of a Python split loop.
     """
+    policy = resolve_policy(policy)
     lengths = np.ascontiguousarray(lengths, dtype=_I64)
     n = len(lengths)
 
-    def offered(c, policies=("balanced", "size", "speed")):
-        return c in allow if allow is not None else _CODEC_POLICY in policies
+    def offered(c, policies=POLICIES):
+        return c in allow if allow is not None else policy in policies
 
     zebra_payload = pack_strings(lengths, concat)
     best = (StrCodec.ZEBRA, zebra_payload)
@@ -1260,7 +1246,7 @@ def encode_strings(
         dict_parts = _string_dict_split(lengths, concat, n, arrow_array)
         if dict_parts is not None:
             u_len, u_concat, idx = dict_parts
-            icodec, ipayload, _ = encode_ints(idx)
+            icodec, ipayload, _ = encode_ints(idx, policy=policy)
             payload = (
                 np.uint32(len(u_len)).astype("<u4").tobytes()
                 + pack_strings(u_len, u_concat)
@@ -1277,7 +1263,7 @@ def encode_strings(
     def consider(codec, body):
         nonlocal best, head
         if len(body) < len(best[1]):
-            head = head or _lengths_section(lengths)
+            head = head or _lengths_section(lengths, policy)
             if len(head) + len(body) < len(best[1]):
                 best = (codec, head + body)
 
@@ -1285,7 +1271,7 @@ def encode_strings(
         offered(StrCodec.ZSTD, ("balanced", "size"))
         and _ZSTD_MIN <= len(concat) <= _GP_MAX_FULL
     ):
-        level = _ZSTD_LEVEL_SIZE if _CODEC_POLICY == "size" else _ZSTD_LEVEL
+        level = _ZSTD_LEVEL_SIZE if policy == "size" else _ZSTD_LEVEL
         comp = _zstd_compress(concat, level)
         consider(StrCodec.ZSTD, np.uint32(len(comp)).astype("<u4").tobytes() + comp)
 

@@ -3,13 +3,11 @@
 The operational complement of the round-trip law: at 100 TB you cannot
 diff decoded output against the source every day, but you CAN stream an
 audit pass that, per block, (a) checks the stored crc32, (b) decodes the
-payload, (c) re-encodes the decoded batch HINT-FREE (the int selector's
-per-column hint cache makes live encodes depend on preceding blocks; the
-audit re-encode runs with ``use_hints=False`` under the ``speed`` policy,
-the cheapest menu, so it is a function of the block values alone) and
-confirms the re-encode decodes BIT-identically — compared via IPC bytes,
-so NaN payload bits and signed zeros are held to the same bit-exact
-standard as the round-trip tests.
+payload, (c) re-encodes the decoded batch under the ``speed`` policy,
+the cheapest menu (an encode is a function of the block values and the
+policy alone), and confirms the re-encode decodes BIT-identically —
+compared via IPC bytes, so NaN payload bits and signed zeros are held to
+the same bit-exact standard as the round-trip tests.
 Byte equality of the payloads is kept as the cheap fast path.
 
 Scope (what the law can and cannot catch): crc_ok catches storage
@@ -34,7 +32,6 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..codec import codecs as _codecs
 from ..codec.blocks import decode_batch, encode_batch
 from ..codec.warmup import warm_codec
 from .decode import _block_schema
@@ -89,10 +86,7 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
                         decoded = decode_batch(payload, schema)
                         decode_ok = decoded.num_rows == n_rows
                         if check_reencode:
-                            with _codecs.codec_policy("speed"):
-                                re_payload, _ = encode_batch(
-                                    decoded, use_hints=False
-                                )
+                            re_payload, _ = encode_batch(decoded, "speed")
                             # byte equality = fast path; otherwise the
                             # re-encode must decode bit-identically
                             reenc = re_payload == payload or _ipc_bytes(

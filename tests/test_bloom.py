@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 
 from zebra_spark.codec.bloom import (
     BITS_PER_KEY,
+    K_HASHES,
     bloom_build,
     bloom_contains,
     bloom_words,
@@ -76,6 +77,66 @@ def test_sql_probe_matches_python(spark):
         ]
         assert got[1] is True  # NULL filter never skips
         assert got[0] == bloom_contains(bloom_build(keys), p)
+
+
+def _sql_probe(stored_words: list[int], value) -> bool:
+    """``bloom_might_contain_expr``'s arithmetic, term for term, on one
+    filter as the blocks table stores it (signed BIGINT words): pmod by
+    the filter's bit count, the word at pos / 64, ``shiftleft(1L, pos %
+    64)`` and a bitwise AND."""
+    h1, h2 = probe_hashes(value)
+    m = len(stored_words) * 64
+    for i in range(K_HASHES):
+        pos = (h1 + i * h2) % m
+        if stored_words[pos // 64] & (1 << (pos % 64)) == 0:
+            return False
+    return True
+
+
+def _present_absent(kind: str):
+    rng = np.random.default_rng(2)
+    if kind == "int":
+        present, absent = (
+            [int(x) for x in rng.integers(-(2**62), 2**62, size=400)]
+            for _ in range(2)
+        )
+        keys = np.array(present, dtype=np.int64)
+    else:
+        present = [f"doc-{i}" for i in range(400)]
+        absent = [f"nope-{i}" for i in range(400)]
+        keys = np.array([string_key_to_int64(k) for k in present], dtype=np.int64)
+    return bloom_build(keys).view(np.int64), present, absent
+
+
+@pytest.mark.parametrize("kind", ["int", "str"])
+def test_numpy_probe_on_stored_words_matches_sql_arithmetic(kind):
+    """Spark-free: bloom_contains on the int64 words a stored table hands
+    the decode tasks agrees with the SQL probe's arithmetic, for present
+    and absent keys."""
+    stored, present, absent = _present_absent(kind)
+    words = stored.tolist()
+    assert all(bloom_contains(stored, v) for v in present)
+    assert all(_sql_probe(words, v) for v in present)
+    got = [bloom_contains(stored, v) for v in absent]
+    assert got == [_sql_probe(words, v) for v in absent]
+    assert sum(got) < len(absent) // 4  # absent keys are mostly rejected
+
+
+@pytest.mark.parametrize("kind", ["int", "str"])
+def test_sql_probe_matches_numpy_on_present_and_absent_keys(spark, kind):
+    """The Catalyst expression and bloom_contains give the same answer on
+    present and absent int and string keys."""
+    from pyspark.sql import functions as F
+
+    from zebra_spark.codec.bloom import bloom_might_contain_expr
+
+    stored, present, absent = _present_absent(kind)
+    probes = present[:30] + absent[:60]
+    df = spark.createDataFrame([(stored.tolist(),)], "key_bloom array<bigint>")
+    row = df.select(
+        *[bloom_might_contain_expr(F.col("key_bloom"), p) for p in probes]
+    ).head()
+    assert list(row) == [bloom_contains(stored, p) for p in probes]
 
 
 def test_point_lookup_block_skipping(spark):

@@ -129,10 +129,16 @@ def test_one_core_worker_stops_rereading_after_first_task():
     assert res["driver_stock"], res
 
 
-def test_decode_df_runs_one_job_for_its_schema(spark, tmp_path):
-    """decode_df on a stored table starts exactly one job, the head() that
-    fetches the schema, whatever the read: plain, with the ignored
-    resolve_schemas flag, or keyed.  With schema= given it starts none."""
+def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):
+    """decode_df reads a bare stored table's schema with pyarrow on the
+    driver and starts no job, whatever the read: plain, with the ignored
+    resolve_schemas flag, or keyed.  A filtered or repartitioned table
+    keeps the mapInArrow path and its head() for the schema: one job, and
+    one more for the shuffle under a repartitioned table's head() (AQE
+    runs each shuffle stage as its own job).  With schema= given no read
+    starts a job."""
+    from pyspark.sql import functions as F
+
     from zebra_spark.operators.decode import decode_df
     from zebra_spark.operators.encode import encode_df
     from zebra_spark.sources.synth import f1_table
@@ -145,6 +151,8 @@ def test_decode_df_runs_one_job_for_its_schema(spark, tmp_path):
         "plain": lambda: decode_df(stored),
         "resolve": lambda: decode_df(stored, resolve_schemas=True),
         "keyed": lambda: decode_df(stored, key_range=("a", "z")),
+        "filtered": lambda: decode_df(stored.filter(F.col("n_rows") > 0)),
+        "repartitioned": lambda: decode_df(stored.repartition(3)),
         "given": lambda: decode_df(stored, schema=df.schema),
     }
     sc = spark.sparkContext
@@ -158,7 +166,14 @@ def test_decode_df_runs_one_job_for_its_schema(spark, tmp_path):
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
     jobs = {n: len(tracker.getJobIdsForGroup(f"zs-decode-{n}")) for n in reads}
-    assert jobs == {"plain": 1, "resolve": 1, "keyed": 1, "given": 0}
+    assert jobs == {
+        "plain": 0,
+        "resolve": 0,
+        "keyed": 0,
+        "filtered": 1,
+        "repartitioned": 2,
+        "given": 0,
+    }
     for dec in decoded.values():
         assert dec.schema == df.schema
     assert decoded["resolve"].count() == df.count()

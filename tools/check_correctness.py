@@ -5,6 +5,7 @@ exists, the oracle on DuckDB over the same parquet; compares row count,
 column names, and an order-insensitive value hash.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+(sf_dir defaults to $SPARK_GRAFT_SF_DIR, else the sf0.01 test tables).
 """
 
 from __future__ import annotations
@@ -59,7 +60,11 @@ def _norm(v) -> str:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = (
+        sys.argv[1]
+        if len(sys.argv) > 1
+        else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    )
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry

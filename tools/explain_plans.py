@@ -1,6 +1,7 @@
 """Dump physical plans of the key operators to PLANS.md.
 
-Run: python tools/explain_plans.py
+Run: python tools/explain_plans.py [sf-dir]
+(sf-dir defaults to $SPARK_GRAFT_SF_DIR, else the sf0.01 test tables).
 Used to audit scale-readiness: pushdown/pruning reaching the scans,
 broadcast vs shuffle joins, whole-stage codegen coverage.
 """
@@ -14,8 +15,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-SF = "/root/testdata/sf0.01"
 
 
 def plan_of(df) -> str:
@@ -32,6 +31,11 @@ def main():
     from zebra_spark.operators.decode import decode_df
     from zebra_spark.operators.merge import merge_tables
 
+    sf_dir = (
+        sys.argv[1]
+        if len(sys.argv) > 1
+        else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    )
     spark = get_spark(master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -40,9 +44,9 @@ def main():
 
     def q(name):
         fn = _qs.get(name) or getattr(entry, f"_q_{name}")
-        return fn(spark, SF)
+        return fn(spark, sf_dir)
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plans = {}
 
     blocks = encode_df(docs, rows_per_block=1 << 16)

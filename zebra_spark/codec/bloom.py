@@ -121,10 +121,16 @@ def bloom_might_contain_expr(bloom_col, value):
 
 
 def bloom_contains(words: np.ndarray, value) -> bool:
-    """Python-side membership check (tests / single-block use)."""
+    """Python-side membership check, the numpy twin of
+    ``bloom_might_contain_expr``: stored-table point lookups probe each
+    block's filter with it.  ``words``: uint64 words, or the int64 words
+    the blocks table stores as ``array<bigint>``."""
     if isinstance(value, (str, bytes)):
         value = string_key_to_int64(value)
-    words = np.asarray(words, dtype=np.uint64)
+    words = np.asarray(words)
+    if words.dtype == np.int64:
+        words = words.view(np.uint64)
+    words = words.astype(np.uint64, copy=False)
     m = np.uint64(len(words) * 64)
     arr = np.array([value], dtype=np.int64).view(np.uint64)
     h1, h2 = _h1_h2(arr)

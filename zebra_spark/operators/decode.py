@@ -3,17 +3,27 @@
 Spark analogue of `zebra export` (zebra-cli/src/Zebra/Command/Export.hs:
 114-143): each task decodes its block rows back to Arrow batches.  Fully
 parallel — a block is self-describing (schema + payload + crc32).
+
+A bare stored blocks table is read by Python tasks straight from its
+parquet row groups, the way zebra streams a block file on the reader
+(zebra-core/src/Zebra/Serial/Binary/File.hs): no JVM scan and no Arrow
+hop of the payloads.  Any other blocks DataFrame is decoded by a
+``mapInArrow`` over its rows.
 """
 
 from __future__ import annotations
 
 import json
 import zlib
+from itertools import groupby
 from typing import Iterator
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -29,7 +39,10 @@ def spark_schema_with_meta(arrow_schema: pa.Schema) -> T.StructType:
     return from_arrow_schema(arrow_schema)
 
 from ..codec.blocks import decode_batch
+from ..codec.bloom import bloom_contains
 from ..codec.warmup import warm_codec
+from ..session import map_items
+from ..sources.parquet_direct import row_group_footers
 
 
 class SchemaBytesMissing(ValueError):
@@ -77,6 +90,9 @@ def _decode_fn(
             payloads = rb.column("payload")
             crcs = rb.column("crc32")
             ids = rb.column("block_id")
+            counts = (
+                rb.column("n_rows") if "n_rows" in rb.schema.names else None
+            )
             for i in range(rb.num_rows):
                 payload = payloads[i].as_py()
                 if verify_crc:
@@ -85,28 +101,124 @@ def _decode_fn(
                         raise ValueError(
                             f"crc mismatch in block {ids[i].as_py()}"
                         )
-                yield decode_batch(
+                out = decode_batch(
                     payload,
                     _block_schema(parsed, rb, i),
                     columns=columns,
                     validate_maps=validate_maps,
                 )
+                n = None if counts is None else counts[i].as_py()
+                # a batch with no columns has no row count to compare
+                if n is not None and out.num_columns and out.num_rows != n:
+                    raise ValueError(
+                        f"block {ids[i].as_py()} decodes to {out.num_rows} "
+                        f"rows but its n_rows is {n}"
+                    )
+                yield out
 
     return decode
 
 
-def arrow_schema_of(blocks: DataFrame) -> tuple[pa.Schema, tuple[str, bytes]]:
+def arrow_schema_of(
+    blocks: DataFrame, footers: list | None = None
+) -> tuple[pa.Schema, tuple[str, bytes]]:
     """The arrow schema of the first schema-bearing block row, and its
-    ``(schema_id, bytes)`` pair to seed ``_decode_fn``: one ``head()`` job."""
-    row = (
-        blocks.filter(F.col("schema").isNotNull())
-        .select("schema_id", "schema")
-        .head()
-    )
-    if row is None:
+    ``(schema_id, bytes)`` pair to seed ``_decode_fn``.  Read with pyarrow
+    from the stored row groups ``footers`` (``_stored_footers``) when
+    given, else one ``head()`` job."""
+    if footers is None:
+        row = (
+            blocks.filter(F.col("schema").isNotNull())
+            .select("schema_id", "schema")
+            .head()
+        )
+        seed = None if row is None else (row[0], bytes(row[1]))
+    else:
+        seed = _stored_seed(footers)
+    if seed is None:
         raise ValueError("blocks DataFrame is empty; pass an explicit schema")
-    seed = (row[0], bytes(row[1]))
     return pa.ipc.read_schema(pa.py_buffer(seed[1])), seed
+
+
+def _stored_footers(blocks: DataFrame, needed: set[str]) -> list | None:
+    """``(file, row group, footer metadata)`` of every row group of
+    ``blocks`` when it is a bare stored parquet table holding the
+    ``needed`` columns: its optimized plan is a parquet relation without
+    partition columns, at most under a Project of plain columns, over
+    local files.  None for any other DataFrame (filtered, repartitioned,
+    unioned, cached, computed, directory-partitioned)."""
+    if not needed <= set(blocks.columns):
+        return None
+    plan = blocks._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        exprs = plan.projectList()
+        if any(
+            exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(exprs.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().length() != 0
+    ):
+        return None
+    files = []
+    for uri in blocks.inputFiles():
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            return None
+        files.append(unquote(url.path))
+    return list(row_group_footers(sorted(files)))
+
+
+def _stored_seed(footers: list) -> tuple[str, bytes] | None:
+    """``(schema_id, schema bytes)`` of the first schema-bearing row of the
+    stored row groups, or None when no row carries schema bytes."""
+    for f, rg, _ in footers:
+        with pq.ParquetFile(f, memory_map=True) as pf:
+            for rb in pf.iter_batches(
+                batch_size=64, row_groups=[rg], columns=["schema_id", "schema"]
+            ):
+                raws = rb.column("schema")
+                if raws.null_count < rb.num_rows:
+                    i = raws.is_valid().to_numpy(zero_copy_only=False).argmax()
+                    return rb.column("schema_id")[i].as_py(), raws[i].as_py()
+    return None
+
+
+def _zone_bounds(key_range) -> tuple[str | None, str | None]:
+    """``key_range = (lo, hi)`` in the order-preserving string form
+    ``encode._key_str`` writes to key_min/key_max."""
+    from .encode import _key_str
+
+    lo, hi = key_range
+    for b in (lo, hi):
+        # r7 (ADVICE): float bounds stringify to a non-lexicographically-
+        # ordered form ('10.0' < '2.0'), so blocks holding in-range rows
+        # would be SILENTLY skipped — reject instead of losing rows.  The
+        # zfile range reader has the same int/string discipline
+        # (_validate_key_range); date/datetime stringify ordered.
+        if isinstance(b, float):
+            raise TypeError(
+                "key_range bounds must be int/string/date/timestamp — "
+                f"float bound {b!r} has no order-preserving string form"
+            )
+    return (
+        None if lo is None else _key_str(lo),
+        None if hi is None else _key_str(hi),
+    )
+
+
+def _lookup_values(key_equals) -> list:
+    values = key_equals if isinstance(key_equals, (list, tuple)) else [key_equals]
+    if not values:
+        raise ValueError("key_equals: need at least one lookup value")
+    return list(values)
 
 
 def zone_map_filter(blocks: DataFrame, key_range) -> DataFrame:
@@ -126,25 +238,12 @@ def zone_map_filter(blocks: DataFrame, key_range) -> DataFrame:
     JVM-side on two slim string columns and parquet-prunes when the blocks
     table is stored.
     """
-    from .encode import _key_str
-
-    lo, hi = key_range
-    for b in (lo, hi):
-        # r7 (ADVICE): float bounds stringify to a non-lexicographically-
-        # ordered form ('10.0' < '2.0'), so blocks holding in-range rows
-        # would be SILENTLY skipped — reject instead of losing rows.  The
-        # zfile range reader has the same int/string discipline
-        # (_validate_key_range); date/datetime stringify ordered.
-        if isinstance(b, float):
-            raise TypeError(
-                "key_range bounds must be int/string/date/timestamp — "
-                f"float bound {b!r} has no order-preserving string form"
-            )
+    lo, hi = _zone_bounds(key_range)
     cond = F.lit(True)
     if lo is not None:
-        cond = cond & (F.col("key_max") >= F.lit(_key_str(lo)))
+        cond = cond & (F.col("key_max") >= F.lit(lo))
     if hi is not None:
-        cond = cond & (F.col("key_min") <= F.lit(_key_str(hi)))
+        cond = cond & (F.col("key_min") <= F.lit(hi))
     return blocks.filter(F.col("key_min").isNull() | cond)
 
 
@@ -164,13 +263,135 @@ def bloom_filter_blocks(blocks: DataFrame, key_equals) -> DataFrame:
         # blocks stored before the bloom column existed: nothing is known,
         # nothing can be skipped
         return blocks
-    values = key_equals if isinstance(key_equals, (list, tuple)) else [key_equals]
-    if not values:
-        raise ValueError("key_equals: need at least one lookup value")
+    values = _lookup_values(key_equals)
     cond = bloom_might_contain_expr(F.col("key_bloom"), values[0])
     for v in values[1:]:
         cond = cond | bloom_might_contain_expr(F.col("key_bloom"), v)
     return blocks.filter(cond)
+
+
+def _row_group_may_meet(md: pq.RowGroupMetaData, lo, hi) -> bool:
+    """False only when the row group's key_min/key_max statistics prove
+    that none of its block rows meets ``[lo, hi]``; a row group holding
+    NULL zone maps is never skipped."""
+    stats = {
+        md.column(i).path_in_schema: md.column(i).statistics
+        for i in range(md.num_columns)
+    }
+    kmin, kmax = stats.get("key_min"), stats.get("key_max")
+    if (
+        kmin is None
+        or kmax is None
+        or not (kmin.has_min_max and kmax.has_min_max)
+        or not kmin.has_null_count
+        or kmin.null_count
+    ):
+        return True
+    return (lo is None or kmax.max >= lo) and (hi is None or kmin.min <= hi)
+
+
+def _pack_row_groups(spark: SparkSession, footers: list) -> list[list]:
+    """Contiguous runs of ``(file, row group)`` packed to Spark's own file
+    split size, ``min(maxPartitionBytes, max(openCostInBytes, total /
+    defaultParallelism))``, counting each row group's compressed bytes
+    plus the open cost: small row groups share a task, and a table is
+    never squeezed into fewer tasks than cores when it has the row
+    groups to fill them."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    sized = [
+        (
+            (f, rg),
+            open_cost
+            + sum(md.column(i).total_compressed_size for i in range(md.num_columns)),
+        )
+        for f, rg, md in footers
+    ]
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(
+            open_cost,
+            sum(n for _, n in sized) // spark.sparkContext.defaultParallelism,
+        ),
+    )
+    tasks: list[list] = []
+    size = 0
+    for item, n in sized:
+        if not tasks or size + n > split:
+            tasks.append([])
+            size = 0
+        tasks[-1].append(item)
+        size += n
+    return tasks
+
+
+def _zone_mask(rb: pa.RecordBatch, lo, hi) -> pa.Array:
+    """``zone_map_filter``'s predicate on a batch of block rows: NULL
+    key_min rows survive, and a NULL comparison drops the row as Spark's
+    filter does."""
+    cond = True
+    if lo is not None:
+        cond = pc.and_kleene(cond, pc.greater_equal(rb.column("key_max"), lo))
+    if hi is not None:
+        cond = pc.and_kleene(cond, pc.less_equal(rb.column("key_min"), hi))
+    return pc.or_kleene(pc.is_null(rb.column("key_min")), cond)
+
+
+def _bloom_mask(rb: pa.RecordBatch, values: list) -> pa.Array:
+    """``bloom_filter_blocks``' predicate on a batch of block rows, with
+    the numpy probe: a NULL filter keeps its block."""
+    blooms = rb.column("key_bloom")
+    return pa.array(
+        [
+            not blooms[i].is_valid
+            or any(
+                bloom_contains(blooms[i].values.to_numpy(), v) for v in values
+            )
+            for i in range(rb.num_rows)
+        ],
+        pa.bool_(),
+    )
+
+
+def _stored_batches(
+    tasks: Iterator[list], cols: list[str], bounds, values
+) -> Iterator[pa.RecordBatch]:
+    """The block rows of the given row groups that survive the zone maps
+    and the Bloom filters, read with only the columns the decode needs."""
+    for group in tasks:
+        for f, items in groupby(group, key=lambda item: item[0]):
+            with pq.ParquetFile(f, memory_map=True) as pf:
+                present = set(pf.schema_arrow.names)
+                for rb in pf.iter_batches(
+                    row_groups=[rg for _, rg in items],
+                    columns=[c for c in cols if c in present],
+                ):
+                    names = rb.schema.names
+                    if bounds is not None and "key_min" in names:
+                        rb = rb.filter(_zone_mask(rb, *bounds))
+                    if values is not None and "key_bloom" in names:
+                        rb = rb.filter(_bloom_mask(rb, values))
+                    yield rb
+
+
+def _decode_stored(
+    spark: SparkSession, footers: list, cols: list[str], decode, schema,
+    key_range, key_equals,
+) -> DataFrame:
+    """Decode a stored blocks table in Python tasks over its row groups
+    (``session.map_items``): key_range drops row groups by their
+    key_min/key_max statistics, then each task drops block rows by zone
+    map and Bloom filter before ``decode`` sees them."""
+    bounds = None if key_range is None else _zone_bounds(key_range)
+    values = None if key_equals is None else _lookup_values(key_equals)
+    if bounds is not None:
+        footers = [x for x in footers if _row_group_may_meet(x[2], *bounds)]
+    tasks = _pack_row_groups(spark, footers)
+
+    def run(task_groups: Iterator[list]) -> Iterator[pa.RecordBatch]:
+        return decode(_stored_batches(task_groups, cols, bounds, values))
+
+    return map_items(spark, tasks, run, schema, len(tasks))
 
 
 def decode_df(
@@ -185,10 +406,20 @@ def decode_df(
 ) -> DataFrame:
     """Decode a blocks DataFrame back to the original rows.
 
+    A bare stored table (``spark.read.parquet`` of a blocks table, at most
+    column-pruned) is read in Python tasks straight from its parquet row
+    groups, packed to Spark's own split size: no JVM scan, and only the
+    block columns the decode needs are read.  Every other DataFrame
+    (filtered, repartitioned, unioned, lazily encoded, cached, or with
+    partition columns) is decoded by a ``mapInArrow`` over its rows.
+    Both give the same rows.
+
     ``schema``: pyspark StructType or pyarrow Schema.  When omitted it is
-    fetched from the first block row (one ``head()`` job).  Every block
-    row carries its schema bytes, so stored, filtered, shuffled and lazily
-    encoded blocks all decode the same way.
+    taken from the first schema-bearing block row: read with pyarrow on a
+    stored table (no job), one ``head()`` job otherwise.  Every block row
+    carries its schema bytes, so stored, filtered, shuffled and lazily
+    encoded blocks all decode the same way.  A block whose ``n_rows``
+    disagrees with the rows it decodes to raises ``ValueError``.
 
     ``resolve_schemas``: ignored; accepted so older callers keep running.
 
@@ -203,22 +434,32 @@ def decode_df(
 
     ``key_range``: ``(lo, hi)`` zone-map block skipping (either bound may
     be None).  Blocks whose key_min/key_max interval misses the range are
-    dropped BEFORE the decode UDF — whole payloads skipped without
-    decompression.  Zone maps are block-granular: surviving blocks may
-    still contain out-of-range rows, so apply the exact row predicate
-    after decode.
+    dropped before they are decoded — whole payloads skipped without
+    decompression; on a stored table whole row groups are first dropped
+    by their key_min/key_max statistics.  Zone maps are block-granular:
+    surviving blocks may still contain out-of-range rows, so apply the
+    exact row predicate after decode.
 
     ``key_equals``: one value or a list — point-lookup block skipping on
-    the per-block key Bloom filters (``encode_df(key_bloom=True)``);
-    NULL-filter blocks never skip, false positives only decode an extra
-    block, false negatives cannot happen.  Same residual-predicate
-    contract as ``key_range``; both may be combined.
+    the per-block key Bloom filters (``encode_df(key_bloom=True)``),
+    probed in the decode task on a stored table and by a Catalyst
+    predicate otherwise; NULL-filter blocks never skip, false positives
+    only decode an extra block, false negatives cannot happen.  Same
+    residual-predicate contract as ``key_range``; both may be combined.
     """
+    cols = ["block_id", "n_rows", "payload", "crc32", "schema_id", "schema"]
+    if key_range is not None:
+        cols += ["key_min", "key_max"]
+    if key_equals is not None:
+        cols.append("key_bloom")
+    # n_rows and key_bloom are optional: without them nothing is checked
+    # or skipped, on either path
+    footers = _stored_footers(blocks, set(cols) - {"n_rows", "key_bloom"})
     seed = None
     if schema is None:
         # from the unfiltered blocks: its seed also decodes the id-only
         # rows of tables written before every row carried its schema
-        schema, seed = arrow_schema_of(blocks)
+        schema, seed = arrow_schema_of(blocks, footers)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     if columns is not None:
@@ -230,10 +471,19 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
+    decode = _decode_fn(verify_crc, columns, validate_maps, seed)
+    if footers is not None:
+        return _decode_stored(
+            blocks.sparkSession,
+            footers,
+            [c for c in cols if c in blocks.columns],
+            decode,
+            schema,
+            key_range,
+            key_equals,
+        )
     if key_range is not None:
         blocks = zone_map_filter(blocks, key_range)
     if key_equals is not None:
         blocks = bloom_filter_blocks(blocks, key_equals)
-    return blocks.mapInArrow(
-        _decode_fn(verify_crc, columns, validate_maps, seed), schema=schema
-    )
+    return blocks.mapInArrow(decode, schema=schema)

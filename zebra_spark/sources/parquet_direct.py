@@ -29,13 +29,20 @@ from ..operators.encode import BLOCKS_DDL, encode_chunk_rows
 from ..session import map_items
 
 
-def list_row_groups(path: str) -> list[tuple[str, int]]:
-    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
-    splits: list[tuple[str, int]] = []
+def row_group_footers(
+    files: list[str],
+) -> Iterator[tuple[str, int, pq.RowGroupMetaData]]:
+    """``(file, row group, its footer metadata)`` for every row group of
+    ``files``, in order; reads footers only."""
     for f in files:
         md = pq.ParquetFile(f, memory_map=True).metadata
-        splits.extend((f, rg) for rg in range(md.num_row_groups))
-    return splits
+        for rg in range(md.num_row_groups):
+            yield f, rg, md.row_group(rg)
+
+
+def list_row_groups(path: str) -> list[tuple[str, int]]:
+    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
+    return [(f, rg) for f, rg, _ in row_group_footers(files)]
 
 
 def encode_parquet_direct(

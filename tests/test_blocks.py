@@ -266,6 +266,15 @@ def test_projection_pushdown_decode():
     assert t_pruned < t_full
 
 
+def test_zero_column_projection_keeps_row_count():
+    batch = pa.RecordBatch.from_pydict(
+        {"a": pa.array(range(7880), type=pa.int64()), "z": ["p", "q"] * 3940}
+    )
+    payload, _ = encode_batch(batch)
+    out = decode_batch(payload, batch.schema, columns=[])
+    assert (out.num_rows, out.num_columns) == (7880, 0)
+
+
 def test_projection_pushdown_with_nulls_and_nesting():
     batch = pa.RecordBatch.from_pydict(
         {

@@ -115,6 +115,55 @@ def test_multi_schema_table(spark, tmp_path):
     assert _same_rows(direct, a.union(b))
 
 
+def test_mixed_nullability_table(spark, tmp_path):
+    """Blocks whose stored schemas differ only in k's nullability decode
+    in one task, on both paths, seeded or with schema given, and
+    rechunk.  Each task's batches take k's declared nullability."""
+    from zebra_spark.operators.rechunk import rechunk_blocks
+
+    path = str(tmp_path / "nullability")
+    a = spark.range(0, 1000, 1, 1).selectExpr("id AS k")
+    b = spark.range(1000, 2000, 1, 1).selectExpr("IF(id < 0, NULL, id) AS k")
+    encode_df(a, rows_per_block=100).union(
+        encode_df(b, rows_per_block=100)
+    ).coalesce(1).write.parquet(path)
+    stored = spark.read.parquet(path)
+    assert stored.select("schema_id").distinct().count() == 2
+    direct = decode_df(stored)
+    assert direct.rdd.getNumPartitions() == 1
+    one_task = stored.coalesce(1)
+    assert "FileSourceScanExec" in _plan_nodes(decode_df(one_task))
+    for out in (
+        direct,
+        decode_df(one_task),
+        decode_df(stored, schema=direct.schema),
+        decode_df(rechunk_blocks(one_task, rows_per_block=300)),
+    ):
+        assert _same_rows(out, a.union(b))
+
+    # real NULLs after the non-nullable blocks: the seed declares k
+    # non-nullable and the NULL blocks fail closed; a nullable schema=
+    # decodes them on both paths
+    nulls = spark.range(1000, 2000, 1, 1).selectExpr("IF(id % 7 = 0, NULL, id) AS k")
+    path = str(tmp_path / "nulls")
+    encode_df(a, rows_per_block=100).union(
+        encode_df(nulls, rows_per_block=100)
+    ).coalesce(1).write.parquet(path)
+    stored = spark.read.parquet(path)
+    with pytest.raises(Exception, match="null values to non-nullable"):
+        decode_df(stored).collect()
+    for table in (stored, stored.coalesce(1)):
+        out = decode_df(table, schema=nulls.schema)
+        assert out.filter("k IS NULL").count() == 143
+        assert _same_rows(out, a.union(nulls))
+
+
+def test_zero_column_read_counts_every_row(keyed):
+    stored, df = keyed
+    for table in (stored, _via_jvm(stored)):
+        assert decode_df(table, columns=[]).count() == df.count()
+
+
 def test_legacy_first_row_schema_table(spark, tmp_path):
     from tests.test_self_describing_blocks import _legacy, _table
 

@@ -1,9 +1,12 @@
 """Worker bootstrap: PySpark's per-task importlib.invalidate_caches() must
 not re-read an unchanged pyspark.zip directory, and a rewritten zip must
-still be re-read."""
+still be re-read.  The daemon's post-task gc.collect() freezes the
+worker's long-lived heap, and a collection inside a task still reclaims
+that task's cycles."""
 
 from __future__ import annotations
 
+import gc
 import importlib
 import json
 import os
@@ -69,7 +72,7 @@ def test_zip_index_cache_skips_unchanged_and_rereads_rewritten(tmp_path, monkeyp
 
 
 _ONE_CORE_SCRIPT = r"""
-import json, os, zipimport
+import gc, json, os, zipimport
 import pyarrow as pa
 from zebra_spark import worker_boot
 from zebra_spark.session import get_spark
@@ -78,7 +81,8 @@ spark = get_spark(master="local[1]", shuffle_partitions=1)
 spark.sparkContext.setLogLevel("ERROR")
 
 def task(batches):
-    import zipimport
+    import gc, weakref, zipimport
+    frozen, unfrozen = gc.get_freeze_count(), len(gc.get_objects())
     if not hasattr(zipimport, "_zs_reads"):
         real = zipimport._read_directory
         zipimport._zs_reads = [0]
@@ -91,21 +95,43 @@ def task(batches):
         vals = rb.column("id").to_numpy()
         codec, payload, _ = encode_ints(vals)
         assert (decode_ints(codec, payload, len(vals))[0] == vals).all()
-    yield pa.RecordBatch.from_pydict(
-        {"pid": [os.getpid()], "reads": [zipimport._zs_reads[0]]}
-    )
+    # a cycle that is live through one in-task collect (which must not
+    # freeze it) and garbage at the next must be reclaimed by the next
+    class Node:
+        pass
+    node = Node()
+    node.self = node
+    ref = weakref.ref(node)
+    gc.collect()
+    del node
+    gc.collect()
+    yield pa.RecordBatch.from_pydict({
+        "pid": [os.getpid()],
+        "reads": [zipimport._zs_reads[0]],
+        "frozen": [frozen],
+        "unfrozen": [unfrozen],
+        "cycle_freed": [ref() is None],
+    })
 
 rows = [
     spark.range(64, numPartitions=1)
-    .mapInArrow(task, "pid long, reads long")
+    .mapInArrow(
+        task,
+        "pid long, reads long, frozen long, unfrozen long, cycle_freed boolean",
+    )
     .collect()[0]
     for _ in range(8)
 ]
 print(json.dumps({
     "pids": sorted({r.pid for r in rows}),
     "reads": [r.reads for r in rows],
+    "frozen": [r.frozen for r in rows],
+    "unfrozen": [r.unfrozen for r in rows],
+    "cycle_freed": [r.cycle_freed for r in rows],
     "driver_stock": zipimport.zipimporter.invalidate_caches
     is worker_boot._stock_invalidate,
+    "driver_hook": worker_boot._freeze_after_task_collect in gc.callbacks,
+    "driver_frozen": gc.get_freeze_count(),
 }))
 spark.stop()
 """
@@ -114,7 +140,11 @@ spark.stop()
 def test_one_core_worker_stops_rereading_after_first_task():
     """8 sequential engine tasks on a 1-core session run in one reused
     worker; its zip directory re-read count must not grow after task 1
-    (stock PySpark re-reads ~16 directories every task)."""
+    (stock PySpark re-reads ~16 directories every task).  The daemon's
+    collect after task 1 freezes the worker's heap: the frozen count is
+    flat from task 3 on, each task starts with few unfrozen objects, and
+    every task's cycle is still collected inside it.  The driver has no
+    hook and nothing frozen."""
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p
     ))
@@ -127,6 +157,15 @@ def test_one_core_worker_stops_rereading_after_first_task():
     assert len(res["pids"]) == 1, res
     assert res["reads"] == [res["reads"][0]] * 8, res
     assert res["driver_stock"], res
+    # task 2 leaves a few dozen lazily built objects to the next freeze;
+    # from task 3 on nothing new survives a task
+    frozen = res["frozen"]
+    assert frozen[0] == 0 and frozen[1] > 0, res
+    assert frozen[2] - frozen[1] < frozen[1] // 100, res
+    assert frozen[2:] == [frozen[2]] * 6, res
+    assert max(res["unfrozen"][1:]) < frozen[1] // 10, res
+    assert all(res["cycle_freed"]), res
+    assert not res["driver_hook"] and res["driver_frozen"] == 0, res
 
 
 def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):
@@ -136,11 +175,13 @@ def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):
     keeps the mapInArrow path and its head() for the schema: one job, and
     one more for the shuffle under a repartitioned table's head() (AQE
     runs each shuffle stage as its own job).  With schema= given no read
-    starts a job."""
+    starts a job.  rechunk_blocks reads a stored table's schema the same
+    way: no job."""
     from pyspark.sql import functions as F
 
     from zebra_spark.operators.decode import decode_df
     from zebra_spark.operators.encode import encode_df
+    from zebra_spark.operators.rechunk import rechunk_blocks
     from zebra_spark.sources.synth import f1_table
 
     path = str(tmp_path / "blocks.parquet")
@@ -154,6 +195,9 @@ def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):
         "filtered": lambda: decode_df(stored.filter(F.col("n_rows") > 0)),
         "repartitioned": lambda: decode_df(stored.repartition(3)),
         "given": lambda: decode_df(stored, schema=df.schema),
+        "rechunk": lambda: decode_df(
+            rechunk_blocks(stored, rows_per_block=512), schema=df.schema
+        ),
     }
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -173,7 +217,9 @@ def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):
         "filtered": 1,
         "repartitioned": 2,
         "given": 0,
+        "rechunk": 0,
     }
     for dec in decoded.values():
         assert dec.schema == df.schema
     assert decoded["resolve"].count() == df.count()
+    assert decoded["rechunk"].count() == df.count()

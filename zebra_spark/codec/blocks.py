@@ -557,6 +557,11 @@ def decode_batch(
             pos = _skip_column(mv, pos, field.type, n_rows)
     if pos != len(mv):
         raise ValueError(f"trailing bytes in block: {len(mv) - pos}")
+    if not arrays:
+        # a batch built from no arrays has 0 rows; keep the block's count
+        return pa.RecordBatch.from_struct_array(
+            pa.nulls(n_rows, pa.struct([]))
+        ).replace_schema_metadata(schema.metadata)
     return pa.RecordBatch.from_arrays(
         arrays, schema=pa.schema(fields, metadata=schema.metadata)
     )

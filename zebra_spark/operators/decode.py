@@ -73,19 +73,38 @@ def _block_schema(
 
 def _decode_fn(
     verify_crc: bool,
+    nullable: dict[str, bool],
     columns=None,
     validate_maps: bool = False,
     seed: tuple[str, bytes] | None = None,
 ):
     """``seed``: one ``(schema_id, schema bytes)`` pair parsed before the
     first row, so rows of older tables that carry only the id still
-    decode."""
+    decode.
+
+    A task yields every batch in one arrow schema, as its Arrow stream
+    requires: the seed's, projected to ``columns``, or without a seed
+    the task's first batch's, with each top-level field nullable as the
+    declared output schema says (``nullable``: name -> flag).  A block
+    whose stored schema differs (e.g. only in nullability) is cast to
+    it, so a NULL in a field declared non-nullable raises; a block in
+    that schema is yielded as decoded."""
+
+    def task_schema_of(schema: pa.Schema) -> pa.Schema:
+        fields = [
+            f.with_nullable(nullable.get(f.name, f.nullable))
+            for f in schema
+            if columns is None or f.name in columns
+        ]
+        return pa.schema(fields, metadata=schema.metadata)
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         warm_codec()
         parsed: dict[str, pa.Schema] = {}
+        task_schema = None
         if seed is not None:
             parsed[seed[0]] = pa.ipc.read_schema(pa.py_buffer(seed[1]))
+            task_schema = task_schema_of(parsed[seed[0]])
         for rb in batches:
             payloads = rb.column("payload")
             crcs = rb.column("crc32")
@@ -108,12 +127,15 @@ def _decode_fn(
                     validate_maps=validate_maps,
                 )
                 n = None if counts is None else counts[i].as_py()
-                # a batch with no columns has no row count to compare
-                if n is not None and out.num_columns and out.num_rows != n:
+                if n is not None and out.num_rows != n:
                     raise ValueError(
                         f"block {ids[i].as_py()} decodes to {out.num_rows} "
                         f"rows but its n_rows is {n}"
                     )
+                if task_schema is None:
+                    task_schema = task_schema_of(out.schema)
+                if not out.schema.equals(task_schema):
+                    out = out.cast(task_schema)
                 yield out
 
     return decode
@@ -419,7 +441,9 @@ def decode_df(
     stored table (no job), one ``head()`` job otherwise.  Every block row
     carries its schema bytes, so stored, filtered, shuffled and lazily
     encoded blocks all decode the same way.  A block whose ``n_rows``
-    disagrees with the rows it decodes to raises ``ValueError``.
+    disagrees with the rows it decodes to raises ``ValueError``, and so
+    does a block holding NULLs in a column ``schema`` declares
+    non-nullable (pass a nullable ``schema`` to read such a table).
 
     ``resolve_schemas``: ignored; accepted so older callers keep running.
 
@@ -471,7 +495,8 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
-    decode = _decode_fn(verify_crc, columns, validate_maps, seed)
+    nullable = {f.name: f.nullable for f in schema.fields}
+    decode = _decode_fn(verify_crc, nullable, columns, validate_maps, seed)
     if footers is not None:
         return _decode_stored(
             blocks.sparkSession,

@@ -27,7 +27,12 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from .decode import _decode_fn, arrow_schema_of, spark_schema_with_meta
+from .decode import (
+    _decode_fn,
+    _stored_footers,
+    arrow_schema_of,
+    spark_schema_with_meta,
+)
 from .encode import BLOCKS_DDL, _has_metadata, encode_chunk_rows
 
 
@@ -53,13 +58,18 @@ def rechunk_blocks(
 
     seed = None
     if schema is None:
-        schema, seed = arrow_schema_of(blocks)
+        # a bare stored table's schema is read with pyarrow: no job
+        footers = _stored_footers(
+            blocks, {"block_id", "payload", "crc32", "schema_id", "schema"}
+        )
+        schema, seed = arrow_schema_of(blocks, footers)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     field_meta = schema.json() if _has_metadata(schema) else None
     if coalesce_partitions is not None:
         blocks = blocks.coalesce(coalesce_partitions)
-    decode = _decode_fn(verify_crc=True, seed=seed)
+    nullable = {f.name: f.nullable for f in schema.fields}
+    decode = _decode_fn(verify_crc=True, nullable=nullable, seed=seed)
 
     def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         warm_codec()

@@ -194,8 +194,8 @@ def test_rechunk_preserves_rows(spark):
 
     df = f1_table(spark, 1500, partitions=3, rows_per_batch=256).cache()
     small = encode_df(df, rows_per_block=64).cache()
-    big = rechunk_blocks(small, rows_per_block=512, schema=df.schema,
-                         coalesce_partitions=1).cache()
+    big = rechunk_blocks(small.coalesce(1), rows_per_block=512,
+                         schema=df.schema).cache()
     assert big.count() < small.count()
     assert big.agg({"n_rows": "max"}).collect()[0][0] <= 512
     out = decode_df(big, schema=df.schema)

@@ -111,8 +111,9 @@ def test_determinism_across_parallelism(spark):
     assert_df_equal(a, b)
 
 
-def test_verify_blocks_audit(spark):
-    """Audit pass: healthy blocks all-green; corrupted block flagged not fatal."""
+def test_verify_blocks_audit(spark, tmp_path):
+    """Audit pass: healthy blocks all-green; corrupted block flagged not
+    fatal, in the DataFrame and when stored and read back bare."""
     from zebra_spark.operators.verify import verify_blocks
 
     df = f1_table(spark, 1000, partitions=2, rows_per_batch=512).cache()
@@ -131,11 +132,14 @@ def test_verify_blocks_audit(spark):
             F.expr("substring(payload, 1, length(payload) - 7)"),
         ).otherwise(F.col("payload")),
     )
-    rep2 = {r["block_id"]: r for r in verify_blocks(corrupted).collect()}
-    bad = rep2[blocks.head()["block_id"]]
-    assert not bad["crc_ok"] and not bad["decode_ok"]
-    healthy = [r for k, r in rep2.items() if k != blocks.head()["block_id"]]
-    assert all(r["decode_ok"] for r in healthy)
+    path = str(tmp_path / "corrupted")
+    corrupted.write.parquet(path)
+    for table in (corrupted, spark.read.parquet(path)):
+        rep = {r["block_id"]: r for r in verify_blocks(table).collect()}
+        assert len(rep) == len(report)
+        bad = rep.pop(blocks.head()["block_id"])
+        assert not bad["crc_ok"] and not bad["decode_ok"]
+        assert all(r["crc_ok"] and r["decode_ok"] for r in rep.values())
 
 
 def test_salting_spreads_skewed_source(spark):

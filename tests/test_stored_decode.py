@@ -1,7 +1,7 @@
-"""decode_df on a bare stored blocks table reads its parquet row groups in
-Python tasks: the same rows as the mapInArrow path on every read shape,
-no parquet scan in the plan, and every other DataFrame keeps the old
-path."""
+"""decode_df, rechunk_blocks, verify_blocks and binary_block_byte_counts
+on a bare stored blocks table read its parquet row groups in Python tasks:
+the same rows as the mapInArrow path on every read shape, no parquet scan
+in the plan, and every other DataFrame keeps the old path."""
 
 from __future__ import annotations
 
@@ -13,6 +13,9 @@ from pyspark.sql import functions as F
 
 from zebra_spark.operators.decode import decode_df
 from zebra_spark.operators.encode import encode_df
+from zebra_spark.operators.rechunk import rechunk_blocks
+from zebra_spark.operators.verify import verify_blocks
+from zebra_spark.plans.summary import binary_block_byte_counts
 
 
 def _same_rows(a, b) -> bool:
@@ -88,6 +91,45 @@ def test_direct_read_equals_mapinarrow_read(spark, keyed, kw):
         assert _same_rows(direct, df)
 
 
+def test_block_operators_read_stored_tables_directly(spark, keyed, tmp_path):
+    stored, df = keyed
+    path = str(tmp_path / "binary")
+    values = spark.range(0, 2000, 1, 2).selectExpr(
+        "CAST(repeat('z', CAST(id % 11 AS INT)) AS BINARY) AS value"
+    )
+    encode_df(values, rows_per_block=100).write.parquet(path)
+    binary = spark.read.parquet(path)
+    ops = {
+        "rechunk": (stored, lambda t: decode_df(rechunk_blocks(t, 300))),
+        "verify": (stored, verify_blocks),
+        "bytes": (binary, binary_block_byte_counts),
+    }
+    out = {}
+    for name, (table, op) in ops.items():
+        out[name] = op(table)
+        assert "FileSourceScanExec" not in _plan_nodes(out[name]), name
+        jvm = op(_via_jvm(table))
+        assert "FileSourceScanExec" in _plan_nodes(jvm), name
+        assert _same_rows(out[name], jvm), name
+    assert _same_rows(out["rechunk"], df)
+    report = out["verify"].collect()
+    assert len(report) == stored.count()
+    assert all(r["crc_ok"] and r["decode_ok"] and r["reencode_ok"] for r in report)
+    n_bytes = values.selectExpr("sum(length(value))").head()[0]
+    assert out["bytes"].groupBy().sum("n_bytes").head()[0] == n_bytes
+
+
+def test_direct_rechunk_compacts_small_blocks(keyed):
+    """Small row groups share a task at Spark's split size, so a stored
+    table of many small blocks rechunks into fewer, fuller blocks."""
+    stored, df = keyed
+    out = rechunk_blocks(stored, rows_per_block=400)
+    assert "FileSourceScanExec" not in _plan_nodes(out)
+    assert out.count() < stored.count()
+    assert out.agg(F.max("n_rows")).head()[0] <= 400
+    assert _same_rows(decode_df(out), df)
+
+
 def test_key_range_drops_row_groups_by_statistics(keyed):
     stored, _ = keyed
     # one task per file here (each row group is below Spark's split size)
@@ -119,8 +161,6 @@ def test_mixed_nullability_table(spark, tmp_path):
     """Blocks whose stored schemas differ only in k's nullability decode
     in one task, on both paths, seeded or with schema given, and
     rechunk.  Each task's batches take k's declared nullability."""
-    from zebra_spark.operators.rechunk import rechunk_blocks
-
     path = str(tmp_path / "nullability")
     a = spark.range(0, 1000, 1, 1).selectExpr("id AS k")
     b = spark.range(1000, 2000, 1, 1).selectExpr("IF(id < 0, NULL, id) AS k")

@@ -1,22 +1,26 @@
-"""Distributed decode + verify: blocks DataFrame -> original DataFrame.
+"""Distributed decode: blocks DataFrame -> original DataFrame.
 
 Spark analogue of `zebra export` (zebra-cli/src/Zebra/Command/Export.hs:
 114-143): each task decodes its block rows back to Arrow batches.  Fully
 parallel — a block is self-describing (schema + payload + crc32).
 
-A bare stored blocks table is read by Python tasks straight from its
-parquet row groups, the way zebra streams a block file on the reader
-(zebra-core/src/Zebra/Serial/Binary/File.hs): no JVM scan and no Arrow
-hop of the payloads.  Any other blocks DataFrame is decoded by a
-``mapInArrow`` over its rows.
+This module is also the one blocks-table reader, as zebra's streaming
+reader (zebra-core/src/Zebra/Serial/Binary/File.hs) is for its export,
+summary and merge: ``decode_df``, ``rechunk_blocks``, ``verify_blocks``
+and ``binary_block_byte_counts`` all run a task body on ``_map_blocks``,
+which reads a bare stored table in Python tasks straight from its
+parquet row groups (no JVM scan, no Arrow hop of the payloads) and any
+other blocks DataFrame in a ``mapInArrow``, and walk block rows with
+``_block_rows``.
 """
 
 from __future__ import annotations
 
 import json
 import zlib
+from functools import partial
 from itertools import groupby
-from typing import Iterator
+from typing import Callable, Iterator
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -40,10 +44,8 @@ def spark_schema_with_meta(arrow_schema: pa.Schema) -> T.StructType:
 
 from ..codec.blocks import decode_batch
 from ..codec.bloom import bloom_contains
-from ..codec.warmup import warm_codec
 from ..session import map_items
 from ..sources.parquet_direct import row_group_footers
-
 
 class SchemaBytesMissing(ValueError):
     """A block row has NULL schema bytes and its task has not parsed that
@@ -51,44 +53,78 @@ class SchemaBytesMissing(ValueError):
     its schema, then filtered, shuffled or split."""
 
 
-def _block_schema(
-    parsed: dict[str, pa.Schema], rb: pa.RecordBatch, i: int
-) -> pa.Schema:
-    """Arrow schema of block row ``i``; each ``schema_id`` is parsed once
-    per ``parsed`` dict (one per task)."""
-    sid = rb.column("schema_id")[i].as_py()
-    schema = parsed.get(sid)
-    if schema is None:
-        raw = rb.column("schema")[i].as_py()
-        if raw is None:
-            raise SchemaBytesMissing(
-                f"block {rb.column('block_id')[i].as_py()} has no schema bytes "
-                f"for schema {sid} (a blocks table written before every row "
-                "carried its schema); decode with schema=None, or rewrite it "
-                "with rechunk_blocks"
+def _block_rows(
+    batches: Iterator[pa.RecordBatch], seed: tuple[str, pa.Schema] | None = None
+) -> Iterator[tuple]:
+    """The walk over one task's block rows: ``(block_id, n_rows, payload,
+    crc32, schema_of)`` per block, ``n_rows`` None without that column.
+    ``schema_of()`` returns the block's arrow schema, each ``schema_id``
+    parsed once per walk, so an audit can record a block whose schema
+    bytes are missing or unreadable and go on.  ``seed``, a
+    ``(schema_id, schema)`` pair, is known before the first row, so rows
+    of older tables that carry only the id still resolve."""
+    parsed = dict([seed]) if seed is not None else {}
+
+    def block_schema(rb: pa.RecordBatch, i: int) -> pa.Schema:
+        sid = rb.column("schema_id")[i].as_py()
+        if sid not in parsed:
+            raw = rb.column("schema")[i].as_py()
+            if raw is None:
+                raise SchemaBytesMissing(
+                    f"block {rb.column('block_id')[i].as_py()} has no schema "
+                    f"bytes for schema {sid} (a blocks table written before "
+                    "every row carried its schema); decode with schema=None, "
+                    "or rewrite it with rechunk_blocks"
+                )
+            parsed[sid] = pa.ipc.read_schema(pa.py_buffer(raw))
+        return parsed[sid]
+
+    for rb in batches:
+        ids = rb.column("block_id").to_pylist()
+        counts = (
+            rb.column("n_rows").to_pylist()
+            if "n_rows" in rb.schema.names
+            else [None] * rb.num_rows
+        )
+        payloads = rb.column("payload")
+        crcs = rb.column("crc32").to_pylist()
+        for i in range(rb.num_rows):
+            yield (
+                ids[i],
+                counts[i],
+                payloads[i].as_py(),
+                crcs[i],
+                partial(block_schema, rb, i),
             )
-        schema = parsed[sid] = pa.ipc.read_schema(pa.py_buffer(raw))
-    return schema
 
 
-def _decode_fn(
-    verify_crc: bool,
-    nullable: dict[str, bool],
+def _block_decoder(
+    blocks: DataFrame,
+    schema=None,
+    verify_crc: bool = True,
     columns=None,
     validate_maps: bool = False,
-    seed: tuple[str, bytes] | None = None,
-):
-    """``seed``: one ``(schema_id, schema bytes)`` pair parsed before the
-    first row, so rows of older tables that carry only the id still
-    decode.
+) -> tuple[T.StructType, Callable]:
+    """The declared Spark schema of ``blocks``' rows and a per-task
+    function that decodes block rows to Arrow batches.
 
+    ``schema`` is taken as given, or else from the first schema-bearing
+    block row (``arrow_schema_of``), which then also seeds every task.
     A task yields every batch in one arrow schema, as its Arrow stream
     requires: the seed's, projected to ``columns``, or without a seed
     the task's first batch's, with each top-level field nullable as the
-    declared output schema says (``nullable``: name -> flag).  A block
-    whose stored schema differs (e.g. only in nullability) is cast to
-    it, so a NULL in a field declared non-nullable raises; a block in
-    that schema is yielded as decoded."""
+    declared schema says.  A block whose stored schema differs (e.g.
+    only in nullability) is cast to it, so a NULL in a field declared
+    non-nullable raises; a block in that schema is yielded as decoded.
+    A crc32 mismatch (with ``verify_crc``) and a block whose ``n_rows``
+    disagrees with the rows it decodes to raise ``ValueError``."""
+    seed = None
+    if schema is None:
+        seed = arrow_schema_of(blocks)
+        schema = seed[1]
+    if isinstance(schema, pa.Schema):
+        schema = spark_schema_with_meta(schema)
+    nullable = {f.name: f.nullable for f in schema.fields}
 
     def task_schema_of(schema: pa.Schema) -> pa.Schema:
         fields = [
@@ -99,56 +135,36 @@ def _decode_fn(
         return pa.schema(fields, metadata=schema.metadata)
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        warm_codec()
-        parsed: dict[str, pa.Schema] = {}
-        task_schema = None
-        if seed is not None:
-            parsed[seed[0]] = pa.ipc.read_schema(pa.py_buffer(seed[1]))
-            task_schema = task_schema_of(parsed[seed[0]])
-        for rb in batches:
-            payloads = rb.column("payload")
-            crcs = rb.column("crc32")
-            ids = rb.column("block_id")
-            counts = (
-                rb.column("n_rows") if "n_rows" in rb.schema.names else None
+        task_schema = None if seed is None else task_schema_of(seed[1])
+        for block_id, n, payload, crc, schema_of in _block_rows(batches, seed):
+            if verify_crc and crc is not None and zlib.crc32(payload) != crc:
+                raise ValueError(f"crc mismatch in block {block_id}")
+            out = decode_batch(
+                payload,
+                schema_of(),
+                columns=columns,
+                validate_maps=validate_maps,
             )
-            for i in range(rb.num_rows):
-                payload = payloads[i].as_py()
-                if verify_crc:
-                    crc = crcs[i].as_py()
-                    if crc is not None and zlib.crc32(payload) != crc:
-                        raise ValueError(
-                            f"crc mismatch in block {ids[i].as_py()}"
-                        )
-                out = decode_batch(
-                    payload,
-                    _block_schema(parsed, rb, i),
-                    columns=columns,
-                    validate_maps=validate_maps,
+            if n is not None and out.num_rows != n:
+                raise ValueError(
+                    f"block {block_id} decodes to {out.num_rows} "
+                    f"rows but its n_rows is {n}"
                 )
-                n = None if counts is None else counts[i].as_py()
-                if n is not None and out.num_rows != n:
-                    raise ValueError(
-                        f"block {ids[i].as_py()} decodes to {out.num_rows} "
-                        f"rows but its n_rows is {n}"
-                    )
-                if task_schema is None:
-                    task_schema = task_schema_of(out.schema)
-                if not out.schema.equals(task_schema):
-                    out = out.cast(task_schema)
-                yield out
+            if task_schema is None:
+                task_schema = task_schema_of(out.schema)
+            if not out.schema.equals(task_schema):
+                out = out.cast(task_schema)
+            yield out
 
-    return decode
+    return schema, decode
 
 
-def arrow_schema_of(
-    blocks: DataFrame, footers: list | None = None
-) -> tuple[pa.Schema, tuple[str, bytes]]:
-    """The arrow schema of the first schema-bearing block row, and its
-    ``(schema_id, bytes)`` pair to seed ``_decode_fn``.  Read with pyarrow
-    from the stored row groups ``footers`` (``_stored_footers``) when
-    given, else one ``head()`` job."""
-    if footers is None:
+def arrow_schema_of(blocks: DataFrame) -> tuple[str, pa.Schema]:
+    """``(schema_id, arrow schema)`` of the first schema-bearing block
+    row: read with pyarrow from a bare stored table's files, else by one
+    ``head()`` job."""
+    files = _stored_files(blocks, {"schema_id", "schema"})
+    if files is None:
         row = (
             blocks.filter(F.col("schema").isNotNull())
             .select("schema_id", "schema")
@@ -156,19 +172,19 @@ def arrow_schema_of(
         )
         seed = None if row is None else (row[0], bytes(row[1]))
     else:
-        seed = _stored_seed(footers)
+        seed = _stored_seed(files)
     if seed is None:
         raise ValueError("blocks DataFrame is empty; pass an explicit schema")
-    return pa.ipc.read_schema(pa.py_buffer(seed[1])), seed
+    return seed[0], pa.ipc.read_schema(pa.py_buffer(seed[1]))
 
 
-def _stored_footers(blocks: DataFrame, needed: set[str]) -> list | None:
-    """``(file, row group, footer metadata)`` of every row group of
-    ``blocks`` when it is a bare stored parquet table holding the
-    ``needed`` columns: its optimized plan is a parquet relation without
-    partition columns, at most under a Project of plain columns, over
-    local files.  None for any other DataFrame (filtered, repartitioned,
-    unioned, cached, computed, directory-partitioned)."""
+def _stored_files(blocks: DataFrame, needed: set[str]) -> list[str] | None:
+    """The sorted local files of ``blocks`` when it is a bare stored
+    parquet table holding the ``needed`` columns: its optimized plan is a
+    parquet relation without partition columns, at most under a Project
+    of plain columns.  None for any other DataFrame (filtered,
+    repartitioned, unioned, cached, computed, directory-partitioned, or
+    stored off the local file system)."""
     if not needed <= set(blocks.columns):
         return None
     plan = blocks._jdf.queryExecution().optimizedPlan()
@@ -195,17 +211,15 @@ def _stored_footers(blocks: DataFrame, needed: set[str]) -> list | None:
         if url.scheme not in ("", "file"):
             return None
         files.append(unquote(url.path))
-    return list(row_group_footers(sorted(files)))
+    return sorted(files)
 
 
-def _stored_seed(footers: list) -> tuple[str, bytes] | None:
+def _stored_seed(files: list[str]) -> tuple[str, bytes] | None:
     """``(schema_id, schema bytes)`` of the first schema-bearing row of the
-    stored row groups, or None when no row carries schema bytes."""
-    for f, rg, _ in footers:
+    stored ``files``, or None when no row carries schema bytes."""
+    for f in files:
         with pq.ParquetFile(f, memory_map=True) as pf:
-            for rb in pf.iter_batches(
-                batch_size=64, row_groups=[rg], columns=["schema_id", "schema"]
-            ):
+            for rb in pf.iter_batches(batch_size=64, columns=["schema_id", "schema"]):
                 raws = rb.column("schema")
                 if raws.null_count < rb.num_rows:
                     i = raws.is_valid().to_numpy(zero_copy_only=False).argmax()
@@ -257,8 +271,9 @@ def zone_map_filter(blocks: DataFrame, key_range) -> DataFrame:
     discipline (zebra tracks exactly these bounds for Summary.hs:64-100 /
     Consistency.hs:77-125); at 100 TB a keyed point/range read must skip
     block payloads BEFORE the decode UDF ever sees them — the filter runs
-    JVM-side on two slim string columns and parquet-prunes when the blocks
-    table is stored.
+    JVM-side on two slim string columns.  A bare stored table is not
+    filtered here: ``_map_blocks`` applies the same predicate in its
+    Python tasks, after dropping row groups by their statistics.
     """
     lo, hi = _zone_bounds(key_range)
     cond = F.lit(True)
@@ -379,7 +394,7 @@ def _stored_batches(
     tasks: Iterator[list], cols: list[str], bounds, values
 ) -> Iterator[pa.RecordBatch]:
     """The block rows of the given row groups that survive the zone maps
-    and the Bloom filters, read with only the columns the decode needs."""
+    and the Bloom filters, read with only the ``cols`` a task needs."""
     for group in tasks:
         for f, items in groupby(group, key=lambda item: item[0]):
             with pq.ParquetFile(f, memory_map=True) as pf:
@@ -396,24 +411,52 @@ def _stored_batches(
                     yield rb
 
 
-def _decode_stored(
-    spark: SparkSession, footers: list, cols: list[str], decode, schema,
-    key_range, key_equals,
+def _map_blocks(
+    blocks: DataFrame,
+    task: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
+    schema,
+    key_range=None,
+    key_equals=None,
 ) -> DataFrame:
-    """Decode a stored blocks table in Python tasks over its row groups
-    (``session.map_items``): key_range drops row groups by their
-    key_min/key_max statistics, then each task drops block rows by zone
-    map and Bloom filter before ``decode`` sees them."""
+    """Run ``task`` over batches of ``blocks``' block rows, once per
+    Spark task, with only the block columns it needs; ``schema`` is the
+    output's.  A bare stored table (``spark.read.parquet`` of a blocks
+    table, at most column-pruned) is read in Python tasks from its row
+    groups packed to Spark's split size; ``key_range`` drops row groups
+    by their statistics, then block rows by zone map and Bloom filter.
+    Any other DataFrame (filtered, repartitioned, unioned, lazily
+    encoded, cached, or with partition columns) is skipped by
+    ``zone_map_filter``/``bloom_filter_blocks`` and runs ``task`` in a
+    ``mapInArrow``.  Both give ``task`` the same block rows."""
+    cols = ["block_id", "n_rows", "payload", "crc32", "schema_id", "schema"]
+    if key_range is not None:
+        cols += ["key_min", "key_max"]
+    if key_equals is not None:
+        cols.append("key_bloom")
+    # n_rows and key_bloom are optional: without them nothing is checked
+    # or skipped, on either path
+    files = _stored_files(blocks, set(cols) - {"n_rows", "key_bloom"})
+    cols = [c for c in cols if c in blocks.columns]
+    if files is None:
+        if key_range is not None:
+            blocks = zone_map_filter(blocks, key_range)
+        if key_equals is not None:
+            blocks = bloom_filter_blocks(blocks, key_equals)
+        return blocks.select(*cols).mapInArrow(task, schema=schema)
     bounds = None if key_range is None else _zone_bounds(key_range)
     values = None if key_equals is None else _lookup_values(key_equals)
+    footers = row_group_footers(files)
     if bounds is not None:
         footers = [x for x in footers if _row_group_may_meet(x[2], *bounds)]
+    spark = blocks.sparkSession
     tasks = _pack_row_groups(spark, footers)
-
-    def run(task_groups: Iterator[list]) -> Iterator[pa.RecordBatch]:
-        return decode(_stored_batches(task_groups, cols, bounds, values))
-
-    return map_items(spark, tasks, run, schema, len(tasks))
+    return map_items(
+        spark,
+        tasks,
+        lambda groups: task(_stored_batches(groups, cols, bounds, values)),
+        schema,
+        len(tasks),
+    )
 
 
 def decode_df(
@@ -428,13 +471,9 @@ def decode_df(
 ) -> DataFrame:
     """Decode a blocks DataFrame back to the original rows.
 
-    A bare stored table (``spark.read.parquet`` of a blocks table, at most
-    column-pruned) is read in Python tasks straight from its parquet row
-    groups, packed to Spark's own split size: no JVM scan, and only the
-    block columns the decode needs are read.  Every other DataFrame
-    (filtered, repartitioned, unioned, lazily encoded, cached, or with
-    partition columns) is decoded by a ``mapInArrow`` over its rows.
-    Both give the same rows.
+    A bare stored table is read in Python tasks straight from its parquet
+    row groups; every other DataFrame is decoded by a ``mapInArrow`` over
+    its rows (``_map_blocks``).  Both give the same rows.
 
     ``schema``: pyspark StructType or pyarrow Schema.  When omitted it is
     taken from the first schema-bearing block row: read with pyarrow on a
@@ -471,21 +510,9 @@ def decode_df(
     only decode an extra block, false negatives cannot happen.  Same
     residual-predicate contract as ``key_range``; both may be combined.
     """
-    cols = ["block_id", "n_rows", "payload", "crc32", "schema_id", "schema"]
-    if key_range is not None:
-        cols += ["key_min", "key_max"]
-    if key_equals is not None:
-        cols.append("key_bloom")
-    # n_rows and key_bloom are optional: without them nothing is checked
-    # or skipped, on either path
-    footers = _stored_footers(blocks, set(cols) - {"n_rows", "key_bloom"})
-    seed = None
-    if schema is None:
-        # from the unfiltered blocks: its seed also decodes the id-only
-        # rows of tables written before every row carried its schema
-        schema, seed = arrow_schema_of(blocks, footers)
-    if isinstance(schema, pa.Schema):
-        schema = spark_schema_with_meta(schema)
+    schema, decode = _block_decoder(
+        blocks, schema, verify_crc, columns, validate_maps
+    )
     if columns is not None:
         known = {f.name for f in schema.fields}
         missing = set(columns) - known
@@ -495,20 +522,4 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
-    nullable = {f.name: f.nullable for f in schema.fields}
-    decode = _decode_fn(verify_crc, nullable, columns, validate_maps, seed)
-    if footers is not None:
-        return _decode_stored(
-            blocks.sparkSession,
-            footers,
-            [c for c in cols if c in blocks.columns],
-            decode,
-            schema,
-            key_range,
-            key_equals,
-        )
-    if key_range is not None:
-        blocks = zone_map_filter(blocks, key_range)
-    if key_equals is not None:
-        blocks = bloom_filter_blocks(blocks, key_equals)
-    return blocks.mapInArrow(decode, schema=schema)
+    return _map_blocks(blocks, decode, schema, key_range, key_equals)

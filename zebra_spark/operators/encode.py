@@ -32,7 +32,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codec.blocks import annotate_zebra_encodings, encode_batch
-from ..codec.warmup import warm_codec
 
 BLOCKS_DDL = (
     "block_id string, part_start string, key_min string, key_max string, "
@@ -208,7 +207,6 @@ def encode_chunk_rows(
 def _encode_fn(rows_per_block: int, key_col: str | None = None,
                field_meta: str | None = None, key_bloom: bool = False):
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        warm_codec()
         task_id = uuid.uuid4().hex[:12]
         state = {"seq": 0}
         for rb in batches:
@@ -234,7 +232,6 @@ def _encode_grouped_fn(rows_per_block: int, key_col: str | None, group_col: str,
     ``write.partitionBy("unit")`` commits whole units atomically."""
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        warm_codec()
         task_id = uuid.uuid4().hex[:12]
         # one state per unit: the downstream partitionBy(unit) write splits
         # this task's blocks into per-unit files, so each unit keeps its

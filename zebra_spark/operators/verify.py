@@ -17,7 +17,10 @@ inconsistency on live data.  A decode-side regression that is
 self-consistent (wrong values that re-encode back to themselves) is
 invisible here by construction — that class is covered by the
 source-diff round-trip tests and tools/check_correctness.py, not by an
-in-place audit.  One row out per block; no shuffle.
+in-place audit.  One row out per block; no shuffle.  Block rows come
+from the reader ``decode_df`` uses (``decode._map_blocks``): a bare
+stored table is audited in Python tasks straight from its parquet row
+groups, with no JVM scan of its payloads.
 
 Reference analogue: `zebra consistency` / the round-trip laws of
 Test.Zebra.Serial.Binary run as a batch job instead of a test suite.
@@ -31,10 +34,10 @@ from typing import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codec.blocks import decode_batch, encode_batch
-from ..codec.warmup import warm_codec
-from .decode import _block_schema
+from .decode import _block_rows, _map_blocks
 
 
 def _ipc_bytes(rb: pa.RecordBatch) -> bytes:
@@ -50,9 +53,15 @@ def _ipc_bytes(rb: pa.RecordBatch) -> bytes:
         writer.write_batch(rb)
     return sink.getvalue().to_pybytes()
 
-VERIFY_DDL = (
-    "block_id string, n_rows long, crc_ok boolean, decode_ok boolean, "
-    "reencode_ok boolean, error string"
+_VERIFY_SCHEMA = pa.schema(
+    [
+        ("block_id", pa.string()),
+        ("n_rows", pa.int64()),
+        ("crc_ok", pa.bool_()),
+        ("decode_ok", pa.bool_()),
+        ("reencode_ok", pa.bool_()),
+        ("error", pa.string()),
+    ]
 )
 
 
@@ -64,54 +73,36 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
     """
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        warm_codec()
-        parsed: dict[str, pa.Schema] = {}
-        for rb in batches:
-            out = {k: [] for k in (
-                "block_id", "n_rows", "crc_ok", "decode_ok",
-                "reencode_ok", "error",
-            )}
-            for i in range(rb.num_rows):
-                bid = rb.column("block_id")[i].as_py()
-                payload = rb.column("payload")[i].as_py()
-                crc = rb.column("crc32")[i].as_py()
-                n_rows = rb.column("n_rows")[i].as_py()
-                crc_ok = crc is None or zlib.crc32(payload) == crc
-                decode_ok = False
-                reenc = None
-                err = None
-                if crc_ok:
-                    try:
-                        schema = _block_schema(parsed, rb, i)
-                        decoded = decode_batch(payload, schema)
-                        decode_ok = decoded.num_rows == n_rows
-                        if check_reencode:
-                            re_payload, _ = encode_batch(decoded, "speed")
-                            # byte equality = fast path; otherwise the
-                            # re-encode must decode bit-identically
-                            reenc = re_payload == payload or _ipc_bytes(
-                                decode_batch(re_payload, schema)
-                            ) == _ipc_bytes(decoded)
-                    except Exception as e:  # audit job must not die per block
-                        err = f"{type(e).__name__}: {e}"[:300]
-                out["block_id"].append(bid)
-                out["n_rows"].append(n_rows)
-                out["crc_ok"].append(crc_ok)
-                out["decode_ok"].append(decode_ok)
-                out["reencode_ok"].append(reenc)
-                out["error"].append(err)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("block_id", pa.string()),
-                        ("n_rows", pa.int64()),
-                        ("crc_ok", pa.bool_()),
-                        ("decode_ok", pa.bool_()),
-                        ("reencode_ok", pa.bool_()),
-                        ("error", pa.string()),
-                    ]
-                ),
+        report = []
+        for block_id, n_rows, payload, crc, schema_of in _block_rows(batches):
+            crc_ok = crc is None or zlib.crc32(payload) == crc
+            decode_ok = False
+            reenc = None
+            err = None
+            if crc_ok:
+                try:
+                    schema = schema_of()
+                    decoded = decode_batch(payload, schema)
+                    decode_ok = n_rows is None or decoded.num_rows == n_rows
+                    if check_reencode:
+                        re_payload, _ = encode_batch(decoded, "speed")
+                        # byte equality = fast path; otherwise the
+                        # re-encode must decode bit-identically
+                        reenc = re_payload == payload or _ipc_bytes(
+                            decode_batch(re_payload, schema)
+                        ) == _ipc_bytes(decoded)
+                except Exception as e:  # audit job must not die per block
+                    err = f"{type(e).__name__}: {e}"[:300]
+            report.append(
+                {
+                    "block_id": block_id,
+                    "n_rows": n_rows,
+                    "crc_ok": crc_ok,
+                    "decode_ok": decode_ok,
+                    "reencode_ok": reenc,
+                    "error": err,
+                }
             )
+        yield pa.RecordBatch.from_pylist(report, schema=_VERIFY_SCHEMA)
 
-    return blocks.mapInArrow(run, schema=VERIFY_DDL)
+    return _map_blocks(blocks, run, from_arrow_schema(_VERIFY_SCHEMA))

@@ -106,30 +106,29 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
     """Per-block byte counts for a Binary-table blocks frame — zebra's V3
     row count for a Binary table IS the byte count
     (Serial/Binary/Table.hs:38-44), so `zebra summary` parity needs bytes,
-    not DataFrame rows.  One parallel pass, block-local."""
+    not DataFrame rows.  One parallel pass, block-local, on the reader
+    ``decode_df`` uses: a bare stored table is counted in Python tasks
+    with no JVM scan of its payloads."""
     import pyarrow as pa
 
     from ..codec.blocks import decode_batch
-    from ..operators.decode import _block_schema
+    from ..operators.decode import _block_rows, _map_blocks
 
     def run(batches):
-        parsed: dict[str, pa.Schema] = {}
-        for rb in batches:
-            for i in range(rb.num_rows):
-                schema = _block_schema(parsed, rb, i)
-                batch = decode_batch(rb.column("payload")[i].as_py(), schema)
-                col = batch.column("value")
-                n = pa.compute.sum(pa.compute.binary_length(col)).as_py() or 0
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "block_id": [rb.column("block_id")[i].as_py()],
-                        "n_bytes": [int(n)],
-                    }
-                )
+        ids, counts = [], []
+        for block_id, _, payload, _, schema_of in _block_rows(batches):
+            col = decode_batch(payload, schema_of()).column("value")
+            ids.append(block_id)
+            n = pa.compute.sum(pa.compute.binary_length(col)).as_py()
+            counts.append(n or 0)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "block_id": pa.array(ids, pa.string()),
+                "n_bytes": pa.array(counts, pa.int64()),
+            }
+        )
 
-    return blocks.select(
-        "block_id", "schema_id", "schema", "payload"
-    ).mapInArrow(run, schema="block_id string, n_bytes long")
+    return _map_blocks(blocks, run, "block_id string, n_bytes long")
 
 
 def v3_summary(spark, paths: list[str]) -> dict:

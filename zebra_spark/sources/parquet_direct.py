@@ -72,9 +72,6 @@ def encode_parquet_direct(
     n_tasks = tasks_per_core * spark.sparkContext.defaultParallelism
 
     def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
-        from ..codec.warmup import warm_codec
-
-        warm_codec()
         for p, rg in task_splits:
             # memory_map: page-cache reads without userspace copies —
             # measured ~7% off the tokens-column decode (guide §6)
@@ -115,9 +112,6 @@ def encode_metrics_direct(
     splits = list_row_groups(path)
 
     def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
-        from ..codec.warmup import warm_codec
-
-        warm_codec()
         # called once per task, so the fold spans the task's whole run
         tot = {"rows": 0, "raw": 0, "enc": 0, "zebra": 0, "tok": 0}
         for p, rg in task_splits:

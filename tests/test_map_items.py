@@ -1,10 +1,12 @@
-"""Driver-side task lists: ``session.map_items`` places item runs on tasks
-without a Python RDD or a shuffle, and every list-driven reader goes
-through it (encode_parquet_direct, encode_metrics_direct, read_zebra_files,
-read_zebra_v2_files, v3_summary)."""
+"""Driver-side task lists: ``session.map_items`` places the item runs its
+planner cuts on tasks without a Python RDD or a shuffle, and every
+list-driven reader goes through it (encode_parquet_direct,
+encode_metrics_direct, read_zebra_files, read_zebra_v2_files,
+v3_summary).  The planner's own cases are in test_plan_tasks.py."""
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pyarrow as pa
@@ -22,7 +24,7 @@ from zebra_spark.operators.zfile import (
 from zebra_spark.operators.zfile_v2 import read_zebra_v2_files
 from zebra_spark.operators.zschema import MAP_TABLE_META
 from zebra_spark.plans.summary import v3_summary
-from zebra_spark.session import map_items
+from zebra_spark.session import map_items, plan_tasks
 from zebra_spark.sources.parquet_direct import (
     encode_metrics_direct,
     encode_parquet_direct,
@@ -43,18 +45,32 @@ def _items_by_partition(df, col: str) -> dict[int, list]:
     return out
 
 
-@pytest.mark.parametrize("k,n", [(5, None), (10, 4), (32, 8), (9, 9)])
-def test_map_items_contiguous_runs(spark, k, n):
-    """Task i holds exactly items[i*k//n:(i+1)*k//n], in list order; no
-    partition is empty while k >= n (round-robin over 5 items into 5
+def _plan(spark, sizes: list[int]) -> list[range]:
+    """``plan_tasks`` with the session's own settings, as map_items calls it."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return plan_tasks(
+        sizes,
+        spark.sparkContext.defaultParallelism,
+        conf.filesOpenCostInBytes(),
+        conf.filesMaxPartitionBytes(),
+    )
+
+
+@pytest.mark.parametrize("k,mib", [(5, None), (10, 4), (32, 8), (9, 9)])
+def test_map_items_contiguous_runs(spark, k, mib):
+    """k items of ``mib`` MiB each (None: zero bytes) on local[4]: one
+    task per core, task i holds exactly the planner's run i, in list
+    order, and no partition is empty (round-robin over 5 items into 5
     partitions filled only 2)."""
     items = list(range(100, 100 + k))
-    df = map_items(spark, items, _echo, "item long", n)
-    n_eff = n or k
-    assert df.rdd.getNumPartitions() == n_eff
+    sizes = [(mib or 0) << 20] * k
+    df = map_items(spark, items, _echo, "item long", sizes)
+    plan = _plan(spark, sizes)
+    assert df.rdd.getNumPartitions() == len(plan) == 4
     got = _items_by_partition(df, "item")
-    want = {i: items[i * k // n_eff:(i + 1) * k // n_eff] for i in range(n_eff)}
-    assert got == want
+    assert got == {i: items[r.start:r.stop] for i, r in enumerate(plan)}
+    assert all(got.values())
+    assert [x for i in sorted(got) for x in got[i]] == items
 
 
 def test_map_items_fn_called_once_per_task(spark):
@@ -64,9 +80,9 @@ def test_map_items_fn_called_once_per_task(spark):
     def count(items):
         yield pa.RecordBatch.from_pydict({"n": [len(list(items))]})
 
-    rows = map_items(spark, list("abcdefg"), count, "n long", 3).collect()
-    assert sorted(r["n"] for r in rows) == [2, 2, 3]
-    assert map_items(spark, list("ab"), count, "n long", 8).count() == 2
+    rows = map_items(spark, list("abcdefg"), count, "n long", [1] * 7).collect()
+    assert sorted(r["n"] for r in rows) == [1, 2, 2, 2]
+    assert map_items(spark, list("ab"), count, "n long", [1, 1]).count() == 2
 
 
 def _write_zfiles(spark, tmp_path, n_files: int, rows_per_file: int):
@@ -84,12 +100,19 @@ def _stream_keys(path: str, col: str) -> list:
 
 
 def test_read_zebra_files_one_file_per_task(spark, tmp_path):
+    """Each file is read whole by one task: five files on local[4] make
+    four tasks, task i streaming the files of the planner's run i in
+    path order."""
     paths = _write_zfiles(spark, tmp_path, 5, 40)
     df = read_zebra_files(spark, paths)
-    assert df.rdd.getNumPartitions() == 5
+    plan = _plan(spark, [os.path.getsize(p) for p in paths])
+    assert df.rdd.getNumPartitions() == len(plan) == 4
     got = _items_by_partition(df, "k")
-    assert sorted(got) == [0, 1, 2, 3, 4]
-    assert got == {i: _stream_keys(p, "k") for i, p in enumerate(paths)}
+    assert sorted(got) == [0, 1, 2, 3]
+    assert got == {
+        i: [k for p in paths[r.start:r.stop] for k in _stream_keys(p, "k")]
+        for i, r in enumerate(plan)
+    }
 
 
 def test_read_zebra_v2_files_ordinal_matches_task(spark, tmp_path):

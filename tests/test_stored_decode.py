@@ -120,8 +120,8 @@ def test_block_operators_read_stored_tables_directly(spark, keyed, tmp_path):
 
 
 def test_direct_rechunk_compacts_small_blocks(keyed):
-    """Small row groups share a task at Spark's split size, so a stored
-    table of many small blocks rechunks into fewer, fuller blocks."""
+    """Small row groups share a task, so a stored table of many small
+    blocks rechunks into fewer, fuller blocks."""
     stored, df = keyed
     out = rechunk_blocks(stored, rows_per_block=400)
     assert "FileSourceScanExec" not in _plan_nodes(out)
@@ -132,8 +132,8 @@ def test_direct_rechunk_compacts_small_blocks(keyed):
 
 def test_key_range_drops_row_groups_by_statistics(keyed):
     stored, _ = keyed
-    # one task per file here (each row group is below Spark's split size)
-    assert decode_df(stored).rdd.getNumPartitions() == 5
+    # five one-row-group files make one task per core on local[4]
+    assert decode_df(stored).rdd.getNumPartitions() == 4
     # [1000, 1499] meets one keyed file; the NULL-zone-map file stays
     assert decode_df(stored, key_range=(1000, 1499)).rdd.getNumPartitions() == 2
     # rows of the NULL-zone-map blocks are never skipped

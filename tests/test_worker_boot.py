@@ -2,7 +2,8 @@
 not re-read an unchanged pyspark.zip directory, and a rewritten zip must
 still be re-read.  The daemon's post-task gc.collect() freezes the
 worker's long-lived heap, and a collection inside a task still reclaims
-that task's cycles."""
+that task's cycles.  Every map_items task installs both hooks, whatever
+its function names."""
 
 from __future__ import annotations
 
@@ -166,6 +167,53 @@ def test_one_core_worker_stops_rereading_after_first_task():
     assert max(res["unfrozen"][1:]) < frozen[1] // 10, res
     assert all(res["cycle_freed"]), res
     assert not res["driver_hook"] and res["driver_frozen"] == 0, res
+
+
+_PLAIN_FN_SCRIPT = r"""
+import json
+from zebra_spark.session import get_spark, map_items
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+
+def hooks(items):
+    # names no engine module: cloudpickle ships this function by value,
+    # and only map_items' own task body can import the package
+    import gc, sys, zipimport
+    import pyarrow as pa
+    boot = sys.modules.get("zebra_spark.worker_boot")
+    yield pa.RecordBatch.from_pydict({
+        "n": [len(list(items))],
+        "zip_cache": [boot is not None and zipimport.zipimporter.invalidate_caches
+                      is boot._invalidate_caches],
+        "gc_freeze": [boot is not None
+                      and boot._freeze_after_task_collect in gc.callbacks],
+    })
+
+rows = map_items(
+    spark, list(range(8)), hooks, "n long, zip_cache boolean, gc_freeze boolean",
+    [0] * 8,
+).collect()
+print(json.dumps([r.asDict() for r in rows]))
+spark.stop()
+"""
+
+
+def test_map_items_task_installs_both_hooks_for_any_fn():
+    """A map_items task whose function names no engine module still runs
+    with the zip-index cache and the gc freeze installed: the task body
+    pickles by reference, so unpickling it imports zebra_spark."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    ))
+    out = subprocess.run(
+        [sys.executable, "-c", _PLAIN_FN_SCRIPT],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    rows = json.loads(out.stdout.strip().splitlines()[-1])
+    assert sum(r["n"] for r in rows) == 8 and len(rows) == 2, rows
+    assert all(r["zip_cache"] and r["gc_freeze"] for r in rows), rows
 
 
 def test_decode_df_schema_jobs_follow_the_read_path(spark, tmp_path):

@@ -11,7 +11,9 @@ the sandbox's core grant shifts on multi-minute scales).
 
 Usage: python tools/bench_worker.py <cpus> <parquet_path>
 Protocol: prints {"ready": true} after warm-up; then per "RUN" line on
-stdin prints {"sec", "rows", "raw", "enc", "zebra"}; "EXIT" stops.
+stdin prints {"sec", "rows", "raw", "enc", "zebra", "tasks"}, "tasks"
+being the leg's Spark task count as session.map_items planned it;
+"EXIT" stops.
 """
 
 from __future__ import annotations
@@ -43,16 +45,16 @@ def main() -> None:
     def run_once():
         t0 = time.perf_counter()
         # encode_metrics_direct folds block metrics python-side (the
-        # production-sink shape — payloads never cross the Arrow socket),
-        # with tasks_per_core=1: each task gets an equal contiguous run of
-        # the uniform splits (session.map_items), and the fixed per-task
-        # python worker cost (0.03 CPU-s) and ~1 s of JVM payload ingest
-        # would otherwise eat into a ~2.3 s hi leg (see the function's
-        # docstring)
+        # production-sink shape — payloads never cross the Arrow socket)
+        # and emits one row per task, so the row count is the leg's task
+        # count.  session.map_items plans the tasks from the splits'
+        # bytes: on the 32 uniform splits, one wave of equal contiguous
+        # runs per core unless a run would pass Spark's split size
         row = (
             encode_metrics_direct(spark, path)
             .groupBy()
             .agg(
+                F.count(F.lit(1)).alias("tasks"),
                 F.sum("n_rows").alias("rows"),
                 F.sum("raw_bytes").alias("raw"),
                 F.sum("enc_bytes").alias("enc"),
@@ -76,6 +78,7 @@ def main() -> None:
                     "raw": row["raw"],
                     "enc": row["enc"],
                     "zebra": row["zebra"],
+                    "tasks": row["tasks"],
                 }
             ),
             flush=True,

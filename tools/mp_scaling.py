@@ -68,7 +68,7 @@ def main():
 
     from zebra_spark.sources.parquet_direct import list_row_groups
 
-    splits = list_row_groups(path)
+    splits, _ = list_row_groups(path)
     pools = {n: mp.Pool(n) for n in (lo, hi)}
     # warm both pools (excluded)
     for n, pool in pools.items():

@@ -27,7 +27,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -45,7 +45,7 @@ def spark_schema_with_meta(arrow_schema: pa.Schema) -> T.StructType:
 from ..codec.blocks import decode_batch
 from ..codec.bloom import bloom_contains
 from ..session import map_items
-from ..sources.parquet_direct import row_group_footers
+from ..sources.parquet_direct import row_groups
 
 class SchemaBytesMissing(ValueError):
     """A block row has NULL schema bytes and its task has not parsed that
@@ -100,6 +100,7 @@ def _block_rows(
 
 def _block_decoder(
     blocks: DataFrame,
+    stored: list | None,
     schema=None,
     verify_crc: bool = True,
     columns=None,
@@ -120,7 +121,7 @@ def _block_decoder(
     disagrees with the rows it decodes to raise ``ValueError``."""
     seed = None
     if schema is None:
-        seed = arrow_schema_of(blocks)
+        seed = arrow_schema_of(blocks, stored)
         schema = seed[1]
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
@@ -159,12 +160,11 @@ def _block_decoder(
     return schema, decode
 
 
-def arrow_schema_of(blocks: DataFrame) -> tuple[str, pa.Schema]:
+def arrow_schema_of(blocks: DataFrame, stored) -> tuple[str, pa.Schema]:
     """``(schema_id, arrow schema)`` of the first schema-bearing block
-    row: read with pyarrow from a bare stored table's files, else by one
-    ``head()`` job."""
-    files = _stored_files(blocks, {"schema_id", "schema"})
-    if files is None:
+    row: read with pyarrow from the ``stored`` files of a bare stored
+    table, else by one ``head()`` job."""
+    if stored is None:
         row = (
             blocks.filter(F.col("schema").isNotNull())
             .select("schema_id", "schema")
@@ -172,19 +172,26 @@ def arrow_schema_of(blocks: DataFrame) -> tuple[str, pa.Schema]:
         )
         seed = None if row is None else (row[0], bytes(row[1]))
     else:
-        seed = _stored_seed(files)
+        seed = _stored_seed(stored)
     if seed is None:
         raise ValueError("blocks DataFrame is empty; pass an explicit schema")
     return seed[0], pa.ipc.read_schema(pa.py_buffer(seed[1]))
 
 
-def _stored_files(blocks: DataFrame, needed: set[str]) -> list[str] | None:
-    """The sorted local files of ``blocks`` when it is a bare stored
-    parquet table holding the ``needed`` columns: its optimized plan is a
-    parquet relation without partition columns, at most under a Project
-    of plain columns.  None for any other DataFrame (filtered,
-    repartitioned, unioned, cached, computed, directory-partitioned, or
-    stored off the local file system)."""
+def _stored_source(
+    blocks: DataFrame, key_range=None
+) -> list[tuple[str, pq.FileMetaData]] | None:
+    """``(file, footer)`` of each sorted local file of ``blocks`` when it
+    is a bare stored parquet table holding the block columns (and, with
+    ``key_range``, the zone maps): its optimized plan is a parquet
+    relation without partition columns, at most under a Project of plain
+    columns.  None for any other DataFrame (filtered, repartitioned,
+    unioned, cached, computed, directory-partitioned, or stored off the
+    local file system).  An operator finds it once, for both the schema
+    seed and ``_map_blocks``."""
+    needed = {"block_id", "payload", "crc32", "schema_id", "schema"}
+    if key_range is not None:
+        needed |= {"key_min", "key_max"}
     if not needed <= set(blocks.columns):
         return None
     plan = blocks._jdf.queryExecution().optimizedPlan()
@@ -211,14 +218,14 @@ def _stored_files(blocks: DataFrame, needed: set[str]) -> list[str] | None:
         if url.scheme not in ("", "file"):
             return None
         files.append(unquote(url.path))
-    return sorted(files)
+    return [(f, pq.read_metadata(f, memory_map=True)) for f in sorted(files)]
 
 
-def _stored_seed(files: list[str]) -> tuple[str, bytes] | None:
+def _stored_seed(stored: list) -> tuple[str, bytes] | None:
     """``(schema_id, schema bytes)`` of the first schema-bearing row of the
-    stored ``files``, or None when no row carries schema bytes."""
-    for f in files:
-        with pq.ParquetFile(f, memory_map=True) as pf:
+    ``stored`` files, or None when no row carries schema bytes."""
+    for f, md in stored:
+        with pq.ParquetFile(f, memory_map=True, metadata=md) as pf:
             for rb in pf.iter_batches(batch_size=64, columns=["schema_id", "schema"]):
                 raws = rb.column("schema")
                 if raws.null_count < rb.num_rows:
@@ -327,41 +334,6 @@ def _row_group_may_meet(md: pq.RowGroupMetaData, lo, hi) -> bool:
     return (lo is None or kmax.max >= lo) and (hi is None or kmin.min <= hi)
 
 
-def _pack_row_groups(spark: SparkSession, footers: list) -> list[list]:
-    """Contiguous runs of ``(file, row group)`` packed to Spark's own file
-    split size, ``min(maxPartitionBytes, max(openCostInBytes, total /
-    defaultParallelism))``, counting each row group's compressed bytes
-    plus the open cost: small row groups share a task, and a table is
-    never squeezed into fewer tasks than cores when it has the row
-    groups to fill them."""
-    conf = spark._jsparkSession.sessionState().conf()
-    open_cost = conf.filesOpenCostInBytes()
-    sized = [
-        (
-            (f, rg),
-            open_cost
-            + sum(md.column(i).total_compressed_size for i in range(md.num_columns)),
-        )
-        for f, rg, md in footers
-    ]
-    split = min(
-        conf.filesMaxPartitionBytes(),
-        max(
-            open_cost,
-            sum(n for _, n in sized) // spark.sparkContext.defaultParallelism,
-        ),
-    )
-    tasks: list[list] = []
-    size = 0
-    for item, n in sized:
-        if not tasks or size + n > split:
-            tasks.append([])
-            size = 0
-        tasks[-1].append(item)
-        size += n
-    return tasks
-
-
 def _zone_mask(rb: pa.RecordBatch, lo, hi) -> pa.Array:
     """``zone_map_filter``'s predicate on a batch of block rows: NULL
     key_min rows survive, and a NULL comparison drops the row as Spark's
@@ -391,28 +363,29 @@ def _bloom_mask(rb: pa.RecordBatch, values: list) -> pa.Array:
 
 
 def _stored_batches(
-    tasks: Iterator[list], cols: list[str], bounds, values
+    items: Iterator[tuple[str, int]], cols: list[str], bounds, values
 ) -> Iterator[pa.RecordBatch]:
-    """The block rows of the given row groups that survive the zone maps
-    and the Bloom filters, read with only the ``cols`` a task needs."""
-    for group in tasks:
-        for f, items in groupby(group, key=lambda item: item[0]):
-            with pq.ParquetFile(f, memory_map=True) as pf:
-                present = set(pf.schema_arrow.names)
-                for rb in pf.iter_batches(
-                    row_groups=[rg for _, rg in items],
-                    columns=[c for c in cols if c in present],
-                ):
-                    names = rb.schema.names
-                    if bounds is not None and "key_min" in names:
-                        rb = rb.filter(_zone_mask(rb, *bounds))
-                    if values is not None and "key_bloom" in names:
-                        rb = rb.filter(_bloom_mask(rb, values))
-                    yield rb
+    """The block rows of the given ``(file, row group)`` items that
+    survive the zone maps and the Bloom filters, read with only the
+    ``cols`` a task needs."""
+    for f, group in groupby(items, key=lambda item: item[0]):
+        with pq.ParquetFile(f, memory_map=True) as pf:
+            present = set(pf.schema_arrow.names)
+            for rb in pf.iter_batches(
+                row_groups=[rg for _, rg in group],
+                columns=[c for c in cols if c in present],
+            ):
+                names = rb.schema.names
+                if bounds is not None and "key_min" in names:
+                    rb = rb.filter(_zone_mask(rb, *bounds))
+                if values is not None and "key_bloom" in names:
+                    rb = rb.filter(_bloom_mask(rb, values))
+                yield rb
 
 
 def _map_blocks(
     blocks: DataFrame,
+    stored: list | None,
     task: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     schema,
     key_range=None,
@@ -420,12 +393,12 @@ def _map_blocks(
 ) -> DataFrame:
     """Run ``task`` over batches of ``blocks``' block rows, once per
     Spark task, with only the block columns it needs; ``schema`` is the
-    output's.  A bare stored table (``spark.read.parquet`` of a blocks
-    table, at most column-pruned) is read in Python tasks from its row
-    groups packed to Spark's split size; ``key_range`` drops row groups
-    by their statistics, then block rows by zone map and Bloom filter.
-    Any other DataFrame (filtered, repartitioned, unioned, lazily
-    encoded, cached, or with partition columns) is skipped by
+    output's.  A bare stored table (``stored``, its ``_stored_source``)
+    is read in Python tasks from its row groups, which ``map_items``
+    plans by their bytes; ``key_range`` drops row groups by their
+    statistics, then block rows by zone map and Bloom filter.  Any other
+    DataFrame (filtered, repartitioned, unioned, lazily encoded, cached,
+    or with partition columns) is skipped by
     ``zone_map_filter``/``bloom_filter_blocks`` and runs ``task`` in a
     ``mapInArrow``.  Both give ``task`` the same block rows."""
     cols = ["block_id", "n_rows", "payload", "crc32", "schema_id", "schema"]
@@ -435,9 +408,8 @@ def _map_blocks(
         cols.append("key_bloom")
     # n_rows and key_bloom are optional: without them nothing is checked
     # or skipped, on either path
-    files = _stored_files(blocks, set(cols) - {"n_rows", "key_bloom"})
     cols = [c for c in cols if c in blocks.columns]
-    if files is None:
+    if stored is None:
         if key_range is not None:
             blocks = zone_map_filter(blocks, key_range)
         if key_equals is not None:
@@ -445,17 +417,14 @@ def _map_blocks(
         return blocks.select(*cols).mapInArrow(task, schema=schema)
     bounds = None if key_range is None else _zone_bounds(key_range)
     values = None if key_equals is None else _lookup_values(key_equals)
-    footers = row_group_footers(files)
-    if bounds is not None:
-        footers = [x for x in footers if _row_group_may_meet(x[2], *bounds)]
-    spark = blocks.sparkSession
-    tasks = _pack_row_groups(spark, footers)
+    keep = None if bounds is None else lambda md: _row_group_may_meet(md, *bounds)
+    items, sizes = row_groups(stored, keep)
     return map_items(
-        spark,
-        tasks,
-        lambda groups: task(_stored_batches(groups, cols, bounds, values)),
+        blocks.sparkSession,
+        items,
+        lambda run: task(_stored_batches(run, cols, bounds, values)),
         schema,
-        len(tasks),
+        sizes,
     )
 
 
@@ -510,8 +479,9 @@ def decode_df(
     only decode an extra block, false negatives cannot happen.  Same
     residual-predicate contract as ``key_range``; both may be combined.
     """
+    stored = _stored_source(blocks, key_range)
     schema, decode = _block_decoder(
-        blocks, schema, verify_crc, columns, validate_maps
+        blocks, stored, schema, verify_crc, columns, validate_maps
     )
     if columns is not None:
         known = {f.name for f in schema.fields}
@@ -522,4 +492,4 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
-    return _map_blocks(blocks, decode, schema, key_range, key_equals)
+    return _map_blocks(blocks, stored, decode, schema, key_range, key_equals)

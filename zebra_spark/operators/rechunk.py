@@ -15,8 +15,8 @@ encoder's buffer (guide §4: the boundary crossings, not the codec, were
 the cost — measured 4.0 s -> 2.6 s on the 600k-row lineitem driver
 query).  Decoded rows are buffered across input blocks, so the small
 blocks of one task compact into full-size output blocks: a stored
-table's small row groups share a task at Spark's split size, and any
-other DataFrame can be passed as ``blocks.coalesce(n)`` for fewer tasks.
+table's small row groups share a task (``map_items`` plans by bytes), and
+any other DataFrame can be passed as ``blocks.coalesce(n)`` for fewer tasks.
 Used operationally to compact many small blocks (e.g. from streaming
 micro-batches) into scan-efficient large ones, or split oversized blocks.
 """
@@ -30,7 +30,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from .decode import _block_decoder, _map_blocks
+from .decode import _block_decoder, _map_blocks, _stored_source
 from .encode import BLOCKS_DDL, _has_metadata, encode_chunk_rows
 
 
@@ -49,7 +49,8 @@ def rechunk_blocks(
     into a full scan.
     """
     # a bare stored table's schema is read with pyarrow: no job
-    schema, decode = _block_decoder(blocks, schema)
+    stored = _stored_source(blocks)
+    schema, decode = _block_decoder(blocks, stored, schema)
     field_meta = schema.json() if _has_metadata(schema) else None
 
     def fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -91,4 +92,4 @@ def rechunk_blocks(
         if buffered:
             yield from cut(joined())
 
-    return _map_blocks(blocks, fused, BLOCKS_DDL)
+    return _map_blocks(blocks, stored, fused, BLOCKS_DDL)

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..codec.blocks import decode_batch, encode_batch
-from .decode import _block_rows, _map_blocks
+from .decode import _block_rows, _map_blocks, _stored_source
 
 
 def _ipc_bytes(rb: pa.RecordBatch) -> bytes:
@@ -105,4 +105,6 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
             )
         yield pa.RecordBatch.from_pylist(report, schema=_VERIFY_SCHEMA)
 
-    return _map_blocks(blocks, run, from_arrow_schema(_VERIFY_SCHEMA))
+    return _map_blocks(
+        blocks, _stored_source(blocks), run, from_arrow_schema(_VERIFY_SCHEMA)
+    )

@@ -33,6 +33,7 @@ are rejected; convert with functions.enums.option_to_enum first.
 from __future__ import annotations
 
 import json
+import os
 from typing import Iterator
 
 import numpy as np
@@ -637,7 +638,6 @@ def write_zebra_files(df, out_dir: str, rows_per_block: int = 1 << 16):
     they are encoded — task peak memory is one block + one Arrow batch,
     independent of partition size (the round-2 whole-file b"".join is
     gone)."""
-    import os
     import uuid
 
     schema = df.schema
@@ -683,10 +683,10 @@ def read_zebra_files(
 ):
     """Parallel read of zebra V3 files back into a DataFrame.
 
-    Each task streams its file in ``chunk_bytes`` increments and yields
-    per-block batches as they parse — peak memory is one block + one chunk,
-    not the file size, and downstream operators start before the file
-    finishes.
+    Each task streams its run of files (``map_items`` plans the runs by
+    file size) in ``chunk_bytes`` increments and yields per-block batches
+    as they parse — peak memory is one block + one chunk, not the file
+    size, and downstream operators start before the file finishes.
 
     ``key_range=(lo, hi)``: map tables with scalar int/string keys —
     blocks whose key interval misses the range are skipped in-stream
@@ -706,4 +706,5 @@ def read_zebra_files(
                 _, blocks, _ = open_zebra_stream(f, chunk_bytes, key_range)
                 yield from blocks
 
-    return map_items(spark, paths, run, first_schema)
+    sizes = [os.path.getsize(p) for p in paths]
+    return map_items(spark, paths, run, first_schema, sizes)

@@ -39,6 +39,8 @@ CLI also only converts forward).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 
@@ -561,7 +563,8 @@ def read_zebra_v2_files(
                         )
                     yield b
 
-    return map_items(spark, list(enumerate(paths)), run, spark_schema)
+    sizes = [os.path.getsize(p) for p in paths]
+    return map_items(spark, list(enumerate(paths)), run, spark_schema, sizes)
 
 
 def v2_facts(df):

@@ -15,6 +15,8 @@ scale.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import map_items
@@ -112,7 +114,7 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     from ..codec.blocks import decode_batch
-    from ..operators.decode import _block_rows, _map_blocks
+    from ..operators.decode import _block_rows, _map_blocks, _stored_source
 
     def run(batches):
         ids, counts = [], []
@@ -128,15 +130,17 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
             }
         )
 
-    return _map_blocks(blocks, run, "block_id string, n_bytes long")
+    return _map_blocks(
+        blocks, _stored_source(blocks), run, "block_id string, n_bytes long"
+    )
 
 
 def v3_summary(spark, paths: list[str]) -> dict:
     """zebra `summary` over ``||ZEBRA||00003||`` files (Command/Summary.hs:
-    64-100 parity): one task per file STREAMS its blocks (bounded reader)
-    and emits a per-file partial; the handful of per-file rows reduce
-    driver-side.  Binary tables count BYTES as rows; Map tables report
-    first/last key rendered as ztxt JSON."""
+    64-100 parity): each task STREAMS its run of files (bounded reader;
+    ``map_items`` plans the runs by file size) and emits per-file
+    partials that reduce driver-side.  Binary tables count BYTES as rows;
+    Map tables report first/last key rendered as ztxt JSON."""
     import json as _json
 
     import pyarrow as pa
@@ -195,6 +199,7 @@ def v3_summary(spark, paths: list[str]) -> dict:
         run,
         "path string, n_blocks long, n_rows long, max_rows long, "
         "first_key string, last_key string",
+        [os.path.getsize(p) for p in paths],
     ).collect()
     out = {
         "block_count": sum(r["n_blocks"] for r in rows),

@@ -7,6 +7,9 @@ arrow batches sized to the block size) but runnable on local[N].
 from __future__ import annotations
 
 import os
+from bisect import bisect_left
+from functools import partial
+from itertools import accumulate
 from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,24 +47,64 @@ def get_spark(
     return b.getOrCreate()
 
 
+def plan_tasks(
+    sizes: Sequence[int], cores: int, open_cost: int, max_bytes: int
+) -> list[range]:
+    """Cut items of ``sizes`` bytes, each charged ``open_cost`` more, into
+    contiguous, non-empty runs in list order, one per task: one task per
+    core while items last, and more only in whole waves of ``cores``
+    while a run of several items would exceed ``max_bytes``.  Runs end at
+    the item boundaries nearest equal shares of the total."""
+    k = len(sizes)
+    if k == 0:
+        return []
+    ends = list(accumulate((s + open_cost for s in sizes), initial=0))
+    total = ends[-1]
+    # fewer waves than this leave some run above max_bytes
+    n = min(k, cores * max(1, -(-total // (cores * max_bytes))))
+    while True:
+        cuts = [0]
+        for j in range(1, n):
+            share = total * j / n
+            i = bisect_left(ends, share)
+            if share - ends[i - 1] <= ends[i] - share:
+                i -= 1
+            cuts.append(min(max(i, cuts[-1] + 1), k - n + j))
+        runs = [range(a, b) for a, b in zip(cuts, cuts[1:] + [k])]
+        if all(len(r) == 1 or ends[r.stop] - ends[r.start] <= max_bytes for r in runs):
+            return runs
+        n = min(k, n + cores)
+
+
+def _run_task(runs: list, fn: Callable, batches: Iterator) -> Iterator:
+    ids = (j for rb in batches for j in rb.column(0).to_pylist())
+    return fn(item for j in ids for item in runs[j])
+
+
 def map_items(
     spark: SparkSession,
     items: Sequence,
     fn: Callable[[Iterator], Iterator],
     schema,
-    n_tasks: int | None = None,
+    sizes: Sequence[int],
 ) -> DataFrame:
     """Run ``fn(iterator over one task's items) -> Iterator[pa.RecordBatch]``
-    once per task over a driver-side list.
+    once per task over a driver-side list whose item i is ``sizes[i]``
+    bytes.  The one place that sizes a Python-read job: ``plan_tasks``
+    with Spark's file-split settings and ``defaultParallelism`` cores.
 
-    Task i of n gets the contiguous run ``items[i*k//n:(i+1)*k//n]`` of a
-    ``spark.range`` (n defaults to k) and looks its items up in the list
-    the closure carries (PySpark broadcasts one above 1 MB): no Python RDD,
-    whose second worker pool skips worker_boot, and no shuffle."""
-    k = len(items)
-    n = max(1, min(k, n_tasks or k))
-
-    def run(batches):
-        return fn(items[i] for rb in batches for i in rb.column(0).to_pylist())
-
-    return spark.range(0, k, 1, n).mapInArrow(run, schema=schema)
+    Task j is partition j of a ``spark.range`` and looks its run up in the
+    list the task body carries (PySpark broadcasts one above 1 MB): no
+    Python RDD, whose second worker pool skips worker_boot, and no
+    shuffle.  The body is a module-level function under ``partial``, so
+    it pickles by reference and its worker imports this package (and
+    worker_boot) whatever ``fn`` names."""
+    conf = spark._jsparkSession.sessionState().conf()
+    cores = spark.sparkContext.defaultParallelism
+    plan = plan_tasks(
+        sizes, cores, conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes()
+    )
+    runs = [items[r.start:r.stop] for r in plan]
+    return spark.range(0, len(runs), 1, max(1, len(runs))).mapInArrow(
+        partial(_run_task, runs, fn), schema=schema
+    )

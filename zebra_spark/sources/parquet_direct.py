@@ -29,20 +29,47 @@ from ..operators.encode import BLOCKS_DDL, encode_chunk_rows
 from ..session import map_items
 
 
-def row_group_footers(
-    files: list[str],
-) -> Iterator[tuple[str, int, pq.RowGroupMetaData]]:
-    """``(file, row group, its footer metadata)`` for every row group of
-    ``files``, in order; reads footers only."""
-    for f in files:
-        md = pq.ParquetFile(f, memory_map=True).metadata
+def row_groups(
+    footers: list[tuple[str, pq.FileMetaData]], keep=None
+) -> tuple[list[tuple[str, int]], list[int]]:
+    """The ``(file, row group)`` items of the ``(file, footer)`` pairs, in
+    order, whose metadata ``keep`` accepts (all without it), and their
+    compressed bytes: the items and sizes ``map_items`` plans."""
+    items, sizes = [], []
+    for f, md in footers:
         for rg in range(md.num_row_groups):
-            yield f, rg, md.row_group(rg)
+            g = md.row_group(rg)
+            if keep is None or keep(g):
+                items.append((f, rg))
+                sizes.append(
+                    sum(g.column(i).total_compressed_size for i in range(g.num_columns))
+                )
+    return items, sizes
 
 
-def list_row_groups(path: str) -> list[tuple[str, int]]:
+def list_row_groups(path: str) -> tuple[list[tuple[str, int]], list[int]]:
+    """``row_groups`` of every file of a parquet file or directory."""
     files = sorted(glob.glob(os.path.join(path, "*.parquet"))) or [path]
-    return [(f, rg) for f, rg, _ in row_group_footers(files)]
+    return row_groups([(f, pq.read_metadata(f, memory_map=True)) for f in files])
+
+
+def _encode_row_group(
+    p: str, rg: int, rows_per_block: int, columns=None, **kw
+) -> tuple[pa.Table, Iterator[pa.RecordBatch]]:
+    """Row group ``rg`` of file ``p``, read in the task, and a lazy
+    iterator over its block rows."""
+    # memory_map: page-cache reads without userspace copies — measured
+    # ~7% off the tokens-column decode (guide §6)
+    table = pq.ParquetFile(p, memory_map=True).read_row_group(rg, columns=columns)
+    # one state per row group: block_id seq stays unique across chunks
+    state = {"seq": 0}
+    return table, (
+        blk
+        for chunk in table.to_batches(max_chunksize=rows_per_block)
+        for blk in encode_chunk_rows(
+            chunk, task_tag=f"{os.path.basename(p)}:{rg}", _state=state, **kw
+        )
+    )
 
 
 def encode_parquet_direct(
@@ -51,49 +78,32 @@ def encode_parquet_direct(
     rows_per_block: int = 1 << 16,
     max_block_values: int = 1 << 22,
     columns: list[str] | None = None,
-    tasks_per_core: int = 4,
 ) -> DataFrame:
     """Encode a parquet dataset without the JVM->Python row hop.
 
-    Returns the same blocks DataFrame as ``encode_df``.
+    Returns the same blocks DataFrame as ``encode_df``.  Each task streams
+    its contiguous run of the sorted row groups.
     """
-    splits = list_row_groups(path)
-    # group splits into ~tasks_per_core tasks per core instead of one task
-    # per row group: each task streams its contiguous run of the sorted
-    # split list, so per-task scheduling overhead amortizes — measured 26
-    # row groups on local[1]: 26 tasks cost ~2.8 s of pure scheduling
-    # against 1.8 s of compute.  The default 4x parallelism keeps elastic
-    # balance against variable split sizes; on a large cluster splits >>
-    # 4*cores and every core still gets a steady queue.  For short
-    # benchmark legs over UNIFORM splits, pass 1: every task then gets an
-    # equal run, and every python task has a fixed worker cost, measured
-    # at 0.03 CPU-s for a one-row no-op mapInArrow on local[1], which on a
-    # ~2 s leg is still worth not multiplying.
-    n_tasks = tasks_per_core * spark.sparkContext.defaultParallelism
+    # map_items sizes the runs by bytes: one task per core unless a run
+    # would pass Spark's split size.  A task has a fixed JVM cost: the F1
+    # encode on local[4] spent a median 0.79 JVM CPU-s a pass in 4 tasks
+    # and 0.98 in 8 (32 passes each, four alternating sessions), ~0.05 a
+    # task, with Python CPU flat (1.32 and 1.34 CPU-s).
+    splits, sizes = list_row_groups(path)
 
     def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
         for p, rg in task_splits:
-            # memory_map: page-cache reads without userspace copies —
-            # measured ~7% off the tokens-column decode (guide §6)
-            pf = pq.ParquetFile(p, memory_map=True)
-            table = pf.read_row_group(rg, columns=columns)
-            # one state per row group: block_id seq stays unique across
-            # chunks
-            state = {"seq": 0}
-            for chunk in table.to_batches(max_chunksize=rows_per_block):
-                yield from encode_chunk_rows(
-                    chunk, task_tag=f"{os.path.basename(p)}:{rg}",
-                    max_block_values=max_block_values, _state=state,
-                )
+            yield from _encode_row_group(
+                p, rg, rows_per_block, columns, max_block_values=max_block_values
+            )[1]
 
-    return map_items(spark, splits, gen, BLOCKS_DDL, n_tasks)
+    return map_items(spark, splits, gen, BLOCKS_DDL, sizes)
 
 
 def encode_metrics_direct(
     spark: SparkSession,
     path: str,
     rows_per_block: int = 1 << 16,
-    tasks_per_core: int = 1,
 ) -> DataFrame:
     """Encode a parquet dataset and return per-TASK codec metric sums
     (rows/raw/enc/zebra bytes + token count) — the dry-run / size-estimate
@@ -109,27 +119,20 @@ def encode_metrics_direct(
     python workers (measured r6), polluting the N-vs-4N wall ratio with
     sink cost that a per-executor sink would overlap.
     """
-    splits = list_row_groups(path)
+    splits, sizes = list_row_groups(path)
 
     def gen(task_splits: Iterator[tuple[str, int]]) -> Iterator[pa.RecordBatch]:
         # called once per task, so the fold spans the task's whole run
         tot = {"rows": 0, "raw": 0, "enc": 0, "zebra": 0, "tok": 0}
         for p, rg in task_splits:
-            pf = pq.ParquetFile(p, memory_map=True)
-            table = pf.read_row_group(rg)
+            table, blocks = _encode_row_group(p, rg, rows_per_block)
             if "n_tok" in table.column_names:
                 tot["tok"] += int(table.column("n_tok").to_numpy().sum())
-            state = {"seq": 0}
-            for chunk in table.to_batches(max_chunksize=rows_per_block):
-                for blk in encode_chunk_rows(
-                    chunk,
-                    task_tag=f"{os.path.basename(p)}:{rg}",
-                    _state=state,
-                ):
-                    tot["rows"] += blk.column("n_rows")[0].as_py()
-                    tot["raw"] += blk.column("raw_bytes")[0].as_py()
-                    tot["enc"] += blk.column("enc_bytes")[0].as_py()
-                    tot["zebra"] += blk.column("zebra_bytes")[0].as_py()
+            for blk in blocks:
+                tot["rows"] += blk.column("n_rows")[0].as_py()
+                tot["raw"] += blk.column("raw_bytes")[0].as_py()
+                tot["enc"] += blk.column("enc_bytes")[0].as_py()
+                tot["zebra"] += blk.column("zebra_bytes")[0].as_py()
         yield pa.RecordBatch.from_pydict(
             {
                 "n_rows": [tot["rows"]],
@@ -146,5 +149,5 @@ def encode_metrics_direct(
         gen,
         "n_rows long, n_tokens long, raw_bytes long, enc_bytes long, "
         "zebra_bytes long",
-        tasks_per_core * spark.sparkContext.defaultParallelism,
+        sizes,
     )

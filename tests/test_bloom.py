@@ -210,6 +210,40 @@ def test_string_key_bloom_end_to_end(spark):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
+@pytest.mark.parametrize("ktype", ["bigint", "string"])
+def test_key_bloom_leaves_null_keys_out(spark, ktype):
+    """NULL keys are left out of a block's Bloom filter: encoding int and
+    string key columns that hold NULLs succeeds, a block's filter is the
+    one its non-NULL keys build, and key_equals still finds a present
+    key."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from zebra_spark.operators.decode import decode_df
+    from zebra_spark.operators.encode import _key_bloom_words, encode_df
+
+    keys = pa.array([1, None, 3, None], pa.int64()).cast(
+        pa.int64() if ktype == "bigint" else pa.string()
+    )
+    kept = [1, 3] if ktype == "bigint" else [string_key_to_int64(k) for k in ("1", "3")]
+    assert np.array_equal(
+        _key_bloom_words(keys), bloom_build(np.array(kept, np.int64)).view(np.int64)
+    )
+
+    df = spark.range(200).select(
+        F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id")).cast(ktype).alias("k"),
+        F.col("id").alias("v"),
+    )
+    blocks = encode_df(
+        df, rows_per_block=16, key_col="k", key_bloom=True
+    ).localCheckpoint()
+    target = 42 if ktype == "bigint" else "42"
+    got = decode_df(blocks, schema=df.schema, key_equals=target).filter(
+        F.col("k") == target
+    )
+    assert [r["v"] for r in got.collect()] == [42]
+
+
 def test_key_range_and_key_equals_compose(spark):
     """decode_df accepts both skip predicates at once: zone maps drop
     out-of-range blocks, blooms drop non-matching blocks, result exact."""

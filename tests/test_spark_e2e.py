@@ -293,3 +293,28 @@ def test_encode_metrics_direct_matches_full_encode(spark, tmp_path):
     assert fold["enc"] == full["enc"]
     assert fold["enc"] <= fold["zebra"]
     assert fold["tok"] == df.agg(F.sum("n_tok")).collect()[0][0]
+
+
+def test_encode_metrics_direct_counts_null_n_tok_as_zero(spark, tmp_path):
+    """A NULL n_tok adds no tokens to the fold (it used to turn the sum
+    into NaN and fail the task)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zebra_spark.sources.parquet_direct import encode_metrics_direct
+
+    path = str(tmp_path / "f1.parquet")
+    pq.write_table(
+        pa.table({
+            "tokens": pa.array([[1, 2, 3], None, [4]], pa.list_(pa.int32())),
+            "n_tok": pa.array([3, None, 1], pa.int32()),
+        }),
+        path,
+    )
+    row = (
+        encode_metrics_direct(spark, path)
+        .groupBy()
+        .agg(F.sum("n_rows").alias("rows"), F.sum("n_tokens").alias("tok"))
+        .collect()[0]
+    )
+    assert (row["rows"], row["tok"]) == (3, 4)

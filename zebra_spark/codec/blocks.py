@@ -33,6 +33,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .arrowbuf import bitmap, column, from_numpy, validity, value_offsets, values
 from .codecs import (
     decode_ints,
     decode_strings,
@@ -124,98 +125,53 @@ def _int_kind(t: pa.DataType):
 def _storage_int64(arr: pa.Array) -> np.ndarray:
     """Null-filled int storage of an int-like arrow array (bit-preserving).
 
-    r7: signed int8/16/32 (and date32 via the storage view) return their
+    r7: signed int8/16/32 (and date32/time32 storage) return their
     NATIVE numpy dtype instead of widening to int64 — encode_ints plans
     natively-narrow columns at the narrow width (half the memory traffic on
     the hot token stream) and only materializes int64 where a codec needs
     it; the wire bytes are value-determined and unchanged."""
-    t = arr.type
-    kind = _int_kind(t)
+    kind = _int_kind(arr.type)
+    vals = values(arr)  # zero-copy view of the value buffer
     if arr.null_count:
-        arr = pc.fill_null(arr, pa.scalar(0, t) if not pa.types.is_boolean(t) else False)
-    if kind == _VIEW64:
-        if pa.types.is_float64(t):
-            return arr.to_numpy(zero_copy_only=False).view(_I64)
-        # uint64: wrap-around view
-        return arr.to_numpy(zero_copy_only=False).view(_I64)
+        vals = np.where(validity(arr), vals, vals.dtype.type(0))
+    if kind == _VIEW64:  # float64 bits, uint64 wrap-around
+        return vals.view(_I64)
     if kind == _VIEW32:
-        f32 = arr.to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
-        return f32.view(np.int32).astype(_I64)
-    if pa.types.is_temporal(t):
-        # bit-reinterpret to the storage integer first (date32 -> int32 etc.);
-        # arrow cannot cast every temporal type to int64 directly
-        storage = pa.int32() if t.bit_width == 32 else pa.int64()
-        arr = arr.view(storage)
-    if arr.type.id in _NARROW_NATIVE:
+        return vals.view(np.int32).astype(_I64)
+    if vals.dtype in _NARROW_NATIVE:
         # zero-copy for the common narrow case; the codec plans natively
-        return arr.to_numpy(zero_copy_only=False)
-    return pc.cast(arr, pa.int64(), safe=False).to_numpy(zero_copy_only=False)
+        return vals
+    return vals.astype(_I64, copy=False)  # bool, unsigned, 64-bit
 
 
-_NARROW_NATIVE = {pa.int8().id, pa.int16().id, pa.int32().id}
-
-
-_NP_INT = {
-    pa.int8().id: np.int8,
-    pa.int16().id: np.int16,
-    pa.int32().id: np.int32,
-    pa.int64().id: _I64,
-    pa.uint8().id: np.uint8,
-    pa.uint16().id: np.uint16,
-    pa.uint32().id: np.uint32,
-}
+_NARROW_NATIVE = (np.int8, np.int16, np.int32)
 
 
 def _from_storage_int64(vals: np.ndarray, t: pa.DataType, mask) -> pa.Array:
-    """Rebuild an arrow array of type ``t`` from its int64 storage."""
-    if pa.types.is_float64(t):
-        return pa.array(vals.view(np.float64), type=t, mask=mask)
-    if pa.types.is_float32(t):
-        return pa.array(
-            vals.astype(np.int32).view(np.float32), type=t, mask=mask
-        )
-    if pa.types.is_uint64(t):
-        return pa.array(vals.view(np.uint64), type=t, mask=mask)
+    """Rebuild an arrow array of type ``t`` from its int storage: the
+    low ``t.bit_width`` bits of each value are ``t``'s bit pattern."""
     if pa.types.is_boolean(t):
-        return pa.array(vals != 0, type=t, mask=mask)
-    if pa.types.is_temporal(t):
-        # numpy downcast + direct construction: one pass instead of
-        # build-int64-arrow-then-cast (two passes; ~15% of decode time)
-        storage = pa.int32() if t.bit_width == 32 else pa.int64()
-        np_t = np.int32 if t.bit_width == 32 else _I64
-        return pa.array(
-            vals.astype(np_t, copy=False), type=storage, mask=mask
-        ).view(t)
-    np_t = _NP_INT.get(t.id)
-    if np_t is not None:
-        return pa.array(vals.astype(np_t, copy=False), type=t, mask=mask)
-    arr = pa.array(vals, type=pa.int64(), mask=mask)
-    return arr.cast(t, safe=False)
+        return from_numpy(vals != 0, t, mask)
+    return from_numpy(vals.astype(f"i{t.bit_width // 8}", copy=False), t, mask)
 
 
 def _binary_parts(arr: pa.Array):
-    """(lengths int64, concat bytes) of a string/binary array, nulls -> len 0."""
-    t = arr.type
-    target = pa.large_binary()
+    """(lengths int64, concat bytes) of a null-free string/binary array."""
+    barr = arr.cast(pa.large_binary())
+    ends = value_offsets(barr)
+    buf = barr.buffers()[2] if len(barr) else None
+    data = np.frombuffer(buf, dtype=np.uint8) if buf else np.empty(0, np.uint8)
+    concat = data[ends[0] : ends[-1]].tobytes()
+    return np.diff(ends), concat
+
+
+def _list_lengths(arr: pa.Array) -> np.ndarray:
+    """Row lengths of a list array, 0 under a NULL row: int32 for list
+    and map, int64 for large_list (the codec takes either)."""
+    lengths = np.diff(value_offsets(arr))
     if arr.null_count:
-        arr = pc.fill_null(arr, b"" if not pa.types.is_string(t) else "")
-    barr = arr.cast(target)
-    buffers = barr.buffers()
-    offsets = np.frombuffer(buffers[1], dtype=np.int64)[
-        barr.offset : barr.offset + len(barr) + 1
-    ]
-    data = np.frombuffer(buffers[2], dtype=np.uint8) if buffers[2] else np.empty(0, np.uint8)
-    lengths = np.diff(offsets)
-    concat = data[offsets[0] : offsets[-1]].tobytes()
-    return lengths.astype(_I64), concat
-
-
-def _validity_np(arr: pa.Array) -> np.ndarray:
-    return arr.is_valid().to_numpy(zero_copy_only=False)
-
-
-def _bitmap_from_bool(valid: np.ndarray):
-    return pa.array(valid).buffers()[1]
+        lengths = np.where(validity(arr), lengths, lengths.dtype.type(0))
+    return lengths
 
 
 class _Sizes:
@@ -243,7 +199,7 @@ def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes, policy: s
     if has_nulls:
         # bool -> int8 is a zero-copy reinterpretation; the codec plans
         # narrow dtypes natively (values 0/1, wire unchanged)
-        valid = _validity_np(arr).view(np.int8)
+        valid = validity(arr).view(np.int8)
         c, p, m = encode_ints(valid, policy=policy)
         out.append(bytes([c]))
         out.append(p)
@@ -266,8 +222,10 @@ def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes, policy: s
     if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(
         t
     ) or pa.types.is_large_binary(t):
-        lengths, concat = _binary_parts(arr)
-        null_free = pc.fill_null(arr, b"" if not pa.types.is_string(t) else "") if arr.null_count else arr
+        # NULL -> empty value; the fill scalar comes from an array, as a
+        # Python one would make pyarrow import pandas
+        null_free = pc.fill_null(arr, column([b""], t)[0]) if arr.null_count else arr
+        lengths, concat = _binary_parts(null_free)
         c, p, m = encode_strings(
             lengths, concat, arrow_array=null_free, policy=policy
         )
@@ -276,11 +234,7 @@ def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes, policy: s
         sizes.leaf(path, m)
         return
     if pa.types.is_list(t) or pa.types.is_large_list(t):
-        lengths_arr = pc.list_value_length(arr)
-        if lengths_arr.null_count:
-            lengths_arr = pc.fill_null(lengths_arr, 0)
-        # int32 for list / int64 for large_list — the codec takes either
-        lengths = lengths_arr.to_numpy(zero_copy_only=False)
+        lengths = _list_lengths(arr)
         child = arr.flatten()  # concatenated values of valid rows only
         c, p, m = encode_ints(lengths, policy=policy)
         out.append(bytes([c]))
@@ -299,10 +253,7 @@ def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes, policy: s
         # list<struct<key,value>> — encode exactly that representation
         # (validity flag already emitted above for this node).
         as_list = arr.cast(_map_as_list_type(t))
-        lengths_arr = pc.list_value_length(as_list)
-        if lengths_arr.null_count:
-            lengths_arr = pc.fill_null(lengths_arr, 0)
-        lengths = lengths_arr.to_numpy(zero_copy_only=False)
+        lengths = _list_lengths(as_list)
         child = as_list.flatten()
         c, p, m = encode_ints(lengths, policy=policy)
         out.append(bytes([c]))
@@ -385,8 +336,8 @@ def _validate_map_rows(entries: pa.Array, lengths: np.ndarray, n: int):
         eq = pc.equal(keys.slice(1), keys.slice(0, inner_n - 1))
     except pa.lib.ArrowNotImplementedError:
         return  # non-comparable key type: skip (zebra has no such keys)
-    gt_np = gt.to_numpy(zero_copy_only=False)
-    eq_np = eq.to_numpy(zero_copy_only=False)
+    gt_np = values(gt)
+    eq_np = values(eq)
     if (same_row & eq_np).any():
         raise StripedMapDuplicateKeys("duplicate map keys within a row")
     if (same_row & ~gt_np & ~eq_np).any():
@@ -416,7 +367,7 @@ def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
         c = mv[pos]
         lengths, concat, pos = decode_strings(c, mv, n, pos + 1)
         offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
-        validity_buf = _bitmap_from_bool(~mask) if mask is not None else None
+        validity_buf = bitmap(~mask) if mask is not None else None
         arr = pa.Array.from_buffers(
             pa.large_binary(),
             n,
@@ -433,7 +384,7 @@ def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
         offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
         if offsets[-1] != inner_n:
             raise ValueError("list lengths do not sum to child length")
-        validity_buf = _bitmap_from_bool(~mask) if mask is not None else None
+        validity_buf = bitmap(~mask) if mask is not None else None
         big = pa.LargeListArray.from_buffers(
             pa.large_list(child.type),
             n,
@@ -448,7 +399,9 @@ def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
             charr, pos = _decode_column(mv, pos, field.type, n)
             children.append(charr)
         arr = pa.StructArray.from_arrays(
-            children, fields=list(t), mask=pa.array(mask) if mask is not None else None
+            children,
+            fields=list(t),
+            mask=from_numpy(mask, pa.bool_()) if mask is not None else None,
         )
         return arr, pos
     if pa.types.is_map(t):
@@ -459,7 +412,7 @@ def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
         entries_type = _map_as_list_type(t).value_type
         entries, pos = _decode_column(mv, pos, entries_type, inner_n)
         offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-        validity_buf = _bitmap_from_bool(~mask) if mask is not None else None
+        validity_buf = bitmap(~mask) if mask is not None else None
         arr = pa.Array.from_buffers(
             t,
             n,
@@ -503,10 +456,7 @@ def _walk_validate_maps(arr: pa.Array):
     t = arr.type
     if pa.types.is_map(t):
         as_list = arr.cast(_map_as_list_type(t))
-        lengths_arr = pc.list_value_length(as_list)
-        if lengths_arr.null_count:
-            lengths_arr = pc.fill_null(lengths_arr, 0)
-        lengths = pc.cast(lengths_arr, pa.int64()).to_numpy(zero_copy_only=False)
+        lengths = _list_lengths(as_list)
         entries = as_list.flatten()
         _validate_map_rows(entries, lengths, len(arr))
         for i in range(entries.type.num_fields):
@@ -533,7 +483,8 @@ def decode_batch(
     Opt-in: Spark map columns carry no ordering invariant, so blocks we
     encoded from arbitrary Spark data may legitimately hold unsorted maps.
     """
-    mv = memoryview(payload)
+    # unsigned bytes whatever the buffer's format (a pa.Buffer exports 'b')
+    mv = memoryview(payload).cast("B")
     if bytes(mv[:4]) != BLOCK_MAGIC:
         raise ValueError("bad block magic")
     n_rows = int(np.frombuffer(mv[4:8], dtype="<u4")[0])

@@ -35,6 +35,7 @@ from .intcodec import (
     unpack_int_array,
     zigzag64,
 )
+from .arrowbuf import values as np_values
 from .bytecodec import pack_strings, unpack_strings
 from . import fsst as _fsst
 
@@ -400,8 +401,13 @@ def _zstd_bt_planes(narrow: np.ndarray, width: int) -> np.ndarray:
     there is no ``tobytes`` copy on the hot encode path."""
     if width == 1:
         return narrow
-    le = narrow if _NATIVE_LE else narrow.astype(narrow.dtype.newbyteorder("<"))
-    return le.view(np.uint8).reshape(-1, width).T.copy().reshape(-1)
+    # one narrowing copy per plane into one buffer: contiguous writes,
+    # where a transposing copy wrote every byte at a stride (4.08 M
+    # width-2 values: 10.7 -> 3.4 ms, min of 15)
+    planes = np.empty((width, len(narrow)), np.uint8)
+    for p in range(width):
+        np.right_shift(narrow, narrow.dtype.type(8 * p), out=planes[p], casting="unsafe")
+    return planes.reshape(-1)
 
 
 def _zstd_bt_build(values: np.ndarray, zplan, bar: float):
@@ -1333,7 +1339,7 @@ def _string_dict_split(lengths, concat, n, arrow_array):
         )
         u_len = np.diff(offs).astype(_I64)
         u_concat = data[offs[0] : offs[-1]].tobytes()
-        idx = denc.indices.to_numpy(zero_copy_only=False).astype(_I64)
+        idx = np_values(denc.indices).astype(_I64)
         return u_len, u_concat, idx
     offs = np.concatenate(([0], np.cumsum(lengths)))
     step = max(1, n // 512)

@@ -42,6 +42,7 @@ def spark_schema_with_meta(arrow_schema: pa.Schema) -> T.StructType:
         return T.StructType.fromJson(json.loads(raw.decode()))
     return from_arrow_schema(arrow_schema)
 
+from ..codec.arrowbuf import column, slots, validity, values as np_values
 from ..codec.blocks import decode_batch
 from ..codec.bloom import bloom_contains
 from ..session import map_items
@@ -57,7 +58,8 @@ def _block_rows(
     batches: Iterator[pa.RecordBatch], seed: tuple[str, pa.Schema] | None = None
 ) -> Iterator[tuple]:
     """The walk over one task's block rows: ``(block_id, n_rows, payload,
-    crc32, schema_of)`` per block, ``n_rows`` None without that column.
+    crc32, schema_of)`` per block, ``n_rows`` None without that column
+    and ``payload`` a zero-copy ``pa.Buffer`` over the batch's data.
     ``schema_of()`` returns the block's arrow schema, each ``schema_id``
     parsed once per walk, so an audit can record a block whose schema
     bytes are missing or unreadable and go on.  ``seed``, a
@@ -86,13 +88,13 @@ def _block_rows(
             if "n_rows" in rb.schema.names
             else [None] * rb.num_rows
         )
-        payloads = rb.column("payload")
+        payloads = slots(rb.column("payload"))
         crcs = rb.column("crc32").to_pylist()
         for i in range(rb.num_rows):
             yield (
                 ids[i],
                 counts[i],
-                payloads[i].as_py(),
+                payloads[i],
                 crcs[i],
                 partial(block_schema, rb, i),
             )
@@ -229,7 +231,7 @@ def _stored_seed(stored: list) -> tuple[str, bytes] | None:
             for rb in pf.iter_batches(batch_size=64, columns=["schema_id", "schema"]):
                 raws = rb.column("schema")
                 if raws.null_count < rb.num_rows:
-                    i = raws.is_valid().to_numpy(zero_copy_only=False).argmax()
+                    i = validity(raws).argmax()
                     return rb.column("schema_id")[i].as_py(), raws[i].as_py()
     return None
 
@@ -338,11 +340,14 @@ def _zone_mask(rb: pa.RecordBatch, lo, hi) -> pa.Array:
     """``zone_map_filter``'s predicate on a batch of block rows: NULL
     key_min rows survive, and a NULL comparison drops the row as Spark's
     filter does."""
-    cond = True
+    # bounds as Scalars of an array: a Python str would make pyarrow
+    # import pandas
+    lo_s, hi_s = column([lo, hi], pa.string())
+    cond = pc.is_valid(rb.column("key_min"))
     if lo is not None:
-        cond = pc.and_kleene(cond, pc.greater_equal(rb.column("key_max"), lo))
+        cond = pc.and_kleene(cond, pc.greater_equal(rb.column("key_max"), lo_s))
     if hi is not None:
-        cond = pc.and_kleene(cond, pc.less_equal(rb.column("key_min"), hi))
+        cond = pc.and_kleene(cond, pc.less_equal(rb.column("key_min"), hi_s))
     return pc.or_kleene(pc.is_null(rb.column("key_min")), cond)
 
 
@@ -350,16 +355,31 @@ def _bloom_mask(rb: pa.RecordBatch, values: list) -> pa.Array:
     """``bloom_filter_blocks``' predicate on a batch of block rows, with
     the numpy probe: a NULL filter keeps its block."""
     blooms = rb.column("key_bloom")
-    return pa.array(
+    return column(
         [
             not blooms[i].is_valid
-            or any(
-                bloom_contains(blooms[i].values.to_numpy(), v) for v in values
-            )
+            or any(bloom_contains(np_values(blooms[i].values), v) for v in values)
             for i in range(rb.num_rows)
         ],
         pa.bool_(),
     )
+
+
+# payload bytes a stored-table batch holds, about: a row group of large
+# blocks is read one block row a batch, one of small blocks many rows a
+# batch (pyarrow's reader costs ~0.2 ms a batch)
+_BATCH_BYTES = 1 << 20
+
+
+def _rows_per_batch(meta: pq.RowGroupMetaData) -> int:
+    """Block rows a batch of this row group holds: ``_BATCH_BYTES`` of
+    payload at the row group's mean payload size, and at least one."""
+    payload = next(
+        meta.column(j)
+        for j in range(meta.num_columns)
+        if meta.column(j).path_in_schema == "payload"
+    )
+    return max(1, _BATCH_BYTES * meta.num_rows // max(1, payload.total_uncompressed_size))
 
 
 def _stored_batches(
@@ -367,20 +387,23 @@ def _stored_batches(
 ) -> Iterator[pa.RecordBatch]:
     """The block rows of the given ``(file, row group)`` items that
     survive the zone maps and the Bloom filters, read with only the
-    ``cols`` a task needs."""
+    ``cols`` a task needs, about ``_BATCH_BYTES`` of payload a batch: a
+    task never holds a row group's payload column."""
     for f, group in groupby(items, key=lambda item: item[0]):
         with pq.ParquetFile(f, memory_map=True) as pf:
             present = set(pf.schema_arrow.names)
-            for rb in pf.iter_batches(
-                row_groups=[rg for _, rg in group],
-                columns=[c for c in cols if c in present],
-            ):
-                names = rb.schema.names
-                if bounds is not None and "key_min" in names:
-                    rb = rb.filter(_zone_mask(rb, *bounds))
-                if values is not None and "key_bloom" in names:
-                    rb = rb.filter(_bloom_mask(rb, values))
-                yield rb
+            for _, rg in group:
+                for rb in pf.iter_batches(
+                    batch_size=_rows_per_batch(pf.metadata.row_group(rg)),
+                    row_groups=[rg],
+                    columns=[c for c in cols if c in present],
+                ):
+                    names = rb.schema.names
+                    if bounds is not None and "key_min" in names:
+                        rb = rb.filter(_zone_mask(rb, *bounds))
+                    if values is not None and "key_bloom" in names:
+                        rb = rb.filter(_bloom_mask(rb, values))
+                    yield rb
 
 
 def _map_blocks(

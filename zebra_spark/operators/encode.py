@@ -31,6 +31,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..codec.arrowbuf import batch, from_numpy, values
 from ..codec.blocks import annotate_zebra_encodings, encode_batch
 
 BLOCKS_DDL = (
@@ -96,15 +97,18 @@ def _batch_cells(rb: pa.RecordBatch) -> int:
     return total
 
 
-def _key_bloom_words(key_arr: pa.Array):
-    """Bloom words (python list of signed int64) for one block's keys;
-    string keys hash via string_key_to_int64 (per-row md5 — the opt-in's
-    documented cost on string keys; int keys are fully vectorized)."""
+def _key_bloom_words(key_arr: pa.Array) -> np.ndarray:
+    """Bloom words (signed int64) for one block's keys; NULL keys are left
+    out, as no lookup can match them.  String keys hash via
+    string_key_to_int64 (per-row md5 — the opt-in's documented cost on
+    string keys; int keys are fully vectorized)."""
     from ..codec.bloom import bloom_build, string_key_to_int64
 
     t = key_arr.type
+    if key_arr.null_count:
+        key_arr = key_arr.filter(key_arr.is_valid())
     if pa.types.is_integer(t):
-        keys = key_arr.to_numpy(zero_copy_only=False).astype(np.int64)
+        keys = values(key_arr).astype(np.int64)
     elif pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t):
         keys = np.fromiter(
             (string_key_to_int64(v.as_py()) for v in key_arr),
@@ -115,7 +119,7 @@ def _key_bloom_words(key_arr: pa.Array):
         raise ValueError(
             f"key_bloom requires an int or string key column, got {t}"
         )
-    return bloom_build(keys).view(np.int64).tolist()
+    return bloom_build(keys).view(np.int64)
 
 
 def encode_chunk_rows(
@@ -183,7 +187,8 @@ def encode_chunk_rows(
                 bloom = _key_bloom_words(chunk.column(key_col))
         seq = state["seq"]
         state["seq"] += 1
-        yield pa.RecordBatch.from_pydict(
+        yield batch(
+            _OUT_SCHEMA,
             {
                 "block_id": [f"{task_id}-{seq:08d}"],
                 "part_start": [first_key],
@@ -200,7 +205,6 @@ def encode_chunk_rows(
                 "crc32": [zlib.crc32(payload)],
                 "key_bloom": [bloom],
             },
-            schema=_OUT_SCHEMA,
         )
 
 
@@ -240,9 +244,9 @@ def _encode_grouped_fn(rows_per_block: int, key_col: str | None, group_col: str,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            units = rb.column(group_col).to_numpy(zero_copy_only=False)
+            units = values(rb.column(group_col))
             order = np.argsort(units, kind="stable")
-            rb2 = rb.take(pa.array(order))
+            rb2 = rb.take(from_numpy(order, pa.int64()))
             us = units[order]
             bounds = np.flatnonzero(np.diff(us)) + 1
             starts = np.concatenate(([0], bounds))
@@ -261,7 +265,8 @@ def _encode_grouped_fn(rows_per_block: int, key_col: str | None, group_col: str,
                     field_meta=field_meta,
                 ):
                     yield out_rb.append_column(
-                        "unit", pa.array([unit_val] * out_rb.num_rows, pa.int32())
+                        "unit",
+                        from_numpy(np.full(out_rb.num_rows, unit_val, np.int32), pa.int32()),
                     )
 
     return encode

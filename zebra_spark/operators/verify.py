@@ -36,6 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..codec.arrowbuf import batch
 from ..codec.blocks import decode_batch, encode_batch
 from .decode import _block_rows, _map_blocks, _stored_source
 
@@ -103,7 +104,9 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
                     "error": err,
                 }
             )
-        yield pa.RecordBatch.from_pylist(report, schema=_VERIFY_SCHEMA)
+        yield batch(
+            _VERIFY_SCHEMA, {n: [r[n] for r in report] for n in _VERIFY_SCHEMA.names}
+        )
 
     return _map_blocks(
         blocks, _stored_source(blocks), run, from_arrow_schema(_VERIFY_SCHEMA)

@@ -112,9 +112,13 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
     ``decode_df`` uses: a bare stored table is counted in Python tasks
     with no JVM scan of its payloads."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
+    from ..codec.arrowbuf import batch
     from ..codec.blocks import decode_batch
     from ..operators.decode import _block_rows, _map_blocks, _stored_source
+
+    schema = pa.schema([("block_id", pa.string()), ("n_bytes", pa.int64())])
 
     def run(batches):
         ids, counts = [], []
@@ -123,15 +127,10 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
             ids.append(block_id)
             n = pa.compute.sum(pa.compute.binary_length(col)).as_py()
             counts.append(n or 0)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "block_id": pa.array(ids, pa.string()),
-                "n_bytes": pa.array(counts, pa.int64()),
-            }
-        )
+        yield batch(schema, {"block_id": ids, "n_bytes": counts})
 
     return _map_blocks(
-        blocks, _stored_source(blocks), run, "block_id string, n_bytes long"
+        blocks, _stored_source(blocks), run, from_arrow_schema(schema)
     )
 
 

@@ -21,10 +21,13 @@ import os
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..codec.arrowbuf import batch
 from ..operators.encode import BLOCKS_DDL, encode_chunk_rows
 from ..session import map_items
 
@@ -100,6 +103,11 @@ def encode_parquet_direct(
     return map_items(spark, splits, gen, BLOCKS_DDL, sizes)
 
 
+_METRICS_SCHEMA = pa.schema(
+    [(k, pa.int64()) for k in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes", "zebra_bytes")]
+)
+
+
 def encode_metrics_direct(
     spark: SparkSession,
     path: str,
@@ -127,27 +135,24 @@ def encode_metrics_direct(
         for p, rg in task_splits:
             table, blocks = _encode_row_group(p, rg, rows_per_block)
             if "n_tok" in table.column_names:
-                tot["tok"] += int(table.column("n_tok").to_numpy().sum())
+                # a NULL n_tok counts 0 (pc.sum skips it)
+                tot["tok"] += pc.sum(table.column("n_tok")).as_py() or 0
             for blk in blocks:
                 tot["rows"] += blk.column("n_rows")[0].as_py()
                 tot["raw"] += blk.column("raw_bytes")[0].as_py()
                 tot["enc"] += blk.column("enc_bytes")[0].as_py()
                 tot["zebra"] += blk.column("zebra_bytes")[0].as_py()
-        yield pa.RecordBatch.from_pydict(
+        yield batch(
+            _METRICS_SCHEMA,
             {
                 "n_rows": [tot["rows"]],
                 "n_tokens": [tot["tok"]],
                 "raw_bytes": [tot["raw"]],
                 "enc_bytes": [tot["enc"]],
                 "zebra_bytes": [tot["zebra"]],
-            }
+            },
         )
 
     return map_items(
-        spark,
-        splits,
-        gen,
-        "n_rows long, n_tokens long, raw_bytes long, enc_bytes long, "
-        "zebra_bytes long",
-        sizes,
+        spark, splits, gen, from_arrow_schema(_METRICS_SCHEMA), sizes
     )

@@ -15,9 +15,9 @@ same path is still re-read.
 
 PySpark's daemon also runs a full ``gc.collect()`` after every task a
 reused worker serves (``pyspark/daemon.py``).  An engine worker holds
-~75k GC-tracked objects from ~770 modules (~300 of them pandas, which
-pyarrow imports on first use), so each of those collections re-walked
-the import-time heap for ~40-70 ms on a 4-core host.
+~42k GC-tracked objects from ~414 modules (~73k from ~750 once anything
+in it makes pyarrow import pandas), so each of those collections
+re-walked the import-time heap for ~40-70 ms on a 4-core host.
 ``install_gc_freeze`` hooks ``gc.callbacks`` so that a generation-2
 collection that ends while no task context is set, i.e. the daemon's
 post-task collect, calls ``gc.freeze()``: later collections walk only

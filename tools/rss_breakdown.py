@@ -6,7 +6,9 @@ as ``perfbench/run.py`` (its session, warm-up passes and closed timed
 loop, through perfbench's own classes) and then prints each process's
 VmHWM and VmRSS by role: the driver (this process), the JVM, the PySpark
 daemon and each Python worker, and for every Python process whether it
-has loaded pandas.  The per-role sums show which processes a memory
+has loaded pandas.  VmRSS is split into RssAnon (heap and other private
+memory) and RssFile (file pages mapped in, such as a memory-mapped
+parquet file's), so a file mapping's share of a process shows.  The per-role sums show which processes a memory
 change moved.
 
     python3 tools/rss_breakdown.py --workload tokens_read --seed 11
@@ -34,7 +36,7 @@ def _status_kb(pid: int) -> dict[str, int]:
     with open(f"/proc/{pid}/status") as f:
         for line in f:
             key, _, rest = line.partition(":")
-            if key in ("VmHWM", "VmRSS"):
+            if key in ("VmHWM", "VmRSS", "RssAnon", "RssFile"):
                 out[key] = int(rest.split()[0])
     return out
 
@@ -47,8 +49,8 @@ def _has_pandas(pid: int) -> bool:
 
 
 def processes() -> list[dict]:
-    """Role, VmHWM and VmRSS (MB) and pandas state of this process and
-    every process under it."""
+    """Role, VmHWM, VmRSS, RssAnon and RssFile (MB) and pandas state of
+    this process and every process under it."""
     from perfbench.proctree import _snapshot, _tree
 
     me = os.getpid()
@@ -70,7 +72,9 @@ def processes() -> list[dict]:
         except (FileNotFoundError, ProcessLookupError):
             continue  # exited while we listed it
         rows.append({"pid": pid, "role": role, "hwm_mb": kb.get("VmHWM", 0) / 1024,
-                     "rss_mb": kb.get("VmRSS", 0) / 1024, "pandas": pandas})
+                     "rss_mb": kb.get("VmRSS", 0) / 1024,
+                     "anon_mb": kb.get("RssAnon", 0) / 1024,
+                     "file_mb": kb.get("RssFile", 0) / 1024, "pandas": pandas})
     return rows
 
 
@@ -117,10 +121,12 @@ def main() -> int:
     args = ap.parse_args()
     os.chdir(REPO)
     rows = run_passes(args.workload, args.seed, args.seconds)
-    print(f"{'role':8s} {'pid':>8s} {'VmHWM MB':>10s} {'VmRSS MB':>10s}  pandas")
+    print(f"{'role':8s} {'pid':>8s} {'VmHWM MB':>10s} {'VmRSS MB':>10s} "
+          f"{'RssAnon MB':>11s} {'RssFile MB':>11s}  pandas")
     for r in rows:
         pandas = "-" if r["pandas"] is None else ("yes" if r["pandas"] else "no")
-        print(f"{r['role']:8s} {r['pid']:>8d} {r['hwm_mb']:>10.1f} {r['rss_mb']:>10.1f}  {pandas}")
+        print(f"{r['role']:8s} {r['pid']:>8d} {r['hwm_mb']:>10.1f} {r['rss_mb']:>10.1f} "
+              f"{r['anon_mb']:>11.1f} {r['file_mb']:>11.1f}  {pandas}")
     sums = {}
     for r in rows:
         sums[r["role"]] = sums.get(r["role"], 0.0) + r["hwm_mb"]

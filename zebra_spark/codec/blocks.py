@@ -147,12 +147,18 @@ def _storage_int64(arr: pa.Array) -> np.ndarray:
 _NARROW_NATIVE = (np.int8, np.int16, np.int32)
 
 
-def _from_storage_int64(vals: np.ndarray, t: pa.DataType, mask) -> pa.Array:
-    """Rebuild an arrow array of type ``t`` from its int storage: the
-    low ``t.bit_width`` bits of each value are ``t``'s bit pattern."""
+def _storage_dtype(t: pa.DataType) -> np.dtype:
+    """The dtype an int-like column of type ``t`` decodes at: its own
+    width (the low bits of the int64 storage are ``t``'s bit pattern),
+    int8 for booleans."""
+    return np.dtype(np.int8 if pa.types.is_boolean(t) else f"i{t.bit_width // 8}")
+
+
+def _from_storage(vals: np.ndarray, t: pa.DataType, mask) -> pa.Array:
+    """Rebuild an arrow array of type ``t`` from its decoded storage."""
     if pa.types.is_boolean(t):
         return from_numpy(vals != 0, t, mask)
-    return from_numpy(vals.astype(f"i{t.bit_width // 8}", copy=False), t, mask)
+    return from_numpy(vals, t, mask)
 
 
 def _binary_parts(arr: pa.Array):
@@ -344,55 +350,70 @@ def _validate_map_rows(entries: pa.Array, lengths: np.ndarray, n: int):
         raise StripedMapNotSorted("map keys not strictly ascending within a row")
 
 
+def _offsets(lengths: np.ndarray, total: int) -> np.ndarray:
+    """``len + 1`` offsets, in ``lengths``' dtype, from row lengths that
+    sum to ``total``."""
+    if len(lengths) and int(lengths.min()) < 0:
+        raise ValueError("negative row length")
+    if total > np.iinfo(lengths.dtype).max:
+        raise ValueError(f"{total} values overflow {lengths.dtype} offsets")
+    offsets = np.zeros(len(lengths) + 1, dtype=lengths.dtype)
+    np.cumsum(lengths, dtype=lengths.dtype, out=offsets[1:])
+    return offsets
+
+
+def _offset_dtype(t: pa.DataType) -> np.dtype:
+    """The offsets dtype of a string, binary, list or map type."""
+    large = pa.types.is_large_string(t) or pa.types.is_large_binary(t) or pa.types.is_large_list(t)
+    return np.dtype(np.int64 if large else np.int32)
+
+
 def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
+    """Decode one column section into an array of type ``t``, each int
+    section at its own width (see :func:`~zebra_spark.codec.codecs.decode_ints`)."""
     flags = mv[pos]
     pos += 1
     mask = None
     if flags & 1:
-        vc = mv[pos]
-        valid, pos = decode_ints(vc, mv, n, pos + 1)
+        valid, pos = decode_ints(mv[pos], mv, n, pos + 1, np.int8)
         mask = valid == 0  # pa mask marks NULL positions
+    validity_buf = bitmap(~mask) if mask is not None else None
+    null_count = int(np.count_nonzero(mask)) if mask is not None else 0
 
     if _int_kind(t) is not None:
-        c = mv[pos]
-        # 32-bit columns (int32/uint32/date32/float32-view): hint the
-        # codec to emit int32 directly so the storage->arrow astype below
-        # becomes a no-op (r7; values identical — see decode_ints)
-        prefer = np.int32 if getattr(t, "bit_width", 64) == 32 else None
-        vals, pos = decode_ints(c, mv, n, pos + 1, prefer=prefer)
-        return _from_storage_int64(vals, t, mask), pos
+        vals, pos = decode_ints(mv[pos], mv, n, pos + 1, _storage_dtype(t))
+        return _from_storage(vals, t, mask), pos
     if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(
         t
     ) or pa.types.is_large_binary(t):
-        c = mv[pos]
-        lengths, concat, pos = decode_strings(c, mv, n, pos + 1)
-        offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
-        validity_buf = bitmap(~mask) if mask is not None else None
+        lengths, concat, pos = decode_strings(mv[pos], mv, n, pos + 1, _offset_dtype(t))
+        offsets = _offsets(lengths, len(concat))
         arr = pa.Array.from_buffers(
-            pa.large_binary(),
+            t,
             n,
-            [validity_buf, pa.py_buffer(offsets.tobytes()), pa.py_buffer(concat)],
-            null_count=int(mask.sum()) if mask is not None else 0,
+            [validity_buf, pa.py_buffer(offsets), pa.py_buffer(concat)],
+            null_count=null_count,
         )
-        return arr.cast(t), pos
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        c = mv[pos]
-        lengths, pos = decode_ints(c, mv, n, pos + 1)
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            arr.validate(full=True)  # UTF-8
+        return arr, pos
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_map(t):
+        lengths, pos = decode_ints(mv[pos], mv, n, pos + 1, _offset_dtype(t))
         inner_n = int(np.frombuffer(mv[pos : pos + 8], dtype="<u8")[0])
         pos += 8
-        child, pos = _decode_column(mv, pos, t.value_type, inner_n)
-        offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
-        if offsets[-1] != inner_n:
+        if int(lengths.sum()) != inner_n:
             raise ValueError("list lengths do not sum to child length")
-        validity_buf = bitmap(~mask) if mask is not None else None
-        big = pa.LargeListArray.from_buffers(
-            pa.large_list(child.type),
+        offsets = _offsets(lengths, inner_n)
+        child_t = _map_as_list_type(t).value_type if pa.types.is_map(t) else t.value_type
+        child, pos = _decode_column(mv, pos, child_t, inner_n)
+        arr = pa.Array.from_buffers(
+            t,
             n,
-            [validity_buf, pa.py_buffer(offsets.tobytes())],
-            null_count=int(mask.sum()) if mask is not None else 0,
+            [validity_buf, pa.py_buffer(offsets)],
+            null_count=null_count,
             children=[child],
         )
-        return big.cast(t), pos
+        return arr, pos
     if pa.types.is_struct(t):
         children = []
         for field in t:
@@ -402,23 +423,6 @@ def _decode_column(mv: memoryview, pos: int, t: pa.DataType, n: int):
             children,
             fields=list(t),
             mask=from_numpy(mask, pa.bool_()) if mask is not None else None,
-        )
-        return arr, pos
-    if pa.types.is_map(t):
-        c = mv[pos]
-        lengths, pos = decode_ints(c, mv, n, pos + 1)
-        inner_n = int(np.frombuffer(mv[pos : pos + 8], dtype="<u8")[0])
-        pos += 8
-        entries_type = _map_as_list_type(t).value_type
-        entries, pos = _decode_column(mv, pos, entries_type, inner_n)
-        offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-        validity_buf = bitmap(~mask) if mask is not None else None
-        arr = pa.Array.from_buffers(
-            t,
-            n,
-            [validity_buf, pa.py_buffer(offsets.tobytes())],
-            null_count=int(mask.sum()) if mask is not None else 0,
-            children=[entries],
         )
         return arr, pos
     raise NotImplementedError(f"unsupported arrow type for block decode: {t}")

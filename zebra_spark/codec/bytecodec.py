@@ -39,8 +39,7 @@ def unpack_byte_array(buf, n_expected: int, pos: int = 0):
     mv = memoryview(buf)
     n_comp = int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
     comp = mv[pos + 4 : pos + 4 + n_comp]
-    out = _SNAPPY.decompress(comp, n_expected)
-    data = out.to_pybytes() if isinstance(out, pa.Buffer) else out
+    data = _SNAPPY.decompress(comp, n_expected, asbytes=True)
     if len(data) != n_expected:
         raise ValueError(
             f"snappy decoded wrong size: expected {n_expected}, got {len(data)}"
@@ -65,9 +64,10 @@ def pack_strings(lengths: np.ndarray, concat: bytes) -> bytes:
     )
 
 
-def unpack_strings(buf, n: int, pos: int = 0):
-    """Returns ``(lengths int64[n], concatenated bytes, next_pos)``."""
-    lengths, pos = unpack_int_array(buf, n, pos)
+def unpack_strings(buf, n: int, pos: int = 0, dtype=np.int64):
+    """Returns ``(lengths, concatenated bytes, next_pos)``, the ``n``
+    lengths as ``dtype``."""
+    lengths, pos = unpack_int_array(buf, n, pos, dtype)
     data, pos = unpack_sized_byte_array(buf, pos)
     if int(lengths.sum()) != len(data):
         raise ValueError("string lengths do not sum to byte count")

@@ -9,7 +9,8 @@ codecs with a stats-driven selector.  The contract that keeps the
 candidate and the selector takes the exact minimum, so a selected payload is
 never larger than the reference payload for the same framing.
 
-Every int codec payload decodes to bit-identical int64s; every string codec
+Every int codec payload decodes to bit-identical int64s, or to their low
+bits at a column's own width (:func:`decode_ints`); every string codec
 payload decodes to bit-identical (lengths, concatenated-bytes).
 
 Wire framing (ours, block-internal): ``u8 codec_id | payload``.
@@ -22,8 +23,8 @@ import os
 import numpy as np
 
 from .intcodec import (
+    CHUNK_GROUPS,
     INT_HEADER_BYTES,
-    _NATIVE_LE,
     _bp64_pack_group,
     _bp64_unpack_group,
     bit_length64,
@@ -32,10 +33,12 @@ from .intcodec import (
     pack_int_array,
     packed_size,
     plan_int_array,
+    _int_array_chunks,
     unpack_int_array,
+    unpack_into,
     zigzag64,
 )
-from .arrowbuf import values as np_values
+from .arrowbuf import from_numpy, value_offsets as np_offsets, values as np_values
 from .bytecodec import pack_strings, unpack_strings
 from . import fsst as _fsst
 
@@ -991,156 +994,217 @@ def skip_strings(codec: int, buf, n: int, pos: int = 0) -> int:
     raise ValueError(f"unknown string codec {codec}")
 
 
-def decode_ints(codec: int, buf, n: int, pos: int = 0, prefer=None):
+def decode_ints(codec: int, buf, n: int, pos: int = 0, dtype=_I64):
     """Inverse of :func:`encode_ints`. Returns ``(values, next_pos)``.
 
-    ``prefer`` (r7): optional target numpy dtype hint from the caller's
-    schema.  Codecs MAY honor it to emit the narrow dtype directly and
-    skip the downstream int64->narrow astype pass (currently the ZSTD_BT
-    widen+add fuses to int32); codecs that ignore it return int64 as
-    before and the caller's astype handles the narrowing.  Values are
-    identical either way — the hint is only legal when the decoded
-    column's true values fit the preferred dtype (they round-trip a
-    column of that arrow type)."""
-    mv = memoryview(buf)
+    ``values`` is one array of ``dtype``, any numpy integer dtype
+    (default int64): the low bits of the int64 values the payload
+    encodes, i.e. the int64 result's ``astype(dtype)``.  A block decodes
+    each column at its schema's own width (int32 tokens, int8 validity),
+    so no full-length int64 copy is built.  Every kernel writes straight
+    into that output a bounded run of values at a time (``CHUNK_GROUPS``
+    64-value groups), adding frame offsets and prefix sums modulo the
+    output's width, which equals the int64 arithmetic's low bits.
+    Declared counts and widths are checked against the row count and
+    the payload before anything is allocated from them; a payload that
+    fails a check raises ``ValueError`` naming the field."""
+    out = np.empty(n, dtype=dtype)
+    return out, _decode_into(codec, memoryview(buf).cast("B"), pos, out)
+
+
+_CHUNK = CHUNK_GROUPS * 64
+
+
+def _u32(mv, pos: int) -> int:
+    return int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
+
+
+def _i64(mv, pos: int) -> int:
+    return int(np.frombuffer(mv[pos : pos + 8], dtype="<i8")[0])
+
+
+def _low_bits(v: int, dtype: np.dtype):
+    """``v``'s low bits as a scalar of integer ``dtype``."""
+    return _I64(v).astype(dtype)
+
+
+def _add_base(dst: np.ndarray, u: np.ndarray, base: int) -> None:
+    """``dst = u + base`` modulo ``dst``'s width: ``u`` unsigned of any
+    width, summed at the wider of the two widths and truncated."""
+    if base == 0:  # a widening copy is cheaper than an add
+        np.copyto(dst.view(f"u{dst.itemsize}"), u, casting="unsafe")
+        return
+    cdt = np.dtype(f"u{max(u.itemsize, dst.itemsize)}")
+    np.add(
+        u,
+        cdt.type(base % (1 << (8 * cdt.itemsize))),
+        out=dst.view(f"u{dst.itemsize}"),
+        dtype=cdt,
+        casting="unsafe",
+    )
+
+
+def _count(mv, pos: int, name: str, limit: int) -> int:
+    """The u32 count ``name`` at ``pos``, checked against ``limit``."""
+    v = _u32(mv, pos)
+    if v > limit:
+        raise ValueError(f"{name} {v} exceeds {limit}")
+    return v
+
+
+def _packed_words(mv, pos: int, n: int, b: int, name: str) -> np.ndarray:
+    """The ``ceil(n / 64) * b`` little-endian words of a fixed-width BP64
+    run at ``pos``, checked to lie inside the payload (a zero-copy view)."""
+    if b > 64:
+        raise ValueError(f"{name} {b} exceeds 64")
+    count = -(-n // 64) * b
+    if pos + count * 8 > len(mv):
+        raise ValueError(
+            f"{name} {b}: {count * 8} packed bytes at {pos} run past the "
+            f"{len(mv)}-byte payload"
+        )
+    return np.frombuffer(mv, dtype="<u8", count=count, offset=pos)
+
+
+def _unpacked(words: np.ndarray, b: int, lo: int, hi: int) -> np.ndarray:
+    """Values ``lo:hi`` (``lo`` a multiple of 64) of a width-``b`` BP64
+    run: uint64, or the narrow unsigned dtype at byte-aligned widths."""
+    g0, g1 = lo // 64, -(-hi // 64)
+    w = words[g0 * b : g1 * b].astype(np.uint64)  # aligned chunk copy
+    return _bp64_unpack_group(w.reshape(g1 - g0, b), b).reshape(-1)[: hi - lo]
+
+
+def _rle_into(mv, pos: int, out: np.ndarray) -> int:
+    n = len(out)
+    n_runs = _count(mv, pos, "RLE n_runs", n)
+    rv, p = unpack_int_array(mv, n_runs, pos + 4, out.dtype)
+    # lengths at a width that holds the row count: checked to lie in
+    # [0, n] and sum to n, their prefix sums cannot wrap
+    rl, p = unpack_int_array(mv, n_runs, p, np.int32 if n < 1 << 31 else _I64)
+    in_range = n_runs == 0 or (int(rl.min()) >= 0 and int(rl.max()) <= n)
+    if not in_range or int(rl.sum()) != n:
+        raise ValueError("RLE run lengths do not sum to row count")
+    ends = np.cumsum(rl, out=rl)
+    for lo in range(0, n, _CHUNK):
+        hi = min(lo + _CHUNK, n)
+        # the runs covering [lo, hi), cut to it
+        r0 = int(np.searchsorted(ends, lo, side="right"))
+        r1 = int(np.searchsorted(ends, hi, side="left")) + 1
+        lens = np.diff(np.minimum(ends[r0:r1], hi), prepend=lo)
+        out[lo:hi] = np.repeat(rv[r0:r1], lens)
+    return p
+
+
+def _decode_into(codec: int, mv, pos: int, out: np.ndarray) -> int:
+    """Decode ``len(out)`` values at ``pos`` into ``out``; returns the
+    next position (see :func:`decode_ints`)."""
+    n = len(out)
     if codec == IntCodec.ZEBRA:
-        return unpack_int_array(mv, n, pos)
+        return unpack_into(mv, pos, out)
     if codec == IntCodec.CONSTANT:
-        v = int(np.frombuffer(mv[pos : pos + 8], dtype="<i8")[0])
-        return np.full(n, v, dtype=_I64), pos + 8
+        out.fill(_low_bits(_i64(mv, pos), out.dtype))
+        return pos + 8
     if codec == IntCodec.RLE:
-        n_runs = int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
-        rv, p = unpack_int_array(mv, n_runs, pos + 4)
-        rl, p = unpack_int_array(mv, n_runs, p)
-        out = np.repeat(rv, rl)
-        if len(out) != n:
-            raise ValueError("RLE run lengths do not sum to row count")
-        return out, p
+        return _rle_into(mv, pos, out)
     if codec == IntCodec.DICT:
-        n_dict = int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
-        uniq, p = unpack_int_array(mv, n_dict, pos + 4)
-        idx, p = unpack_int_array(mv, n, p)
-        return uniq[idx], p
-    if codec == IntCodec.DELTA_V0:
-        # legacy wire: deltas as one zebra int_array directly
-        first = int(np.frombuffer(mv[pos : pos + 8], dtype="<i8")[0])
-        deltas, p = unpack_int_array(mv, n - 1, pos + 8)
-        out = np.empty(n, dtype=_I64)
-        out[0] = first
-        with np.errstate(over="ignore"):
-            np.cumsum(deltas, dtype=_I64, out=out[1:])
-            out[1:] += _I64(first)
-        return out, p
-    if codec == IntCodec.DELTA:
-        first = int(np.frombuffer(mv[pos : pos + 8], dtype="<i8")[0])
-        deltas, p = decode_ints(_delta_inner(mv, pos), mv, n - 1, pos + 9)
-        out = np.empty(n, dtype=_I64)
-        out[0] = first
-        with np.errstate(over="ignore"):
-            np.cumsum(deltas, dtype=_I64, out=out[1:])
-            out[1:] += _I64(first)
-        return out, p
-    if codec == IntCodec.PFOR:
-        b = mv[pos]
-        vmin = int(np.frombuffer(mv[pos + 1 : pos + 9], dtype="<i8")[0])
-        n_exc = int(np.frombuffer(mv[pos + 9 : pos + 13], dtype="<u4")[0])
-        n_groups = -(-n // 64)
-        p = pos + 13
-        if b:
-            nbytes = n_groups * 8 * b
-            words = np.frombuffer(mv[p : p + nbytes], dtype="<u8").reshape(
-                n_groups, b
-            )
-            base = _bp64_unpack_group(
-                words.astype(np.uint64, copy=False), b
-            ).reshape(-1)[:n]
-            p += nbytes
+        n_dict = _count(mv, pos, "DICT n_dict", n)
+        uniq, p = unpack_int_array(mv, n_dict, pos + 4, out.dtype)
+        p, chunks = _int_array_chunks(mv, n, p)
+        for lo, hi, idx in chunks:
+            np.take(uniq, idx, out=out[lo:hi])
+        return p
+    if codec in (IntCodec.DELTA, IntCodec.DELTA_V0):
+        # values = prefix sums of [first, deltas...], wrapping at out's
+        # width exactly as the int64 sums wrap in their low bits
+        if n == 0:
+            raise ValueError("DELTA section for zero rows")
+        out[0] = _low_bits(_i64(mv, pos), out.dtype)
+        if codec == IntCodec.DELTA_V0:  # legacy wire: one zebra int_array
+            p = unpack_into(mv, pos + 8, out[1:])
         else:
-            base = np.zeros(n, dtype=np.uint64)
-        out = base.view(_I64)
-        if not out.flags.writeable:  # w==64 unpack can alias the buffer
-            out = out.copy()
-        with np.errstate(over="ignore"):
-            out += _I64(vmin)
+            p = _decode_into(_delta_inner(mv, pos), mv, pos + 9, out[1:])
+        np.cumsum(out, dtype=out.dtype, out=out)
+        return p
+    if codec == IntCodec.PFOR:
+        vmin = _i64(mv, pos + 1)
+        n_exc = _count(mv, pos + 9, "PFoR n_exc", n)
+        b = mv[pos]
+        words = _packed_words(mv, pos + 13, n, b, "PFoR b")
+        if b == 0:
+            out.fill(_low_bits(vmin, out.dtype))
+        for lo in range(0, n if b else 0, _CHUNK):
+            hi = min(lo + _CHUNK, n)
+            _add_base(out[lo:hi], _unpacked(words, b, lo, hi), vmin)
+        p = pos + 13 + words.nbytes
         if n_exc:
             positions, p = unpack_int_array(mv, n_exc, p)
-            exc_vals, p = unpack_int_array(mv, n_exc, p)
+            exc_vals, p = unpack_int_array(mv, n_exc, p, out.dtype)
+            if int(positions.min()) < 0 or int(positions.max()) >= n:
+                raise ValueError("PFoR exception position outside the rows")
             out[positions] = exc_vals
-        return out, p
+        return p
     if codec == IntCodec.ALP:
-        e = mv[pos]
-        ints, p = unpack_int_array(mv, n, pos + 1)
         # same IEEE-exact division the encoder verified bit-for-bit
-        floats = ints.astype(np.float64) / np.float64(10.0**e)
-        return floats.view(_I64).copy(), p
+        scale = np.float64(10.0 ** mv[pos])
+        p, chunks = _int_array_chunks(mv, n, pos + 1)
+        for lo, hi, ints in chunks:
+            f = ints.astype(np.float64)
+            np.divide(f, scale, out=f)
+            np.copyto(out[lo:hi], f.view(_I64), casting="unsafe")
+        return p
     if codec == IntCodec.ALP_RD:
         r, tz = int(mv[pos]), int(mv[pos + 1])
-        n_dict = int(np.frombuffer(mv[pos + 2 : pos + 6], dtype="<u4")[0])
-        p = pos + 6
-        n_groups = -(-n // 64)
-        if r:
-            nbytes = n_groups * 8 * r
-            words = np.frombuffer(mv[p : p + nbytes], dtype="<u8").reshape(
-                n_groups, r
+        if r + tz > 64:
+            raise ValueError(f"ALP-RD r {r} + tz {tz} exceeds 64")
+        n_dict = _count(mv, pos + 2, "ALP-RD n_dict", n)
+        words = _packed_words(mv, pos + 6, n, r, "ALP-RD r")
+        left, p = unpack_int_array(mv, n_dict, pos + 6 + words.nbytes)
+        left = left.view(np.uint64)
+        p, chunks = _int_array_chunks(mv, n, p)
+        for lo, hi, codes in chunks:
+            v = (
+                _unpacked(words, r, lo, hi).astype(np.uint64)
+                if r
+                else np.zeros(hi - lo, dtype=np.uint64)
             )
-            right = _bp64_unpack_group(
-                words.astype(np.uint64, copy=False), r
-            ).reshape(-1)[:n]
-            p += nbytes
-        else:
-            right = np.zeros(n, dtype=np.uint64)
-        dict_, p = unpack_int_array(mv, n_dict, p)
-        codes, p = unpack_int_array(mv, n, p)
-        left = dict_.view(np.uint64)[codes]
-        shift = r + tz
-        out = right << np.uint64(tz) if tz else right
-        if shift < 64:  # shift==64 <=> zero-width left (dict is all-zero)
-            out = out | (left << np.uint64(shift))
-        return out.view(_I64).astype(_I64, copy=False), p
+            if tz:
+                np.left_shift(v, np.uint64(tz), out=v)
+            if r + tz < 64:  # r + tz == 64 <=> zero-width left (all-zero dict)
+                v |= np.left_shift(left[codes], np.uint64(r + tz))
+            np.copyto(out[lo:hi], v.view(_I64), casting="unsafe")
+        return p
     if codec == IntCodec.ZSTD_BT:
         import pyarrow as pa
 
-        width = int(mv[pos])
-        vmin = int(np.frombuffer(mv[pos + 1 : pos + 9], dtype="<i8")[0])
-        comp_len = int(np.frombuffer(mv[pos + 9 : pos + 13], dtype="<u4")[0])
+        width = mv[pos]
+        if width not in (1, 2, 4, 8):
+            raise ValueError(f"ZSTD_BT width {width} is not 1, 2, 4 or 8")
+        vmin = _i64(mv, pos + 1)
+        comp_len = _u32(mv, pos + 9)
+        end = pos + 13 + comp_len
+        if end > len(mv):
+            raise ValueError(
+                f"ZSTD_BT comp_len {comp_len} runs past the {len(mv)}-byte payload"
+            )
         raw = pa.Codec("zstd").decompress(
-            mv[pos + 13 : pos + 13 + comp_len],
-            decompressed_size=n * width,
-            asbytes=True,
+            mv[pos + 13 : end], decompressed_size=n * width, asbytes=True
         )
         planes = np.frombuffer(raw, dtype=np.uint8).reshape(width, n)
-        if width == 1:
-            u = planes[0]
-        else:
-            dt = {2: "<u2", 4: "<u4", 8: "<u8"}[width]
-            u = np.empty(n, dtype=dt)
-            bv = u.view(np.uint8).reshape(n, width)
-            for p_ in range(width):
-                bv[:, p_] = planes[p_]
-        # narrow fusion (r7): when the caller's schema says the column is
-        # 32-bit, add vmin at int32 width (wrapping == the int64 add's low
-        # 32 bits; true values fit by the round-trip contract) — halves
-        # the widen+add write traffic AND makes the downstream astype a
-        # no-op on the hot token path
-        tgt = np.int32 if prefer is np.int32 and width < 8 else _I64
-        if width == 8:
-            # uint64 -> int64 is a bit reinterpretation (wrapping); u is
-            # decode-owned so the in-place vmin add is safe
-            out = u.view(_I64) if _NATIVE_LE else u.astype("=u8").view(_I64)
-            if vmin:
-                with np.errstate(over="ignore"):
-                    np.add(out, vmin, out=out)
-        elif vmin:
-            # fused widen+add: one pass instead of astype + iadd
-            with np.errstate(over="ignore"):
-                # wrapping scalar narrow (uint32 columns may carry a vmin
-                # above int32max; the mod-2^32 add is still exact)
-                out = np.add(
-                    u, np.int64(vmin).astype(tgt), dtype=tgt, casting="unsafe"
-                )
-        else:
-            out = u.astype(tgt)
-        return out, pos + 13 + comp_len
+        # each run's FoR offsets are put together from the byte planes
+        # (plane p holds byte p of every little-endian value) in a
+        # width-sized scratch, then widened into out with vmin added
+        u = np.empty(min(n, _CHUNK) if width > 1 else 0, dtype=f"<u{width}")
+        for lo in range(0, n, _CHUNK):
+            hi = min(lo + _CHUNK, n)
+            if width == 1:
+                run = planes[0, lo:hi]
+            else:
+                run = u[: hi - lo]
+                bv = run.view(np.uint8).reshape(hi - lo, width)
+                for p_ in range(width):
+                    bv[:, p_] = planes[p_, lo:hi]
+            _add_base(out[lo:hi], run, vmin)
+        return end
     raise ValueError(f"unknown int codec {codec}")
 
 
@@ -1358,71 +1422,68 @@ def _string_dict_split(lengths, concat, n, arrow_array):
     return u_len, b"".join(uniq_list), idx
 
 
-def decode_strings(codec: int, buf, n: int, pos: int = 0):
-    """Inverse of :func:`encode_strings` → ``(lengths, concat_bytes, next_pos)``."""
-    mv = memoryview(buf)
+def decode_strings(codec: int, buf, n: int, pos: int = 0, dtype=_I64):
+    """Inverse of :func:`encode_strings` → ``(lengths, concat, next_pos)``:
+    the lengths as ``dtype`` (int64 by default, int32 for a string
+    column's 32-bit offsets) and the concatenated bytes as a bytes-like
+    object."""
+    mv = memoryview(buf).cast("B")
     if codec == StrCodec.ZEBRA:
-        return unpack_strings(mv, n, pos)
+        return unpack_strings(mv, n, pos, dtype)
     if codec == StrCodec.DICT:
-        n_dict = int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
-        u_len, u_concat, p = unpack_strings(mv, n_dict, pos + 4)
-        icodec = mv[p]
-        idx, p = decode_ints(icodec, mv, n, p + 1)
-        offs = np.concatenate(([0], np.cumsum(u_len)))
-        # gather: lengths per row + concatenated bytes via vectorized copy
-        lengths = u_len[idx]
-        ubytes = np.frombuffer(u_concat, dtype=np.uint8)
-        if len(lengths) and lengths.sum() > 0:
-            src = np.repeat(offs[idx], lengths) + _concat_ranges(lengths)
-            concat = ubytes[src].tobytes()
-        else:
-            concat = b""
-        return lengths, concat, p
+        return _dict_strings(mv, n, pos, dtype)
+    if codec not in StrCodec.NAMES:
+        raise ValueError(f"unknown string codec {codec}")
+    lcodec = mv[pos]
+    lp_len = _u32(mv, pos + 1)
+    lengths, p = decode_ints(lcodec, mv, n, pos + 5, dtype)
+    name = StrCodec.NAMES[codec].upper()
+    if p != pos + 5 + lp_len:
+        raise ValueError(f"{name} length-section size mismatch")
+    expected = int(lengths.sum())
     if codec == StrCodec.FSST:
-        lcodec = mv[pos]
-        lp_len = int(np.frombuffer(mv[pos + 1 : pos + 5], dtype="<u4")[0])
-        lengths, p = decode_ints(lcodec, mv, n, pos + 5)
-        if p != pos + 5 + lp_len:
-            raise ValueError("FSST length-section size mismatch")
         concat, p = _fsst.decompress(mv, p)
-        if int(lengths.sum()) != len(concat):
-            raise ValueError("FSST lengths do not sum to byte count")
-        return lengths, concat, p
-    if codec == StrCodec.FSST_Z:
-        lcodec = mv[pos]
-        lp_len = int(np.frombuffer(mv[pos + 1 : pos + 5], dtype="<u4")[0])
-        lengths, p = decode_ints(lcodec, mv, n, pos + 5)
-        if p != pos + 5 + lp_len:
-            raise ValueError("FSST_Z length-section size mismatch")
-        raw_len = int(np.frombuffer(mv[p : p + 4], dtype="<u4")[0])
-        comp_len = int(np.frombuffer(mv[p + 4 : p + 8], dtype="<u4")[0])
-        fs = _gp_decompress(
-            mv[p + 8 : p + 8 + comp_len], StrCodec.ZSTD, raw_len
-        )
+    elif codec == StrCodec.FSST_Z:
+        raw_len, comp_len = _u32(mv, p), _u32(mv, p + 4)
+        fs = _gp_decompress(mv[p + 8 : p + 8 + comp_len], StrCodec.ZSTD, raw_len)
         concat, used = _fsst.decompress(memoryview(fs), 0)
         if used != raw_len:
             raise ValueError("FSST_Z inner section size mismatch")
-        if int(lengths.sum()) != len(concat):
-            raise ValueError("FSST_Z lengths do not sum to byte count")
-        return lengths, concat, p + 8 + comp_len
-    if codec in (StrCodec.ZLIB, StrCodec.ZSTD):
-        name = StrCodec.NAMES[codec].upper()
-        lcodec = mv[pos]
-        lp_len = int(np.frombuffer(mv[pos + 1 : pos + 5], dtype="<u4")[0])
-        lengths, p = decode_ints(lcodec, mv, n, pos + 5)
-        if p != pos + 5 + lp_len:
-            raise ValueError(f"{name} length-section size mismatch")
-        comp_len = int(np.frombuffer(mv[p : p + 4], dtype="<u4")[0])
-        expected = int(lengths.sum())
+        p += 8 + comp_len
+    elif codec in (StrCodec.ZLIB, StrCodec.ZSTD):
+        comp_len = _u32(mv, p)
         concat = _gp_decompress(mv[p + 4 : p + 4 + comp_len], codec, expected)
-        if expected != len(concat):
-            raise ValueError(f"{name} lengths do not sum to byte count")
-        return lengths, concat, p + 4 + comp_len
-    raise ValueError(f"unknown string codec {codec}")
+        p += 4 + comp_len
+    if expected != len(concat):
+        raise ValueError(f"{name} lengths do not sum to byte count")
+    return lengths, concat, p
 
 
-def _concat_ranges(lengths: np.ndarray) -> np.ndarray:
-    """[3,2] -> [0,1,2,0,1]: per-row arange, vectorized."""
-    total = int(lengths.sum())
-    starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, lengths)
+def _dict_strings(mv, n: int, pos: int, dtype):
+    """String DICT decode, gathered by row: Arrow's ``take`` copies each
+    row's string from the dictionary, so the peak stays near the output
+    (a per-byte index would cost 8 bytes a byte)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n_dict = _count(mv, pos, "DICT n_dict", n)
+    u_len, u_concat, p = unpack_strings(mv, n_dict, pos + 4, dtype)
+    idt = np.int32 if n_dict < 1 << 31 else _I64
+    idx, p = decode_ints(mv[p], mv, n, p + 1, idt)
+    lengths = u_len[idx]
+    u_offsets = np.zeros(n_dict + 1, dtype=_I64)
+    np.cumsum(u_len, out=u_offsets[1:])
+    uniq = pa.Array.from_buffers(
+        pa.large_binary(),
+        n_dict,
+        [None, pa.py_buffer(u_offsets), pa.py_buffer(u_concat)],
+        null_count=0,
+    )
+    rows = pc.take(uniq, from_numpy(idx, pa.from_numpy_dtype(idt)))
+    del idx
+    ends = np_offsets(rows)
+    data = rows.buffers()[2]
+    concat = (
+        memoryview(data).cast("B")[ends[0] : ends[-1]] if data is not None else b""
+    )
+    return lengths, concat, p

@@ -59,6 +59,7 @@ __all__ = [
     "pack_from_plan",
     "pack_int_array",
     "unpack_int_array",
+    "unpack_into",
     "packed_size",
     "INT_HEADER_BYTES",
 ]
@@ -270,15 +271,17 @@ def _bp64_pack_group(vals: np.ndarray, w: int) -> np.ndarray:
 
 
 def _bp64_unpack_group(words: np.ndarray, w: int) -> np.ndarray:
-    """Inverse of :func:`_bp64_pack_group`: (m, w) words -> (m, 64) values."""
+    """Inverse of :func:`_bp64_pack_group`: (m, w) words -> (m, 64) values,
+    uint64 or, at the byte-aligned widths 8, 16 and 32, the unsigned dtype
+    of that width (a view of ``words``; callers widen as they store)."""
     m = words.shape[0]
     if w == 64:
         return np.ascontiguousarray(words)
     if w in (8, 16, 32) and _NATIVE_LE:
-        # byte-aligned inverse of the astype/view pack path: reinterpret
-        # the word bytes as the values directly, widen once to uint64
+        # byte-aligned inverse of the astype/view pack path: the word
+        # bytes are the values
         dt = {8: np.uint8, 16: np.uint16, 32: np.uint32}[w]
-        return np.ascontiguousarray(words).view(dt).astype(_U64).reshape(m, 64)
+        return np.ascontiguousarray(words).view(dt).reshape(m, 64)
     if w >= 16 and 64 % w == 0:
         # inverse binary doubling: split each element into (low, high)
         # halves until back at width w; only the low half needs masking
@@ -363,13 +366,21 @@ def pack_int_array(values: np.ndarray) -> bytes:
     return pack_from_plan(plan_int_array(values))
 
 
-def unpack_int_array(buf: bytes | memoryview, n_elems: int, pos: int = 0):
-    """Decode ``n_elems`` int64s from ``buf`` at ``pos``.
+# 64-value groups a decode kernel unpacks per step: its scratch stays at
+# 4,096 x 64 x 8 B = 2 MiB however long the section is
+CHUNK_GROUPS = 4096
 
-    Returns ``(values, next_pos)``.  Mirrors zebra_unpack_array
-    (zebra_unpack.c:44-97) including the buffer-size validation.
-    """
-    mv = memoryview(buf)
+
+def _int_array_chunks(mv: memoryview, n_elems: int, pos: int, out=None):
+    """Validate the int_array at ``pos`` and return ``(next_pos, chunks)``.
+
+    ``chunks`` yields ``(lo, hi, values)`` for consecutive runs of up to
+    ``CHUNK_GROUPS * 64`` values (each ``lo`` a multiple of that, the
+    remainder in the last run): ``values`` is an int64 array, valid
+    until the next step.  With a 64-bit ``out`` it is ``out[lo:hi]``,
+    so the values land in place; otherwise it is one reused scratch.
+    Mirrors zebra_unpack_array (zebra_unpack.c:44-97) including the
+    buffer-size validation."""
     if len(mv) < pos + INT_HEADER_BYTES:
         raise ValueError(
             f"int_array truncated: need {pos + INT_HEADER_BYTES} header bytes, "
@@ -377,49 +388,95 @@ def unpack_int_array(buf: bytes | memoryview, n_elems: int, pos: int = 0):
         )
     size = int(np.frombuffer(mv[pos : pos + 4], dtype="<u4")[0])
     offset = int(np.frombuffer(mv[pos + 4 : pos + 12], dtype="<i8")[0])
-    if len(mv) < pos + INT_HEADER_BYTES + size:
+    body_at = pos + INT_HEADER_BYTES
+    if len(mv) < body_at + size:
         raise ValueError(
             f"int_array truncated: header promises {size} body bytes at "
-            f"{pos + INT_HEADER_BYTES}, buffer has {len(mv)}"
+            f"{body_at}, buffer has {len(mv)}"
         )
-    body = np.frombuffer(mv[pos + 12 : pos + 12 + size], dtype=np.uint8)
-
     n_parts, n_rem = divmod(n_elems, 64)
-    nbits = body[:n_parts].astype(np.int64)
-    parts_total = int(nbits.sum()) * 8
-    expected = n_parts + parts_total + n_rem * 8
+    if n_parts > size:
+        raise ValueError(
+            f"int_array size mismatch: {n_elems} values need {n_parts} width "
+            f"bytes, header says {size}"
+        )
+    nbits = np.frombuffer(mv[body_at : body_at + n_parts], dtype=np.uint8)
+    if n_parts and int(nbits.max()) > 64:
+        raise ValueError(f"int_array chunk width {int(nbits.max())} exceeds 64")
+    word_at = np.zeros(n_parts + 1, dtype=np.int64)
+    np.cumsum(nbits, dtype=np.int64, out=word_at[1:])
+    expected = n_parts + int(word_at[-1]) * 8 + n_rem * 8
     if expected != size:
         raise ValueError(
             f"int_array size mismatch: header says {size}, layout needs {expected}"
         )
+    parts_at = body_at + n_parts
+    if out is None or out.itemsize != 8:
+        out = None
+        scratch = np.empty(min(n_elems, CHUNK_GROUPS * 64 + 63), dtype=_U64)
+        neg = np.empty_like(scratch)
+    else:
+        neg = np.empty(min(n_elems, CHUNK_GROUPS * 64 + 63), dtype=_U64)
+    base = _U64(offset & 0xFFFFFFFFFFFFFFFF)
 
-    out_u = np.empty(n_elems, dtype=_U64)
-    if n_parts:
-        parts = body[n_parts : n_parts + parts_total]
-        chunk_out = out_u[: n_parts * 64].reshape(n_parts, 64)
-        # every chunk is a whole number of 8-byte words, so gather at WORD
-        # granularity over one aligned copy — 8x fewer fancy-index entries
-        # than the old per-byte gather, one copy instead of one per width
-        parts64 = np.frombuffer(parts.tobytes(), dtype="<u8").astype(
-            _U64, copy=False
-        )
-        word_offsets = np.concatenate(([0], np.cumsum(nbits[:-1])))
-        for w in np.unique(nbits):
-            w = int(w)
-            idx = np.nonzero(nbits == w)[0]
-            if w == 0:
-                chunk_out[idx] = 0
-                continue
-            if len(idx) == n_parts:
-                words = parts64.reshape(n_parts, w)
+    def chunks():
+        for g0 in range(0, max(n_parts, 1), CHUNK_GROUPS):
+            g1 = min(g0 + CHUNK_GROUPS, n_parts)
+            lo, hi = g0 * 64, (g1 * 64 if g1 < n_parts else n_elems)
+            u = (scratch[: hi - lo] if out is None else out[lo:hi].view(_U64))
+            w0, w1 = int(word_at[g0]), int(word_at[g1])
+            words = np.frombuffer(
+                mv, dtype="<u8", count=w1 - w0, offset=parts_at + w0 * 8
+            ).astype(_U64)  # aligned copy of the chunk's packed words
+            groups = u[: (g1 - g0) * 64].reshape(g1 - g0, 64)
+            nb = nbits[g0:g1]
+            if len(nb) and nb.min() == nb.max():
+                w = int(nb[0])
+                groups[:] = _bp64_unpack_group(words.reshape(g1 - g0, w), w) if w else 0
             else:
-                wsrc = word_offsets[idx][:, None] + np.arange(w, dtype=np.int64)[None, :]
-                words = parts64[wsrc]
-            chunk_out[idx] = _bp64_unpack_group(words, w)
-    if n_rem:
-        rem = body[n_parts + parts_total :]
-        out_u[n_parts * 64 :] = rem.copy().view("<u8").astype(_U64, copy=False)
+                for w in np.unique(nb):
+                    w = int(w)
+                    idx = np.flatnonzero(nb == w)
+                    if w == 0:
+                        groups[idx] = 0
+                        continue
+                    src = (word_at[g0 + idx] - w0)[:, None] + np.arange(w)
+                    groups[idx] = _bp64_unpack_group(words[src], w)
+            if hi == n_elems and n_rem:
+                at = parts_at + int(word_at[-1]) * 8
+                u[hi - lo - n_rem :] = np.frombuffer(
+                    mv, dtype="<u8", count=n_rem, offset=at
+                )
+            # unzigzag (n >> 1) ^ -(n & 1), then add the frame offset,
+            # wrapping in uint64 as the C code does in int64
+            t = neg[: hi - lo]
+            np.bitwise_and(u, _U64(1), out=t)
+            np.negative(t, out=t)
+            np.right_shift(u, _U64(1), out=u)
+            np.bitwise_xor(u, t, out=u)
+            np.add(u, base, out=u)
+            yield lo, hi, u.view(_I64)
 
-    with np.errstate(over="ignore"):
-        values = unzigzag64(out_u) + _I64(offset)
-    return values, pos + INT_HEADER_BYTES + size
+    return body_at + size, chunks()
+
+
+def unpack_int_array(
+    buf: bytes | memoryview, n_elems: int, pos: int = 0, dtype=_I64
+):
+    """Decode ``n_elems`` values from ``buf`` at ``pos``.
+
+    Returns ``(values, next_pos)``: the int64 values, or with a narrower
+    integer ``dtype`` their low bits (the int64 result's ``astype``),
+    unpacked ``CHUNK_GROUPS`` groups at a time."""
+    out = np.empty(n_elems, dtype=dtype)
+    return out, unpack_into(memoryview(buf), pos, out)
+
+
+def unpack_into(mv: memoryview, pos: int, out: np.ndarray) -> int:
+    """Decode ``len(out)`` values at ``pos`` into ``out`` (their low bits
+    at its width); returns the next position."""
+    end, chunks = _int_array_chunks(mv, len(out), pos, out)
+    for lo, hi, v in chunks:
+        if out.itemsize != 8:
+            np.copyto(out[lo:hi], v, casting="unsafe")
+    return end

@@ -220,14 +220,14 @@ def _stored_source(
         if url.scheme not in ("", "file"):
             return None
         files.append(unquote(url.path))
-    return [(f, pq.read_metadata(f, memory_map=True)) for f in sorted(files)]
+    return [(f, pq.read_metadata(f)) for f in sorted(files)]
 
 
 def _stored_seed(stored: list) -> tuple[str, bytes] | None:
     """``(schema_id, schema bytes)`` of the first schema-bearing row of the
     ``stored`` files, or None when no row carries schema bytes."""
     for f, md in stored:
-        with pq.ParquetFile(f, memory_map=True, metadata=md) as pf:
+        with pq.ParquetFile(f, metadata=md, buffer_size=_READ_BUFFER) as pf:
             for rb in pf.iter_batches(batch_size=64, columns=["schema_id", "schema"]):
                 raws = rb.column("schema")
                 if raws.null_count < rb.num_rows:
@@ -369,6 +369,7 @@ def _bloom_mask(rb: pa.RecordBatch, values: list) -> pa.Array:
 # blocks is read one block row a batch, one of small blocks many rows a
 # batch (pyarrow's reader costs ~0.2 ms a batch)
 _BATCH_BYTES = 1 << 20
+_READ_BUFFER = 1 << 20  # bytes a stored file is read through at a time
 
 
 def _rows_per_batch(meta: pq.RowGroupMetaData) -> int:
@@ -390,7 +391,9 @@ def _stored_batches(
     ``cols`` a task needs, about ``_BATCH_BYTES`` of payload a batch: a
     task never holds a row group's payload column."""
     for f, group in groupby(items, key=lambda item: item[0]):
-        with pq.ParquetFile(f, memory_map=True) as pf:
+        # a buffered stream, not a memory map: a mapped file's touched
+        # pages stay resident in the task until the file is closed
+        with pq.ParquetFile(f, buffer_size=_READ_BUFFER) as pf:
             present = set(pf.schema_arrow.names)
             for _, rg in group:
                 for rb in pf.iter_batches(

@@ -1075,6 +1075,8 @@ def _unpacked(words: np.ndarray, b: int, lo: int, hi: int) -> np.ndarray:
 
 
 def _rle_into(mv, pos: int, out: np.ndarray) -> int:
+    """RLE (``u32 n_runs | run values | run lengths``) into ``out``, the
+    runs expanded one chunk of rows at a time."""
     n = len(out)
     n_runs = _count(mv, pos, "RLE n_runs", n)
     rv, p = unpack_int_array(mv, n_runs, pos + 4, out.dtype)
@@ -1132,9 +1134,10 @@ def _decode_into(codec: int, mv, pos: int, out: np.ndarray) -> int:
         words = _packed_words(mv, pos + 13, n, b, "PFoR b")
         if b == 0:
             out.fill(_low_bits(vmin, out.dtype))
-        for lo in range(0, n if b else 0, _CHUNK):
-            hi = min(lo + _CHUNK, n)
-            _add_base(out[lo:hi], _unpacked(words, b, lo, hi), vmin)
+        else:
+            for lo in range(0, n, _CHUNK):
+                hi = min(lo + _CHUNK, n)
+                _add_base(out[lo:hi], _unpacked(words, b, lo, hi), vmin)
         p = pos + 13 + words.nbytes
         if n_exc:
             positions, p = unpack_int_array(mv, n_exc, p)
